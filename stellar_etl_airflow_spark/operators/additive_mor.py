@@ -30,8 +30,6 @@ aggregate marts (SURVEY §2.4) — same semantics, contention-free plan.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -216,126 +214,68 @@ def fold_additive(
     last: Exception | None = None
     for _ in range(max(1, max_refolds)):
         m = S.read_manifest(path, resolve=False)
-        base_v = int(m["version"])
         # pin the fold's read to the manifest version the rebase below
         # reasons about — folding "latest" would double-count any delta
         # that lands between this read and the publish
-        folded = read_additive(spark, path, version=base_v)
-        stage = os.path.abspath(
-            os.path.join(path, f"_stage-fold-{uuid.uuid4().hex[:8]}")
-        )
-        folded.write.mode("overwrite").parquet(stage)
-        try:
-            new_files = S.adopt_staged(stage, path)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+        folded = read_additive(spark, path, version=int(m["version"]))
         base_files = set(m["files"])
         refold = False
-        published = False
-        # everything from here to a successful publish runs under a
-        # staged-file guard (r12, VERDICT r11 ask #6): an UNEXPECTED
-        # exception (a corrupted stats shard, an interrupted bloom
-        # compute) must not leak this attempt's adopt-named files —
-        # they are referenced by no manifest, and without cleanup they
-        # sit as orphans until a vacuum ages them out
-        try:
-            sc = m.get("stats_cols") or None
-            bc = m.get("bloom_cols") or None
-            new_blooms = S.compute_blooms(spark, new_files, bc) if bc else None
-            for _try in range(50):  # publish/rebase loop: manifest reads only
-                nm = S.read_manifest(path, resolve=False)
-                extra: list[str] = []
-                if int(nm["version"]) != base_v:
-                    # Appends-only proof WITHOUT walking intervening
-                    # manifests (r11 probe finding: under saturating appends
-                    # the fold falls behind the vacuum retention window and
-                    # an ops walk hits already-pruned manifests — walking
-                    # also costs O(versions-behind) reads). Structural
-                    # argument instead: appends never REMOVE files and never
-                    # change table metadata, while every content/metadata-
-                    # changing op (fold, compact, overwrite, DDL, DV delete)
-                    # either drops a base file from the list or edits
-                    # metadata. So base-files-still-listed + metadata
-                    # unchanged  =>  everything since base_v was an append,
-                    # and (nm.files - base_files) are pure delta files.
-                    same_meta = (
-                        (nm.get("renames") or {}) == (m.get("renames") or {})
-                        and (nm.get("dropped_cols") or []) == (m.get("dropped_cols") or [])
-                        and (nm.get("constraints") or {}) == (m.get("constraints") or {})
-                        # dv sidecar paths churn per publish; counts are the
-                        # content signature
-                        and ((nm.get("dv") or {}).get("counts") or {})
-                        == ((m.get("dv") or {}).get("counts") or {})
-                        and bool(nm.get("mixed_schema")) == bool(m.get("mixed_schema"))
-                        and os.path.abspath(nm.get("base", path))
-                        == os.path.abspath(m.get("base", path))
-                        # stats/bloom re-pins are metadata too (ADVICE r11):
-                        # publishing with the base pins would silently revert
-                        # a concurrent re-pin (pruning metadata, not rows) —
-                        # and new_files' blooms were computed for the OLD
-                        # bloom_cols, so a rebase can't just adopt nm's pins.
-                        # Force a refold instead; re-pins are rare DDL.
-                        and (nm.get("stats_cols") or None) == (m.get("stats_cols") or None)
-                        and (nm.get("bloom_cols") or None) == (m.get("bloom_cols") or None)
-                    )
-                    if not (same_meta and base_files <= set(nm["files"])):
-                        refold = True  # content under the fold changed shape
-                        break
-                    extra = [f for f in nm["files"] if f not in base_files]
-                blooms = None
-                if bc:
-                    _, all_blooms = S.resolved_stats_blooms(nm)
-                    blooms = {f: b for f, b in all_blooms.items() if f in set(extra)}
-                    blooms.update(new_blooms or {})
-                try:
-                    v = S._publish(
-                        path,
-                        new_files + extra,
-                        # nm's ledger is a superset of m's: rebased-in deltas
-                        # keep their txn ids — folds must not reopen replay holes
-                        txns=nm.get("txns") or None,
-                        stats_cols=sc,
-                        bloom_cols=bc,
-                        blooms=blooms,
-                        constraints=nm.get("constraints") or None,
-                        # the folded frame was read through any active mapping, so
-                        # its files carry the LOGICAL names — the mapping is
-                        # materialized here, like compact_snapshot
-                        reset_mapping=True,
-                        expected_version=int(nm["version"]),
-                        op="fold",  # content-changing for merges, but append-safe:
-                        # appends never read, so an appender rebasing over a fold
-                        # stays correct (its delta file is disjoint and still sums)
-                    )
-                except S.ConcurrentWriteError as e:
-                    last = e
-                    continue  # re-read nm: pure-append losses rebase for free
-                published = True
-                # row count from the just-written files (footer metadata), not
-                # a second run of the aggregation. A zero-row table stages no
-                # part files — guard the empty list (ADVICE r11) or a
-                # successful fold raises AFTER publishing its manifest.
-                n = (
-                    spark.read.parquet(*(new_files + extra)).count()
-                    if (new_files or extra)
-                    else 0
-                )
-                return v, n
-        finally:
-            if not published:
-                # refold, rebase budget spent, or an unexpected raise:
-                # this attempt's staged files are referenced by no
-                # manifest — remove them instead of leaving orphans
-                for f in new_files:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-        if not refold:
-            raise S.ConcurrentWriteError(
-                f"fold of {path} lost 50 consecutive append-rebase publishes "
-                "— the table is under extreme write load; retry later"
+
+        def appends_only(nm: dict) -> bool:
+            """Appends-only proof WITHOUT walking intervening manifests
+            (r11 probe finding: under saturating appends the fold falls
+            behind the vacuum retention window and an ops walk hits
+            already-pruned manifests — walking also costs O(versions-
+            behind) reads). Structural argument instead: appends never
+            REMOVE files and never change table metadata, while every
+            content/metadata-changing op (fold, compact, overwrite, DDL,
+            DV delete) either drops a base file from the list or edits
+            metadata. So base-files-still-listed + metadata unchanged =>
+            everything since the base was an append, and the files the
+            rebase carries are pure delta files."""
+            nonlocal refold
+            same_meta = (
+                (nm.get("renames") or {}) == (m.get("renames") or {})
+                and (nm.get("dropped_cols") or []) == (m.get("dropped_cols") or [])
+                and (nm.get("constraints") or {}) == (m.get("constraints") or {})
+                # dv sidecar paths churn per publish; counts are the
+                # content signature
+                and ((nm.get("dv") or {}).get("counts") or {})
+                == ((m.get("dv") or {}).get("counts") or {})
+                and bool(nm.get("mixed_schema")) == bool(m.get("mixed_schema"))
+                and os.path.abspath(nm.get("base", path))
+                == os.path.abspath(m.get("base", path))
+                # stats/bloom re-pins are metadata too (ADVICE r11):
+                # publishing with the base pins would silently revert a
+                # concurrent re-pin — and the folded files' blooms were
+                # computed for the OLD bloom_cols. Re-pins are rare DDL.
+                and (nm.get("stats_cols") or None) == (m.get("stats_cols") or None)
+                and (nm.get("bloom_cols") or None) == (m.get("bloom_cols") or None)
             )
+            refold = not (same_meta and base_files <= set(nm["files"]))
+            return not refold
+
+        with S.Txn(path, m) as t:
+            # the folded frame was read through any active mapping, so
+            # its files carry the LOGICAL names: the mapping materializes
+            t.reset()
+            t.remove(base_files)
+            t.write(lambda stage: folded.write.mode("overwrite").parquet(stage), "fold-", spark)
+            try:
+                # "fold" is content-changing for merges but append-safe:
+                # appends never read, so an appender rebasing over a fold
+                # stays correct (its delta file is disjoint and still sums)
+                v = t.commit("fold", rebase=appends_only, tries=50)
+            except S.ConcurrentWriteError as e:
+                if not refold:
+                    raise
+                last = e
+                continue
+        # row count from the committed files' footers, not a second run
+        # of the aggregation; a zero-row table stages no part files
+        # (ADVICE r11)
+        files = t.m["files"]
+        return v, spark.read.parquet(*files).count() if files else 0
     raise S.ConcurrentWriteError(
         f"fold of {path} was invalidated by non-append commits {max_refolds} "
         "times; the pile is still correct — retry on the next maintenance "

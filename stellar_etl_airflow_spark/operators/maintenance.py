@@ -52,7 +52,11 @@ def compact_table(
     """Compact every leaf partition directory of ``path`` down to
     ``ceil(bytes / target_file_mb)`` files. Leaves with fewer than
     ``min_files`` files are left untouched. Returns
-    ``{leaf: (files_before, files_after)}`` for the rewritten leaves."""
+    ``{leaf: (files_before, files_after)}`` for the rewritten leaves.
+
+    Never point this at a manifest-snapshot table: an in-place rewrite
+    corrupts every published manifest. ``snapshots.compact_snapshot`` is
+    the OPTIMIZE for those."""
     results: dict[str, tuple[int, int]] = {}
     target = target_file_mb * 1024 * 1024
     for leaf in _leaf_dirs(path):
@@ -65,68 +69,4 @@ def compact_table(
             df = df.sortWithinPartitions(*sort_cols)
         safe_overwrite(spark, df, leaf)
         results[leaf] = (n_files, _dir_stats(leaf)[0])
-    return results
-
-
-def optimize_versioned(
-    spark: SparkSession,
-    path: str,
-    min_files: int = 2,
-    sort_cols: tuple[str, ...] = (),
-) -> dict[str, tuple[int, int]]:
-    """OPTIMIZE for manifest-snapshot tables (the ones `apply_changes` /
-    `merge_upsert_versioned` maintain): rewrite every bucket whose CURRENT
-    manifest lists >= ``min_files`` files into one file, and publish a new
-    manifest — never touching old files, so snapshot isolation and time
-    travel survive compaction exactly like a merge (Delta's OPTIMIZE
-    contract; expired files are reclaimed later by ``vacuum``).
-
-    Directory-level ``compact_table`` must NOT be used on these tables:
-    it rewrites files in place, which would corrupt every previously
-    published manifest. At 100 TB this operator is what keeps per-bucket
-    file counts O(1) as 10-minute merge batches accumulate.
-
-    Returns ``{bucket_dir: (files_before, files_after)}``.
-    """
-    import uuid as _uuid
-
-    from ..sinks import snapshots as S
-
-    m = S.read_manifest(path)
-    base = m.get("base", path)
-    groups: dict[str, list[str]] = {}
-    for f in m["files"]:
-        groups.setdefault(os.path.dirname(f), []).append(f)
-
-    keep: list[str] = []
-    new_files: list[str] = []
-    results: dict[str, tuple[int, int]] = {}
-    for d in sorted(groups):
-        files = sorted(groups[d])
-        if len(files) < min_files:
-            keep.extend(files)
-            continue
-        df = spark.read.option("basePath", base).parquet(*files).coalesce(1)
-        if sort_cols:
-            df = df.sortWithinPartitions(*sort_cols)
-        # partition columns came from the path; drop them before writing
-        # INTO the partition dir or they'd be duplicated in the data files
-        part_cols = [
-            seg.split("=", 1)[0]
-            for seg in os.path.relpath(d, base).split(os.sep)
-            if "=" in seg
-        ]
-        df = df.drop(*part_cols)
-        stage = os.path.join(d, f"_stage-{_uuid.uuid4().hex[:8]}")
-        df.write.parquet(stage)
-        for f in sorted(os.listdir(stage)):
-            if f.endswith(".parquet"):
-                dst = os.path.join(d, f"part-{_uuid.uuid4().hex}.parquet")
-                os.replace(os.path.join(stage, f), dst)
-                new_files.append(dst)
-        import shutil as _shutil
-
-        _shutil.rmtree(stage, ignore_errors=True)
-        results[d] = (len(files), 1)
-    S._publish(path, keep + new_files, base=base)
     return results

@@ -360,14 +360,13 @@ MERGE_STATS = {"rebases": 0, "recomputes": 0}
 _MERGE_STATS_LOCK = threading.Lock()
 
 
-def _rebase_compatible(
-    path: str, from_version: int, new_m: dict, touched_set: set
-) -> bool:
-    """True when EVERY commit in (from_version, new_m.version] preserved
-    the content of ``touched_set``'s buckets, so a merge computed against
-    ``from_version`` may re-list its files onto ``new_m`` without
-    recomputing (Delta's ConflictChecker: logical conflict detection by
-    operation type + file-level disjointness):
+def _rebase_compatible(path: str, since: list[dict] | None, touched_set: set) -> bool:
+    """True when EVERY intervening commit (``since``, from
+    :meth:`snapshots.Txn.since`) preserved the content of
+    ``touched_set``'s buckets, so a merge computed before them may
+    re-list its files onto the newest without recomputing (Delta's
+    ConflictChecker: logical conflict detection by operation type +
+    file-level disjointness):
 
     - ``compact`` commits are content-preserving by contract;
     - ``merge`` commits qualify when their recorded buckets are disjoint
@@ -377,19 +376,11 @@ def _rebase_compatible(
       from before op-recording existed — is conservatively
       content-changing.
     """
-    from ..sinks import snapshots as S
-
-    if os.path.abspath(new_m.get("base", path)) != os.path.abspath(path):
+    if since is None:
+        return False  # manifest gone (aggressive vacuum): recompute
+    if os.path.abspath(since[-1].get("base", path)) != os.path.abspath(path):
         return False
-    for v in range(from_version + 1, int(new_m["version"]) + 1):
-        try:
-            mv = (
-                new_m
-                if v == int(new_m["version"])
-                else S.read_manifest(path, v, resolve=False)
-            )
-        except Exception:
-            return False  # manifest gone (aggressive vacuum): recompute
+    for mv in since:
         op = mv.get("op")
         if op == "compact":
             continue
@@ -420,10 +411,9 @@ def _merge_versioned_core(
     kept/rewritten bucket split against the NEW version, so interleaved
     merges of different buckets all land. Safe to re-run wholesale: the
     txn ledger makes a replayed batch exactly-once, and a lost-race
-    attempt leaves only orphan staged files (vacuum's orphan-retention
-    reclaims them). Every CAS round some writer publishes (global
-    progress), so ``retries`` bounds the writer COUNT a table tolerates,
-    not time — 10 matches Delta's default attempt budget; a short
+    attempt deletes its staged files. Every CAS round some writer
+    publishes (global progress), so ``retries`` bounds the writer COUNT a
+    table tolerates, not time — 10 matches Delta's default attempt budget; a short
     linear backoff breaks lockstep re-collisions. ``retries=0`` restores
     raise-on-first-conflict."""
     import time as _time
@@ -490,13 +480,14 @@ def _merge_versioned_once(
     # carry resolves shards lazily below only when bloom_cols is pinned
     # (review r8 — eager resolution parsed every stats sidecar per batch)
     m = S.read_manifest(path, resolve=False)
+    t = S.Txn(path, m)
     # replay check FIRST (review r9): a redelivered batch whose txn_id is
     # already in the ledger must stay an exactly-once no-op even on a
     # since-mapped table — the recorded version predates the mapping, so
     # returning it is correct and touches nothing.
-    txns = dict(m.get("txns") or {})
-    if txn_id is not None and txn_id in txns:
-        return int(txns[txn_id]), []
+    replay = t.stamp(txn_id)
+    if replay is not None:
+        return replay, []
     if m.get("renames") or m.get("dropped_cols"):
         # the merge write path appends files carrying the frame's own
         # (logical) column names; under an active column mapping that
@@ -527,26 +518,24 @@ def _merge_versioned_once(
         return None  # flat (pre-bucketing) file: always rewritten
 
     touched_set = set(touched)
-    if os.path.abspath(m.get("base", path)) != os.path.abspath(path):
-        # merging into a zero-copy clone: its files live under the SOURCE's
-        # partition root, and one manifest has one discovery base — localize
-        # the clone completely on its first write (full CoW, source untouched)
-        keep, rewrite = [], list(m["files"])
-    else:
-        bmap = {f: bucket_of(f) for f in m["files"]}  # one relpath per file
-        keep = [
-            f for f in m["files"] if bmap[f] not in touched_set and bmap[f] is not None
-        ]
-        keep_set_ = set(keep)
-        rewrite = [f for f in m["files"] if f not in keep_set_]
+    # merging into a zero-copy clone: its files live under the SOURCE's
+    # partition root, and one manifest has one discovery base — localize
+    # the clone completely on its first write (full CoW, source untouched)
+    localized = os.path.abspath(m.get("base", path)) != os.path.abspath(path)
+
+    def rewritten(f: str) -> bool:
+        return localized or (b := bucket_of(f)) is None or b in touched_set
+
+    keep, rewrite = [], []
+    for f in m["files"]:
+        (rewrite if rewritten(f) else keep).append(f)
+    had_flat = not localized and any(bucket_of(f) is None for f in rewrite)
     # merge-on-read deletes on rewritten files must be MATERIALIZED into
     # the rewrite (review r8): a raw read would resurrect masked rows,
-    # and _publish's DV inheritance drops vectors for files leaving the
-    # list on exactly the assumption that the rewrite applied them.
-    # Keep-files' vectors carry (still listed).
-    dv_all = S.read_dv(m)
+    # and a commit drops the vectors of files leaving the list on
+    # exactly the assumption that the rewrite applied them.
     rewrite_set = set(rewrite)
-    dv_rw = {f: ids for f, ids in dv_all.items() if f in rewrite_set}
+    dv_rw = {f: ids for f, ids in S.read_dv(m).items() if f in rewrite_set}
     empty_drift = False
     if rewrite:
         # A bootstrap snapshot may mix partition-dir layouts (flat root
@@ -633,152 +622,72 @@ def _merge_versioned_once(
                 empty_drift = True
         tgt = empty_df(spark, ch.schema)
     merged = combine(tgt, ch)
-
-    stage = os.path.abspath(os.path.join(path, f"_stage-{uuid.uuid4().hex[:8]}"))
-    new_files: list[str] = []
-    try:
-        merged.write.partitionBy(BUCKET_COL).parquet(stage)
-        new_files.extend(S.adopt_staged(stage, path))
-    finally:
-        _cached.unpersist()
-        shutil.rmtree(stage, ignore_errors=True)
-    # once evolved, later versions keep mixing schemas (old keep-files
-    # persist) until a full rewrite — propagate the flag forward
-    mixed_base = evolve or empty_drift
-    # advisory manifest stats: pinned per-table via props ("stats_cols");
-    # untouched buckets' files keep their recorded stats (incremental in
-    # _publish), only the newly written files read footers
+    # stats/bloom pins come from props, falling back to the manifest's
+    # (ADVICE r7, same rule as compact_snapshot): a table bootstrapped
+    # via overwrite_versioned(stats_cols=...) has manifest pins but no
+    # props file. Untouched buckets' files keep their recorded values;
+    # only the newly written files read footers and get blooms.
     props = load_table_props(path) or {}
-    # fall back to the previous manifest's pins (ADVICE r7, same rule as
-    # compact_snapshot): a table bootstrapped via overwrite_versioned(
-    # stats_cols=...) has manifest pins but no props file — sourcing only
-    # props would publish stats_cols=[] and silently drop all per-file
-    # stats (pruning stops working) after the first merge
-    stats_cols = props.get("stats_cols") or m.get("stats_cols") or None
-    # blooms are incremental like stats: untouched buckets' files keep
-    # their recorded filters; only the newly written files get one
-    # distributed column-pruned pass per bloom column
-    bloom_cols = props.get("bloom_cols") or m.get("bloom_cols") or None
-    new_blooms = S.compute_blooms(spark, new_files, bloom_cols) if bloom_cols else None
-
-    # Publish with conflict RESOLUTION (r10, Delta's ConflictChecker):
-    # the computed bucket files stay VALID across a lost CAS whenever
-    # every intervening commit preserved our touched buckets' content —
-    # a compaction (content-preserving by contract) or a merge on
-    # DISJOINT buckets. Then the rebase is a manifest-level re-list
-    # (carried files re-derived from the NEW manifest, our files
-    # re-attached), not a recompute — without this, a fast OPTIMIZE
-    # cadence STARVES mergers (the storm probe measured 6/6 writers
-    # exhausting a 30-attempt budget against a 0.2 s compaction loop,
-    # because a blind retry re-runs seconds of merge compute per loss
-    # while the compactor publishes in ~1 s). Rebase is refused — full
-    # recompute via the outer wrapper — when this merge localized a
-    # clone (it rewrote ALL files) or absorbed flat pre-bucketing files
-    # (their rows span buckets beyond ``touched``), or when any
-    # intervening op is unknown/content-changing.
-    localized = os.path.abspath(m.get("base", path)) != os.path.abspath(path)
-    had_flat = (not localized) and any(b is None for b in bmap.values())
-    pub, keep_now = m, keep
-    # bounded: each rebase costs ~a manifest read, but an adversarial
-    # publish stream must not spin this loop forever — past the cap the
-    # loss escalates to the outer recompute wrapper like any other
-    for _rebase_round in range(64):
-        txns_pub = dict(pub.get("txns") or {})
-        if txn_id is not None:
-            if txn_id in txns_pub:
-                # a same-txn peer landed while we computed: our staged
-                # files are referenced by NO manifest — drop them and
-                # return the peer's version (exactly-once)
-                for f in new_files:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                return int(txns_pub[txn_id]), []
-            txns_pub[txn_id] = int(pub["version"]) + 1
-        blooms = None
-        if bloom_cols:
-            _keep = set(keep_now)
-            # manifests are read resolve=False; shard sidecars resolve
-            # here, on the one write path that needs the full dicts
-            _, all_blooms = S.resolved_stats_blooms(pub)
-            blooms = {f: b for f, b in all_blooms.items() if f in _keep}
-            blooms.update(new_blooms or {})
-        try:
-            version = S._publish(
-                path, sorted(keep_now) + new_files, base=path,
-                mixed_schema=mixed_base or bool(pub.get("mixed_schema")),
-                txns=txns_pub, stats_cols=stats_cols,
-                bloom_cols=bloom_cols, blooms=blooms,
-                # compare-and-swap (r7): the kept-bucket list was derived
-                # from ``pub`` — a concurrent interleaving would otherwise
-                # drop its buckets from this union
-                expected_version=int(pub["version"]),
-                op="merge",
-                op_info={"buckets": sorted(touched_set), "flat": had_flat},
-            )
-            return version, touched
-        except S.ConcurrentWriteError:
-            nm = S.read_manifest(path, resolve=False)
-            if (
-                localized
-                or had_flat
-                or not _rebase_compatible(path, int(pub["version"]), nm, touched_set)
-            ):
-                # content under our touched buckets may have changed: the
-                # computed files are stale. Drop them (referenced by no
-                # manifest) and let the outer wrapper recompute fresh.
-                for f in new_files:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                with _MERGE_STATS_LOCK:
-                    MERGE_STATS["recomputes"] += 1
-                raise
-            with _MERGE_STATS_LOCK:
-                MERGE_STATS["rebases"] += 1
-            # Row-loss guard (ADVICE r10): the keep list below EXCLUDES
-            # bucket-less files, which is only safe because
-            # _rebase_compatible admits no op that can introduce flat
-            # files (this branch already knows had_flat is False, so the
-            # version WE read had none either). Make that invariant loud:
-            # if a future _rebase_compatible extension admits an op that
-            # lands flat files, silently dropping them here would lose
-            # rows — recompute instead.
-            if any(bucket_of(f) is None for f in nm["files"]):
-                for f in new_files:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                with _MERGE_STATS_LOCK:
-                    MERGE_STATS["recomputes"] += 1
-                raise S.ConcurrentWriteError(
-                    f"rebase of {path} found flat (bucket-less) files in the "
-                    "intervening manifest — an op _rebase_compatible admitted "
-                    "introduced them; recomputing from fresh state instead of "
-                    "dropping them (row-loss guard)"
-                )
-            pub = nm
-            keep_now = [
-                f
-                for f in nm["files"]
-                if (b := bucket_of(f)) is not None and b not in touched_set
-            ]
-    # rebase cap exhausted: drop the staged files and escalate to the
-    # outer wrapper (counts as a recompute — the files are abandoned)
-    for f in new_files:
-        try:
-            os.remove(f)
-        except OSError:
-            pass
-    with _MERGE_STATS_LOCK:
-        MERGE_STATS["recomputes"] += 1
-    raise S.ConcurrentWriteError(
-        f"merge into {path} lost {64} consecutive publish races; retrying "
-        "from fresh state"
+    t.set(
+        base=path,
+        stats_cols=props.get("stats_cols") or m.get("stats_cols"),
+        bloom_cols=props.get("bloom_cols") or m.get("bloom_cols"),
     )
+    # once evolved, later versions keep mixing schemas (old keep-files
+    # persist) until a full rewrite
+    if evolve or empty_drift:
+        t.set(mixed_schema=True)
+    t.remove(rewritten)
+
+    # Conflict RESOLUTION (r10, Delta's ConflictChecker): the computed
+    # bucket files stay VALID across a lost CAS whenever every
+    # intervening commit preserved our touched buckets' content — then
+    # the rebase re-lists the carried files from the NEW manifest, no
+    # recompute. Without it a fast OPTIMIZE cadence STARVES mergers (the
+    # storm probe measured 6/6 writers exhausting a 30-attempt budget
+    # against a 0.2 s compaction loop). Refused — full recompute via
+    # the outer wrapper — when this merge localized a clone (it rewrote
+    # ALL files) or absorbed flat pre-bucketing files (their rows span
+    # buckets beyond ``touched``).
+    def may_rebase(nm: dict) -> bool:
+        if localized or had_flat or not _rebase_compatible(path, t.since(nm), touched_set):
+            return False
+        with _MERGE_STATS_LOCK:
+            MERGE_STATS["rebases"] += 1
+        # Row-loss guard (ADVICE r10): the carried list EXCLUDES
+        # bucket-less files, which is only safe because
+        # _rebase_compatible admits no op that can introduce them;
+        # should a future extension do so, recompute instead of
+        # silently dropping their rows.
+        if any(bucket_of(f) is None for f in nm["files"]):
+            raise S.ConcurrentWriteError(
+                f"rebase of {path} found flat (bucket-less) files in the "
+                "intervening manifest — an op _rebase_compatible admitted "
+                "introduced them; recomputing from fresh state instead of "
+                "dropping them (row-loss guard)"
+            )
+        return True
+
+    with t:
+        try:
+            t.write(lambda stage: merged.write.partitionBy(BUCKET_COL).parquet(stage), spark=spark)
+        finally:
+            _cached.unpersist()
+        try:
+            # bounded: each rebase costs ~a manifest read, and past the
+            # cap the loss escalates to the outer recompute wrapper
+            version = t.commit(
+                "merge",
+                {"buckets": sorted(touched_set), "flat": had_flat},
+                rebase=may_rebase,
+                tries=64,
+            )
+        except S.ConcurrentWriteError:
+            with _MERGE_STATS_LOCK:
+                MERGE_STATS["recomputes"] += 1
+            raise
+    # a same-txn peer landing mid-merge makes this a replay of its version
+    return version, touched if t.committed else []
 
 
 def _swap_dir(src: str, dst: str) -> None:

@@ -52,7 +52,7 @@ QUERIES.update(connectors.SPECS)
 # at sf0.01 in the r12 session, no driver row yet); then (c) the 48
 # entries whose latest green row is r10 (3-rounds-stale at r13 — the
 # bound), ordered so the ones backed by r13-touched code come first
-# (the snapshot/DS plane: _publish post-commit best-effort pointer,
+# (the snapshot/DS plane: the commit's post-commit best-effort pointer,
 # register() conf; then streaming sinks that publish through it). That
 # is 52 candidates for a ~50-entry window, so the LAST TWO r10-green
 # entries (t42/t44 — pure relational computations untouched by any r13
@@ -68,14 +68,14 @@ _FRONT = [
     "q69_sql_udf",
     "q70_sql_script",
     # (c) the 48 r10-green entries, r13-touched code first:
-    # snapshot/DS plane (register() conf + _publish commit-point fix)
+    # snapshot/DS plane (register() conf + commit-point fix)
     "q55_snapshot_pushdown",
     "q58_column_mapping",
     "q51_incremental_mart",
     "q56_scd2_from_cdf",
     "q57_table_profile",
     "q17_apply_changes",
-    # streaming plane (sinks publish through _publish; s14 folds)
+    # streaming plane (sinks publish through one commit; s14 folds)
     "s01_stream_tumbling",
     "s02_stream_dedup",
     "s03_stream_sessionize",

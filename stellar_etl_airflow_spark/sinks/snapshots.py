@@ -22,11 +22,11 @@ Protocol invariants:
   named files and a new manifest; it never deletes or rewrites files an
   older manifest references. Readers of any version are therefore never
   torn, even mid-write (snapshot isolation for free).
-- Manifest publication is atomic: manifests are written to a temp name
-  and ``os.replace``d into place, then ``_latest`` is swapped the same
-  way. A crash before the ``_latest`` swap leaves the table at the prior
-  version with some unreferenced files — re-running converges, and
-  ``vacuum`` collects the orphans.
+- Publication is one atomic commit per version (:class:`Txn`): the
+  manifest slot is claimed with an exclusive link, after which the
+  ``_latest`` pointer is a best-effort cache. A crash before the link
+  leaves the table at the prior version with some unreferenced files —
+  re-running converges, and ``vacuum`` collects the orphans.
 - A clone writes a manifest whose file list points into the SOURCE
   table's directory — no data moves. Writes to the clone add files under
   the clone's own directory; the shared source files stay immutable
@@ -111,17 +111,20 @@ def latest_version(path: str) -> int | None:
     newest manifest on disk keeps that crash recoverable (without it,
     every later publish recomputes the same claimed slot and fails
     forever: found by review of the optimistic-concurrency change)."""
-    pointer = None
-    try:
-        with open(os.path.join(_snap_dir(path), "_latest")) as fh:
-            pointer = int(fh.read().strip())
-    except (FileNotFoundError, ValueError):
-        pass
+    pointer = _pointer(path)
     disk = _versions_on_disk(path)
     newest = disk[-1] if disk else None
     if pointer is None:
         return newest
     return max(pointer, newest) if newest is not None else pointer
+
+
+def _pointer(path: str) -> int | None:
+    try:
+        with open(os.path.join(_snap_dir(path), "_latest")) as fh:
+            return int(fh.read().strip())
+    except (FileNotFoundError, ValueError):
+        return None
 
 
 def read_manifest(path: str, version: int | None = None, resolve: bool = True) -> dict:
@@ -413,7 +416,7 @@ def compute_blooms(
                     "STRING must match Python str() exactly)"
                 )
     # key results by the CALLER'S file strings: manifests may hold
-    # relative paths, and _publish filters blooms by membership in that
+    # relative paths, and Txn.commit keeps blooms by membership in that
     # list — abspath keys would silently drop every bloom (review r8)
     orig_by_abs = {os.path.abspath(f): f for f in files}
     out: dict[str, dict] = {}
@@ -433,152 +436,304 @@ def compute_blooms(
     return out
 
 
-def _publish(
-    path: str,
-    files: list[str],
-    base: str | None = None,
-    mixed_schema: bool = False,
-    txns: dict | None = None,
-    stats_cols=None,
-    stats: dict | None = None,
-    bloom_cols=None,
-    blooms: dict | None = None,
-    renames: dict | None = None,
-    dropped_cols=None,
-    reset_mapping: bool = False,
-    constraints: dict | None = None,
-    dv: dict | None = None,
-    expected_version: int | None = None,
-    op: str = "write",
-    op_info: dict | None = None,
-) -> int:
-    os.makedirs(_snap_dir(path), exist_ok=True)
-    version = (latest_version(path) or 0) + 1
-    # compare-and-swap for read-modify-write publishers: the caller
-    # computed its file list against ``expected_version``; if another
-    # writer published since, the derived list is stale — raise so the
-    # caller rebases (the exclusive manifest link below only guards the
-    # version SLOT, not the read window; both checks are needed)
-    if expected_version is not None and version != expected_version + 1:
-        raise ConcurrentWriteError(
-            f"table advanced to v{version - 1} while this writer worked "
-            f"from v{expected_version}; reload and retry"
-        )
-    # column mapping (rename/drop without rewrite, see rename_column) and
-    # CHECK constraints: INHERITED from the previous manifest by default
-    # so append-style publishers (merge, the Data Source writer) can't
-    # silently lose them; a full overwrite passes reset_mapping=True
-    # (its frame defines a fresh logical schema — constraints, which are
-    # written against logical names, reset with it), clone/restore/DDL
-    # pass explicit values.
-    if version > 1 and not reset_mapping:
-        prev_m = read_manifest(path, resolve=False)
-        if renames is None and dropped_cols is None:
-            renames = prev_m.get("renames") or None
-            dropped_cols = prev_m.get("dropped_cols") or None
-        if constraints is None:
-            constraints = prev_m.get("constraints") or None
-        if dv is None and prev_m.get("dv"):
-            # deletion vectors ride along for files still listed; a
-            # file leaving the list (rewritten/compacted) takes its DV
-            # with it — the rewrite already materialized the deletes
-            live = set(files)
-            dv = {f: ids for f, ids in read_dv(prev_m).items() if f in live} or None
-    # file-level column stats (Iceberg's manifest-stats idea): when
-    # ``stats_cols`` is set, every listed file carries {col: [min, max]}
-    # so readers can prune files from the MANIFEST alone — no footer
-    # opens at planning time. Incremental: files already in the previous
-    # manifest keep their recorded stats; only new files read footers.
-    # An explicit ``stats`` dict (clone) is carried verbatim.
-    if stats is None and stats_cols:
-        prev = (
-            resolved_stats_blooms(read_manifest(path, resolve=False))[0]
-            if version > 1
-            else {}
-        )
-        stats = {}
+class Txn:
+    """One commit to a snapshot table — the only code that links a
+    version manifest. Modeled on Delta's action log
+    (https://github.com/delta-io/delta/blob/master/PROTOCOL.md): a
+    transaction begins at a read version, adds and removes files and
+    metadata, and commits once.
+
+    - **Begin.** At the manifest the caller already holds (``m``), else
+      the latest one; a table with no versions begins empty at v0.
+    - **Carry-forward.** Everything the begin manifest records rides
+      into the next version unless the caller changes it: the applied-txn
+      ledger, stats/bloom pins and per-file values, column mapping, CHECK
+      constraints, deletion vectors, ``base`` and ``mixed_schema``.
+      Callers state only what they change: :meth:`add` the files they
+      wrote (with stats/blooms), :meth:`remove` files or a predicate
+      (their stats, blooms and DVs go with them), :meth:`set` or
+      :meth:`reset` metadata, :meth:`load` another manifest's content
+      (restore, clone), :meth:`stamp` a ``txn_id``. With ``stats_cols``
+      pinned, only listed files without recorded stats read footers.
+    - **CAS.** :meth:`commit` publishes begin+1 only while the table is
+      still at the begin version; the manifest slot is claimed with an
+      exclusive link, so a racer between the check and the link loses
+      too. Either loss raises :class:`ConcurrentWriteError`.
+    - **Commit point.** DV and stats-shard sidecars are written first,
+      uuid-suffixed so a losing racer never clobbers the winner's; the
+      exclusive manifest link IS the commit. The ``_latest`` pointer
+      after it is a best-effort cache (``latest_version`` heals from the
+      manifests on disk).
+    - **Rebase.** On a lost CAS, ``commit(rebase=rule)`` reads the
+      latest manifest and asks the caller's rule whether this txn still
+      holds on top of it (:meth:`since` reads the intervening commits):
+      append always rebases after re-running its guards;
+      ``compact_small_files`` only over appends; a merge when
+      ``_rebase_compatible``; a fold when its base files are still
+      listed under the same metadata. Yes re-applies this txn's adds,
+      removes and sets onto the new manifest and retries; no (or no
+      rule) re-raises. A ``txn_id`` the new ledger already records
+      returns that version instead.
+    - **Cleanup only before the commit point.** Leaving without a commit
+      — a raise, a refused rebase, a replay, the end of a ``with`` block
+      — deletes the files this txn added (never one the begin manifest
+      lists). Once the manifest is linked nothing is deleted, even if a
+      later step raises."""
+
+    def __init__(self, path: str, m: dict | None = None) -> None:
+        if m is None:
+            v = latest_version(path)
+            m = read_manifest(path, v, resolve=False) if v else None
+        self.path = path
+        self._begin(m or {})
+        self._added: dict[str, tuple] = {}  # file -> (stats, blooms)
+        self._removes: list = []
+        self._meta: dict = {}
+        self._footers: dict = {}
+        self._txn_id: str | None = None
+        self.committed = False
+
+    def _begin(self, m: dict) -> None:
+        self.m = m
+        self.version = int(m.get("version", 0))
+
+    def __enter__(self) -> "Txn":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        if not self.committed:
+            self.abort()
+
+    def get(self, key: str):
+        """The value this txn commits for a metadata field."""
+        return self._meta[key] if key in self._meta else self.m.get(key)
+
+    def add(self, files, stats=None, blooms=None, spark=None) -> None:
+        """List files this txn wrote under the table. ``stats``/``blooms``
+        map file -> value; with ``spark``, blooms are computed for the
+        pinned ``bloom_cols``. Re-adding a listed file replaces its
+        values."""
+        files = list(files)
         for f in files:
-            st = prev.get(f)
-            if st is None:
-                st = _file_stats(f, stats_cols)
+            self._added[f] = ((stats or {}).get(f), (blooms or {}).get(f))
+        bloom_cols = self.get("bloom_cols")
+        if spark is not None and bloom_cols and files:
+            for f, b in compute_blooms(spark, files, bloom_cols).items():
+                self._added[f] = (self._added[f][0], b)
+
+    def write(self, writer, tag: str = "", spark=None) -> None:
+        """Run ``writer(stage_dir)`` (a Spark parquet write), adopt its
+        output under the table (:func:`adopt_staged`) and :meth:`add` it.
+        ``_stage-`` dirs are invisible to ``_list_data_files``, so vacuum
+        and bootstrap never see in-flight files."""
+        stage = os.path.abspath(
+            os.path.join(self.path, f"_stage-{tag}{uuid.uuid4().hex[:8]}")
+        )
+        try:
+            writer(stage)
+            files = adopt_staged(stage, self.path)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        self.add(files, spark=spark)
+
+    def remove(self, files) -> None:
+        """Unlist files: an iterable, or a predicate over file paths
+        (re-evaluated against a rebased manifest)."""
+        self._removes.append(files if callable(files) else set(files).__contains__)
+
+    def set(self, **meta) -> None:
+        """Replace metadata fields; ``dv`` takes {file: row indices}."""
+        self._meta.update(meta)
+
+    def reset(self) -> None:
+        """Every file this txn writes carries the logical schema: the
+        column mapping is materialized, the schema unified, and partition
+        discovery roots at the table dir."""
+        self.set(base=self.path, mixed_schema=False, renames={}, dropped_cols=[])
+
+    def load(self, src: dict) -> None:
+        """Take another manifest's files, stats, blooms, DVs and metadata
+        (restore, clone). The ledger stays this table's: rolling data back
+        must not reopen exactly-once windows."""
+        self._begin({**src, "version": self.version, "txns": self.m.get("txns")})
+
+    def stamp(self, txn_id: str | None) -> int | None:
+        """Record ``txn_id`` in the ledger at commit. Returns the version
+        that already applied it — a replay, which writes nothing."""
+        self._txn_id = txn_id
+        return self._applied()
+
+    def _applied(self) -> int | None:
+        done = self.m.get("txns") or {}
+        return int(done[self._txn_id]) if self._txn_id in done else None
+
+    def since(self, nm: dict) -> list[dict] | None:
+        """The manifests committed after the begin version, through
+        ``nm``; None when one is gone (vacuumed) and cannot be judged."""
+        out = []
+        for v in range(self.version + 1, int(nm["version"])):
+            try:
+                out.append(read_manifest(self.path, v, resolve=False))
+            except (OSError, ValueError):
+                return None
+        return out + [nm]
+
+    def abort(self) -> None:
+        """Delete the files this txn added and never committed."""
+        listed = set(self.m.get("files") or [])
+        for f in self._added:
+            if f not in listed:
+                try:
+                    os.remove(f)
+                except OSError:
+                    pass
+        self._added.clear()
+
+    def commit(self, op: str, info: dict | None = None, rebase=None, tries: int = 20) -> int:
+        """Publish this txn as the next version, recording ``op``/``info``
+        (Delta's commitInfo; conflict rules read it). ``rebase(nm)`` is the
+        caller's lost-CAS rule; ``tries`` bounds the rounds. Returns the
+        committed version, or for a replayed ``txn_id`` the version that
+        applied it."""
+        try:
+            for _ in range(tries):
+                v = self._applied()
+                if v is not None:
+                    return v
+                try:
+                    return self._commit_once(op, info)
+                except ConcurrentWriteError:
+                    if rebase is None:
+                        raise
+                    nm = read_manifest(self.path, resolve=False)
+                    if not rebase(nm):
+                        raise
+                    self._begin(nm)
+            raise ConcurrentWriteError(
+                f"commit to {self.path} lost {tries} consecutive publish "
+                "races; the table is under heavy concurrent write load — retry later"
+            )
+        finally:
+            if not self.committed:
+                self.abort()
+
+    def _commit_once(self, op: str, info: dict | None) -> int:
+        os.makedirs(_snap_dir(self.path), exist_ok=True)
+        cur = latest_version(self.path) or 0
+        if cur != self.version:
+            raise ConcurrentWriteError(
+                f"table advanced to v{cur} while this writer worked from "
+                f"v{self.version}; reload and retry"
+            )
+        version = self.version + 1
+        manifest = self._manifest(version, op, info)
+        target, payload = _manifest_path(self.path, version), json.dumps(manifest)
+        try:
+            _atomic_write_exclusive(target, payload)
+        except ConcurrentWriteError:
+            raise
+        except BaseException:
+            # a failure after the link (tmp cleanup) leaves it committed
+            try:
+                with open(target) as fh:
+                    self.committed = fh.read() == payload
+            except OSError:
+                pass
+            raise
+        self.committed = True
+        self._begin(manifest)
+        # monotonic: a slower committer of an OLDER version never rolls
+        # the pointer back
+        try:
+            pointer = _pointer(self.path)
+            if pointer is None or version > pointer:
+                _atomic_write(os.path.join(_snap_dir(self.path), "_latest"), str(version))
+        except OSError:
+            pass
+        return version
+
+    def _manifest(self, version: int, op: str, info: dict | None) -> dict:
+        carried = [
+            f for f in self.m.get("files") or []
+            if f not in self._added and not any(r(f) for r in self._removes)
+        ]
+        files = carried + list(self._added)
+        stats, blooms = resolved_stats_blooms(self.m) if carried else ({}, {})
+        for f, (st, bl) in self._added.items():
             if st:
                 stats[f] = st
-    file_set = set(files)  # hoisted: a per-element set(files) is O(n^2)
-    manifest = {
-        "version": version,
-        "ts": time.time(),
-        "files": files,
-        # partition-discovery root for the listed files: reading leaf files
-        # directly would otherwise drop `col=val` partition columns
-        "base": os.path.abspath(base or path),
-        # True when this version's files may carry differing schemas (a
-        # schema-evolving merge keeps untouched buckets' old-schema files);
-        # readers then pay the mergeSchema footer pass, and ONLY then
-        "mixed_schema": bool(mixed_schema),
-        # applied-transaction ledger {txn_id: version} — the Delta
-        # txnAppId/txnVersion idea: a merge re-submitted with an
-        # already-recorded txn_id is a no-op, giving EXACTLY-ONCE
-        # semantics for non-idempotent (additive) merges under
-        # at-least-once redelivery. Carried forward by merges and
-        # clones; a plain overwrite_versioned starts a fresh ledger.
-        "txns": dict(txns or {}),
-        # per-file column stats for manifest-level pruning (see
-        # scan_snapshot); {} when the table doesn't opt in
-        "stats": dict(stats or {}),
-        "stats_cols": list(stats_cols or []),
-        # per-file bloom filters for equality pruning on hash-like keys
-        # ({file: {col: {"m","k","b64"}}}); computed by callers via
-        # compute_blooms (needs a SparkSession), carried verbatim here
-        "blooms": {f: b for f, b in (blooms or {}).items() if f in file_set},
-        "bloom_cols": list(bloom_cols or []),
-        # column mapping (Delta/Iceberg rename-and-drop-without-rewrite):
-        # {physical_name_in_files: current_logical_name} for renamed
-        # columns, plus physical names logically dropped. Metadata-only —
-        # files are never rewritten for a rename/drop; readers project.
-        "renames": dict(renames or {}),
-        "dropped_cols": list(dropped_cols or []),
-        # CHECK constraints {name: sql_expr over LOGICAL names} enforced
-        # on every library write surface (Delta ADD CONSTRAINT parity);
-        # carried forward exactly like the mapping
-        "constraints": dict(constraints or {}),
-        # merge-on-read deletion vectors: sidecar ref + per-file counts
-        # (the sidecar holds {file: [row_index, ...]}); {} = none
-        "dv": {},
-        # commit operation + details (Delta's commitInfo): what KIND of
-        # write produced this version. Conflict RESOLUTION reads it — a
-        # merge that loses the publish CAS can rebase WITHOUT recompute
-        # when every intervening commit is content-preserving
-        # ("compact") or a "merge" on disjoint buckets (op_info carries
-        # {"buckets": [...]}). Unknown/absent ops are conservatively
-        # content-changing (full retry). See operators/merge.py.
-        "op": op,
-        "op_info": dict(op_info or {}),
-    }
-    dv = {f: sorted(set(int(i) for i in ids)) for f, ids in (dv or {}).items() if ids}
-    if dv:
-        # uuid suffix for the same losing-racer reason as stats shards
-        sidecar = os.path.join(
-            os.path.abspath(_snap_dir(path)), f"dv-v{version:08d}-{uuid.uuid4().hex[:8]}.json"
-        )
-        _atomic_write(sidecar, json.dumps(dv))
-        manifest["dv"] = {"path": sidecar, "counts": {f: len(v) for f, v in dv.items()}}
-    _shard_stats(path, version, manifest)
-    _atomic_write_exclusive(_manifest_path(path, version), json.dumps(manifest))
-    # ---- COMMIT POINT: the exclusive manifest link above IS the commit.
-    # Everything after is best-effort cache maintenance: advance the
-    # pointer monotonically (a slower concurrent publisher of an OLDER
-    # version must not roll it back), but NEVER let a pointer I/O error
-    # propagate — callers treat a _publish raise as "not committed" and
-    # may clean up staged data files the just-linked manifest references
-    # (ADVICE r12: fold_additive's finally would corrupt the table).
-    # latest_version() heals a stale/missing pointer from the manifests.
-    try:
-        cur = latest_version(path)
-        if cur is None or version > cur:
-            _atomic_write(os.path.join(_snap_dir(path), "_latest"), str(version))
-    except OSError:
-        pass
-    return version
+            if bl:
+                blooms[f] = bl
+        stats_cols = list(self.get("stats_cols") or [])
+        file_stats = {}
+        for f in files:
+            if f not in stats and stats_cols:
+                if f not in self._footers:
+                    self._footers[f] = _file_stats(f, stats_cols)
+                stats[f] = self._footers[f]
+            if stats.get(f):
+                file_stats[f] = stats[f]
+        if "dv" in self._meta:
+            dv = self._meta["dv"]
+        else:
+            dv = read_dv(self.m) if carried else {}
+        live = set(files)
+        dv = {f: sorted({int(i) for i in ids}) for f, ids in dv.items() if ids and f in live}
+        txns = dict(self.get("txns") or {})
+        if self._txn_id is not None:
+            txns[self._txn_id] = version
+        manifest = {
+            "version": version,
+            "ts": time.time(),
+            "files": files,
+            # partition-discovery root for the listed files: reading leaf files
+            # directly would otherwise drop `col=val` partition columns
+            "base": os.path.abspath(self.get("base") or self.path),
+            # True when this version's files may carry differing schemas (a
+            # schema-evolving merge keeps untouched buckets' old-schema files);
+            # readers then pay the mergeSchema footer pass, and ONLY then
+            "mixed_schema": bool(self.get("mixed_schema")),
+            # applied-transaction ledger {txn_id: version} — the Delta
+            # txnAppId/txnVersion idea: a write re-submitted with a
+            # recorded txn_id is a no-op, giving EXACTLY-ONCE semantics for
+            # non-idempotent (additive) writes under at-least-once redelivery
+            "txns": txns,
+            # per-file {col: [min, max]} for manifest-level pruning (see
+            # scan_snapshot); {} when the table doesn't opt in
+            "stats": file_stats,
+            "stats_cols": stats_cols,
+            # per-file bloom filters for equality pruning on hash-like keys
+            # ({file: {col: {"m","k","b64"}}}), see compute_blooms
+            "blooms": {f: blooms[f] for f in files if f in blooms},
+            "bloom_cols": list(self.get("bloom_cols") or []),
+            # column mapping (Delta/Iceberg rename-and-drop-without-rewrite):
+            # {physical_name_in_files: current_logical_name} for renamed
+            # columns, plus physical names logically dropped. Metadata-only —
+            # files are never rewritten for a rename/drop; readers project.
+            "renames": dict(self.get("renames") or {}),
+            "dropped_cols": list(self.get("dropped_cols") or []),
+            # CHECK constraints {name: sql_expr over LOGICAL names} enforced
+            # on every library write surface (Delta ADD CONSTRAINT parity)
+            "constraints": dict(self.get("constraints") or {}),
+            # merge-on-read deletion vectors: sidecar ref + per-file counts
+            # (the sidecar holds {file: [row_index, ...]}); {} = none
+            "dv": {},
+            # commitInfo: what KIND of write produced this version. Conflict
+            # rules read it — "append", "compact" (content-preserving) and
+            # "merge" with op_info {"buckets", "flat"} are the ones a rebase
+            # may admit; every other op is conservatively content-changing.
+            "op": op,
+            "op_info": dict(info or {}),
+        }
+        if dv:
+            sidecar = os.path.join(
+                os.path.abspath(_snap_dir(self.path)),
+                f"dv-v{version:08d}-{uuid.uuid4().hex[:8]}.json",
+            )
+            _atomic_write(sidecar, json.dumps(dv))
+            manifest["dv"] = {"path": sidecar, "counts": {f: len(v) for f, v in dv.items()}}
+        _shard_stats(self.path, version, manifest)
+        return manifest
 
 
 # Above this many files, per-file stats/blooms move out of the manifest
@@ -650,7 +805,9 @@ def snapshot(path: str) -> int:
             "bootstrap would republish superseded versions' files and "
             "duplicate rows. Write through the versioned APIs instead."
         )
-    return _publish(path, _list_data_files(path), op="bootstrap")
+    t = Txn(path)
+    t.load({"files": _list_data_files(path)})
+    return t.commit("bootstrap")
 
 
 
@@ -713,45 +870,36 @@ def overwrite_versioned(
     ``bloom_cols``: additionally record a per-file bloom filter for these
     columns (string/integral/boolean), pruning EQUALITY probes that
     [min, max] can't — hash-like high-cardinality keys."""
-    # one metadata read serves constraints AND the txn-ledger carry
-    # (review r8: four per-overwrite round-trips also widened the window
-    # in which a concurrent publish made the two come from different
-    # versions)
-    prev = (
-        read_manifest(path, resolve=False) if latest_version(path) else None
-    )
-    prev_constraints = (prev.get("constraints") or None) if prev else None
-    if prev_constraints:
-        check_constraints(df, prev_constraints)
-    stage = os.path.abspath(os.path.join(path, f"_stage-{uuid.uuid4().hex[:8]}"))
-    df.write.mode("overwrite").parquet(stage)
-    try:
-        files = adopt_staged(stage, path)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    blooms = compute_blooms(spark, files, bloom_cols) if bloom_cols else None
-    # the applied-txn ledger SURVIVES overwrites (Delta txnAppId
-    # semantics): exactly-once identity belongs to the WRITERS, not the
-    # content — an overwrite landing inside a stream's commit/offset
-    # crash window must not reopen the replay hole. Enforced here at the
-    # library layer so every publish path (Data Source writer included)
-    # inherits it.
-    prev_txns = (prev.get("txns") or None) if prev else None
-    # a full overwrite defines a fresh logical schema: the incoming
-    # frame's names ARE the new physical names, so any prior column
-    # mapping is retired with the prior version (still time-travelable).
+    t = Txn(path)
+    if expected_version is not None and t.version != expected_version:
+        # content-derived rewrites (unbucket_snapshot) must fail on a
+        # concurrent publish instead of clobbering it
+        raise ConcurrentWriteError(
+            f"table advanced to v{t.version} while this writer worked "
+            f"from v{expected_version}; reload and retry"
+        )
     # CHECK constraints, written against logical names, SURVIVE the
-    # overwrite (Delta semantics) — enforced above, carried explicitly
-    # through the mapping reset.
-    return _publish(
-        path, files, txns=prev_txns,
-        stats_cols=stats_cols, bloom_cols=bloom_cols, blooms=blooms,
-        reset_mapping=True, constraints=prev_constraints,
-        # optional CAS (r8): content-derived rewrites (unbucket_snapshot)
-        # must fail on a concurrent publish instead of clobbering it
-        expected_version=expected_version,
-        op="overwrite",
-    )
+    # overwrite (Delta semantics), and so does the applied-txn ledger
+    # (Delta txnAppId: exactly-once identity belongs to the WRITERS, not
+    # the content — an overwrite landing inside a stream's commit/offset
+    # crash window must not reopen the replay hole). The incoming frame's
+    # names ARE the new physical names: any column mapping retires with
+    # the prior version (still time-travelable).
+    constraints = t.get("constraints")
+    if constraints:
+        check_constraints(df, constraints)
+    with t:
+        t.reset()
+        t.remove(lambda f: True)
+        t.set(stats_cols=stats_cols, bloom_cols=bloom_cols)
+        t.write(lambda stage: df.write.mode("overwrite").parquet(stage), spark=spark)
+        # with no expected_version, a lost race re-lists over the newer
+        # version (last writer wins) if its constraints are the ones checked
+        return t.commit(
+            "overwrite",
+            rebase=lambda nm: expected_version is None
+            and (nm.get("constraints") or None) == (constraints or None),
+        )
 
 
 def append_versioned(
@@ -803,19 +951,12 @@ def append_versioned(
     with one footer read per append — use the merge path with
     ``evolve=True`` for additive evolution."""
     staged_fields = set(df.schema.fieldNames())
-    prev = _append_prestage(path, txn_id, staged_fields, lambda: df)
-    if isinstance(prev, int):
-        return prev  # txn replay: the recorded version, nothing written
-    stage = os.path.abspath(os.path.join(path, f"_stage-append-{uuid.uuid4().hex[:8]}"))
-    df.write.mode("overwrite").parquet(stage)
-    try:
-        new_files = adopt_staged(stage, path)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return _append_publish(
-        spark, lambda: df, new_files, path, txn_id,
-        stats_cols, bloom_cols, max_retries, staged_fields, prev,
-    )
+    t = _append_prestage(path, txn_id, staged_fields, lambda: df, stats_cols, bloom_cols)
+    if isinstance(t, int):
+        return t  # txn replay: the recorded version, nothing written
+    with t:
+        t.write(lambda stage: df.write.mode("overwrite").parquet(stage), "append-", spark)
+        return _append_commit(t, lambda: df, staged_fields, max_retries)
 
 
 def _split_ddl(schema: str) -> list[tuple[str, str]]:
@@ -909,9 +1050,9 @@ def append_versioned_rows(
             schema,
         )
 
-    prev = _append_prestage(path, txn_id, staged_fields, frame)
-    if isinstance(prev, int):
-        return prev  # txn replay: the recorded version, nothing written
+    txn = _append_prestage(path, txn_id, staged_fields, frame, stats_cols, bloom_cols)
+    if isinstance(txn, int):
+        return txn  # txn replay: the recorded version, nothing written
     cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in fields]
     for i, (name, t) in enumerate(fields):
         if isinstance(t, pa.Decimal128Type):
@@ -929,11 +1070,10 @@ def append_versioned_rows(
     dst = os.path.join(path, f"part-{uuid.uuid4().hex}.parquet")  # adopt-named
     tmp = f"{dst}.tmp-{uuid.uuid4().hex[:8]}"
     pq.write_table(table, tmp)
-    os.replace(tmp, dst)  # appear atomically under the adopt naming contract
-    return _append_publish(
-        spark, frame, [dst], path, txn_id,
-        stats_cols, bloom_cols, max_retries, staged_fields, prev,
-    )
+    with txn:
+        os.replace(tmp, dst)  # appear atomically under the adopt naming contract
+        txn.add([dst], spark=spark)
+        return _append_commit(txn, frame, staged_fields, max_retries)
 
 
 def _parquet_fields(f: str) -> frozenset:
@@ -948,14 +1088,24 @@ def _parquet_fields(f: str) -> frozenset:
     return frozenset(pq.read_schema(f).names)
 
 
-def _append_prestage(path, txn_id, staged_fields, frame):
+def _append_prestage(path, txn_id, staged_fields, frame, stats_cols, bloom_cols):
     """Shared pre-stage guards for the append paths. Returns the
-    recorded version (int) on a txn replay, else the previous manifest
-    dict (or None for a fresh bootstrap). ``frame`` is a zero-arg
+    recorded version (int) on a txn replay, else the :class:`Txn` begun
+    at the version the guards checked. ``frame`` is a zero-arg
     callable returning the staged DataFrame — only invoked when the
     table carries CHECK constraints."""
     os.makedirs(path, exist_ok=True)
-    if latest_version(path) is None:
+    t = Txn(path)
+    replay = t.stamp(txn_id)
+    if replay is not None:
+        return replay
+    # pins default to the table's: prior files keep their recorded
+    # stats/blooms, only new files pay footer/bloom cost
+    if stats_cols:
+        t.set(stats_cols=stats_cols)
+    if bloom_cols:
+        t.set(bloom_cols=bloom_cols)
+    if not t.version:
         # ADVICE r10 (low): bootstrapping onto a directory that already
         # holds PLAIN-WRITER parquet would publish v1 listing only the
         # new files — the legacy data vanishes from the table view and a
@@ -1008,10 +1158,8 @@ def _append_prestage(path, txn_id, staged_fields, frame):
                 "staging, delete the files — a files-only v1 would orphan "
                 "them either way."
             )
-        return None
-    prev = read_manifest(path, resolve=False)
-    if txn_id is not None and txn_id in (prev.get("txns") or {}):
-        return int(prev["txns"][txn_id])
+        return t
+    prev = t.m
     if prev.get("renames") or prev.get("dropped_cols"):
         raise NotImplementedError(
             f"{path} carries a column mapping (renames/drops); appending "
@@ -1036,120 +1184,53 @@ def _append_prestage(path, txn_id, staged_fields, frame):
                 f"{sorted(have)}, frame has {sorted(staged_fields)}; use "
                 "the merge path (evolve=True) or overwrite_versioned"
             )
-    return prev
+    return t
 
 
-def _append_publish(
-    spark, frame, new_files, path, txn_id,
-    stats_cols, bloom_cols, max_retries, staged_fields, prev,
-) -> int:
-    """The append CAS/rebase publish loop, shared by the Spark-staged
-    (:func:`append_versioned`) and driver-staged
-    (:func:`append_versioned_rows`) paths. ``frame`` as in
-    :func:`_append_prestage`."""
-
-    def _drop_staged():
-        for f in new_files:  # referenced by no manifest: don't leave orphans
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-
+def _append_commit(t: Txn, frame, staged_fields, max_retries: int) -> int:
+    """Commit an append. Appends commute, so a lost CAS always rebases —
+    after re-running the pre-stage guards against the manifest that
+    won (ADVICE r10): a column mapping, bucketed layout, new CHECK
+    constraint or schema-changing overwrite landing while this append
+    staged refuses instead of publishing through stale guarantees.
+    ``frame`` as in :func:`_append_prestage`."""
     from ..operators.merge import BUCKET_COL
 
-    new_set = set(new_files)
-    # what the PRE-stage pass already validated — the mid-loop guards
-    # below only re-run when the live manifest diverges from this
-    checked_constraints = (prev.get("constraints") if prev else None) or None
-    checked_version = int(prev["version"]) if prev else 0
+    checked = {"constraints": t.m.get("constraints") or None}
     probed_schema: dict[str, frozenset] = {}
-    new_blooms: dict | None = None
-    for _ in range(max_retries):
-        m = read_manifest(path, resolve=False) if latest_version(path) else None
-        if m is not None and (m.get("renames") or m.get("dropped_cols")):
-            # a column mapping landed AFTER the pre-stage guard (rename
-            # racing this append): publishing logical-named files would
-            # fork the physical schema — drop the staged files and refuse
-            _drop_staged()
+
+    def guards_hold(nm: dict) -> bool:
+        if nm.get("renames") or nm.get("dropped_cols"):
             raise NotImplementedError(
-                f"{path} gained a column mapping while this append staged; "
+                f"{t.path} gained a column mapping while this append staged; "
                 "run compact_snapshot first."
             )
-        if m is not None and txn_id is not None and txn_id in (m.get("txns") or {}):
-            # same-txn peer published while we staged: our files are
-            # unreferenced by ANY manifest — drop them, return the peer's
-            _drop_staged()
-            return int(m["txns"][txn_id])
-        if m is not None and int(m["version"]) != checked_version:
-            # Mid-loop re-validation (ADVICE r10, medium): an intervening
-            # publish — overwrite_versioned with a different schema, a
-            # merge that bucketizes the table, an added CHECK constraint —
-            # invalidates the PRE-stage guards, and the column-mapping
-            # re-check above was the only one that ran inside the loop.
-            # Guarded on version drift so the uncontended path pays
-            # nothing extra.
-            if any(f"{BUCKET_COL}=" in f for f in m["files"]):
-                _drop_staged()
-                raise NotImplementedError(
-                    "the table gained a bucketed merge layout while this "
-                    "append staged; write through merge_upsert_versioned / "
-                    "merge_additive_versioned instead"
-                )
-            mcons = m.get("constraints") or None
-            if mcons and mcons != checked_constraints:
-                try:
-                    check_constraints(frame(), mcons)
-                except Exception:
-                    _drop_staged()
-                    raise
-                checked_constraints = mcons
-            live = [f for f in m["files"] if f not in new_set and os.path.exists(f)]
-            if live:
-                probe = live[0]
-                if probe not in probed_schema:
-                    probed_schema[probe] = _parquet_fields(probe)
-                if probed_schema[probe] != staged_fields:
-                    _drop_staged()
-                    raise ValueError(
-                        f"append schema mismatch at {path}: an intervening "
-                        f"publish changed the table to "
-                        f"{sorted(probed_schema[probe])}, staged frame has "
-                        f"{sorted(staged_fields)}; re-run the append against "
-                        "the new schema"
-                    )
-            checked_version = int(m["version"])
-        expected = int(m["version"]) if m else 0
-        txns = dict((m.get("txns") if m else None) or {})
-        if txn_id is not None:
-            txns[txn_id] = expected + 1
-        sc = stats_cols or (m.get("stats_cols") if m else None) or None
-        bc = bloom_cols or (m.get("bloom_cols") if m else None) or None
-        blooms = None
-        if bc:
-            if new_blooms is None:
-                new_blooms = compute_blooms(spark, new_files, bc) or {}
-            blooms = dict(resolved_stats_blooms(m)[1]) if m else {}
-            blooms.update(new_blooms)
-        try:
-            return _publish(
-                path,
-                (m["files"] if m else []) + new_files,
-                base=m.get("base") if m else None,
-                mixed_schema=bool(m.get("mixed_schema")) if m else False,
-                txns=txns or None,
-                stats_cols=sc,
-                bloom_cols=bc,
-                blooms=blooms,
-                expected_version=expected,
-                op="append",
+        if any(f"{BUCKET_COL}=" in f for f in nm["files"]):
+            raise NotImplementedError(
+                "the table gained a bucketed merge layout while this "
+                "append staged; write through merge_upsert_versioned / "
+                "merge_additive_versioned instead"
             )
-        except ConcurrentWriteError:
-            continue  # rebase: appends commute; staged files are reused
-    _drop_staged()
-    raise ConcurrentWriteError(
-        f"append to {path} lost the publish race {max_retries} times; "
-        "the table is under heavy concurrent write load — retry later"
-    )
+        cons = nm.get("constraints") or None
+        if cons and cons != checked["constraints"]:
+            check_constraints(frame(), cons)
+            checked["constraints"] = cons
+        live = [f for f in nm["files"] if os.path.exists(f)]
+        if live:
+            probe = live[0]
+            if probe not in probed_schema:
+                probed_schema[probe] = _parquet_fields(probe)
+            if probed_schema[probe] != staged_fields:
+                raise ValueError(
+                    f"append schema mismatch at {t.path}: an intervening "
+                    f"publish changed the table to "
+                    f"{sorted(probed_schema[probe])}, staged frame has "
+                    f"{sorted(staged_fields)}; re-run the append against "
+                    "the new schema"
+                )
+        return True
+
+    return t.commit("append", rebase=guards_hold, tries=max_retries)
 
 
 def unbucket_snapshot(
@@ -1410,14 +1491,9 @@ def rename_column(path: str, old: str, new: str) -> int:
         renames.pop(phys, None)  # renamed back to its physical name
     else:
         renames[phys] = new
-    return _publish(
-        path, list(m["files"]), base=m.get("base"),
-        mixed_schema=bool(m.get("mixed_schema")), txns=m.get("txns") or None,
-        stats_cols=m.get("stats_cols") or None, stats=m.get("stats") or None,
-        bloom_cols=m.get("bloom_cols") or None, blooms=m.get("blooms") or None,
-        renames=renames, dropped_cols=sorted(dropped),
-        expected_version=int(m["version"]),
-    )
+    t = Txn(path, m)
+    t.set(renames=renames, dropped_cols=sorted(dropped))
+    return t.commit("rename_column")
 
 
 def drop_column(path: str, name: str) -> int:
@@ -1438,14 +1514,9 @@ def drop_column(path: str, name: str) -> int:
     phys = logical_to_physical(m, name)
     renames.pop(phys, None)
     dropped.add(phys)
-    return _publish(
-        path, list(m["files"]), base=m.get("base"),
-        mixed_schema=bool(m.get("mixed_schema")), txns=m.get("txns") or None,
-        stats_cols=m.get("stats_cols") or None, stats=m.get("stats") or None,
-        bloom_cols=m.get("bloom_cols") or None, blooms=m.get("blooms") or None,
-        renames=renames, dropped_cols=sorted(dropped),
-        expected_version=int(m["version"]),
-    )
+    t = Txn(path, m)
+    t.set(renames=renames, dropped_cols=sorted(dropped))
+    return t.commit("drop_column")
 
 
 class ConstraintViolation(ValueError):
@@ -1498,15 +1569,9 @@ def add_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
         raise ValueError(f"constraint {name!r} already exists: {constraints[name]!r}")
     check_constraints(read_snapshot(spark, path), {name: expr})
     constraints[name] = expr
-    return _publish(
-        path, list(m["files"]), base=m.get("base"),
-        mixed_schema=bool(m.get("mixed_schema")), txns=m.get("txns") or None,
-        stats_cols=m.get("stats_cols") or None, stats=m.get("stats") or None,
-        bloom_cols=m.get("bloom_cols") or None, blooms=m.get("blooms") or None,
-        renames=m.get("renames") or None, dropped_cols=m.get("dropped_cols") or None,
-        constraints=constraints,
-        expected_version=int(m["version"]),
-    )
+    t = Txn(path, m)
+    t.set(constraints=constraints)
+    return t.commit("add_constraint")
 
 
 def drop_constraint(path: str, name: str) -> int:
@@ -1516,15 +1581,9 @@ def drop_constraint(path: str, name: str) -> int:
     if name not in constraints:
         raise ValueError(f"no constraint {name!r} (have {sorted(constraints)})")
     del constraints[name]
-    return _publish(
-        path, list(m["files"]), base=m.get("base"),
-        mixed_schema=bool(m.get("mixed_schema")), txns=m.get("txns") or None,
-        stats_cols=m.get("stats_cols") or None, stats=m.get("stats") or None,
-        bloom_cols=m.get("bloom_cols") or None, blooms=m.get("blooms") or None,
-        renames=m.get("renames") or None, dropped_cols=m.get("dropped_cols") or None,
-        constraints=constraints,
-        expected_version=int(m["version"]),
-    )
+    t = Txn(path, m)
+    t.set(constraints=constraints)
+    return t.commit("drop_constraint")
 
 
 def read_snapshot(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
@@ -1798,19 +1857,13 @@ def clone(src: str, dst: str, version: int | None = None) -> int:
     for owner in owners:
         _register_clone(owner, dst, pinned=m["files"])
     try:
-        v = _publish(
-            dst, list(m["files"]), base=m.get("base", src),
-            mixed_schema=bool(m.get("mixed_schema")),
-            txns=m.get("txns"),  # the clone keeps exactly-once against replays
-            stats=m.get("stats"),  # same files, same stats — no footer reads
-            stats_cols=m.get("stats_cols"),
-            blooms=m.get("blooms"),  # same files, same blooms
-            bloom_cols=m.get("bloom_cols"),
-            renames=m.get("renames") or None,  # the clone sees the same logical schema
-            dropped_cols=m.get("dropped_cols") or None,
-            constraints=m.get("constraints") or None,
-            dv=read_dv(m),  # re-sidecared under the CLONE's own snapshot dir
-        )
+        # same files, stats, blooms, mapping and constraints; DVs are
+        # re-sidecared under the CLONE's own snapshot dir, and the clone
+        # keeps exactly-once against replays
+        t = Txn(dst)
+        t.load(m)
+        t.set(txns=m.get("txns") or {}, base=m.get("base", src))
+        v = t.commit("clone")
     except BaseException:
         for owner in owners:
             for marker, cd in _registered_clones(owner):
@@ -1841,7 +1894,9 @@ def clone_untracked(src: str, dst: str, as_of_ts: float | None = None) -> int:
         raise LookupError(f"no snapshot of {src} at or before {as_of_ts}")
     files = _list_data_files(src)
     os.makedirs(dst, exist_ok=True)
-    return _publish(dst, files, base=src)
+    t = Txn(dst)
+    t.load({"files": files, "base": src})
+    return t.commit("clone")
 
 
 def vacuum(
@@ -1919,7 +1974,7 @@ def vacuum(
     # files referenced by NO manifest at all (vs. files whose only
     # references are EXPIRED manifests) may be a concurrent writer's
     # adopted-but-not-yet-published output: adopt_staged moves files to
-    # final names BEFORE _publish links the manifest, and deleting them
+    # final names BEFORE Txn.commit links the manifest, and deleting them
     # in that window would make the writer's commit reference dead files.
     # Delta's VACUUM retention threshold exists for exactly this; young
     # orphans survive ``orphan_retention_s`` (0 disables). (review r8)
@@ -2035,9 +2090,10 @@ def _versions_on_disk(path: str) -> list[int]:
 def describe_history(spark: SparkSession, path: str) -> DataFrame:
     """DESCRIBE HISTORY analog (BigQuery INFORMATION_SCHEMA.TABLE_STORAGE /
     Delta ``DESCRIBE HISTORY``): one row per retained manifest version with
-    file/byte counts and the add/remove delta vs the previous retained
-    version. Pure manifest reads — O(versions x files-per-manifest)
-    metadata, the table's data is never opened."""
+    file/byte counts, the add/remove delta vs the previous retained
+    version, and the commit's ``op`` (None before ops were recorded).
+    Pure manifest reads — O(versions x files-per-manifest) metadata, the
+    table's data is never opened."""
     rows = []
     prev: set[str] | None = None
     current = latest_version(path)
@@ -2065,6 +2121,7 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
                 len(renames),
                 len(dropped),
                 len(m.get("constraints") or {}),
+                m.get("op"),
             )
         )
         prev = files
@@ -2074,7 +2131,7 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
         "version int, ts double, n_files int, total_bytes long, "
         "n_added int, n_removed int, is_current boolean, "
         "n_deleted_rows long, n_renamed_cols int, n_dropped_cols int, "
-        "n_constraints int",
+        "n_constraints int, op string",
     )
 
 
@@ -2126,46 +2183,26 @@ def compact_snapshot(
     predicates; bucketed tables keep their hash layout and z-sort WITHIN
     each bucket (row-group-level skipping).
     """
+    from ..operators.layout import zvalue
     from ..operators.merge import BUCKET_COL, load_table_props
 
-    m = read_manifest(path)
+    m = read_manifest(path, resolve=False)
     df = read_snapshot(spark, path)
-    # the _stage- prefix is excluded by _list_data_files, so a
-    # concurrent vacuum or a crash-then-snapshot() bootstrap can
-    # never see (or delete) the in-flight compaction files
-    stage = os.path.abspath(os.path.join(path, f"_stage-compact-{uuid.uuid4().hex[:8]}"))
-    try:
-        if BUCKET_COL in df.columns:  # bucketed merge table: keep layout
-            part = df.repartition(F.col(BUCKET_COL))
-            if zorder:
-                from ..operators.layout import zvalue
-
-                part = (
-                    part.withColumn("_z", zvalue(df, list(zorder)))
-                    .sortWithinPartitions("_z")
-                    .drop("_z")
-                )
-            part.write.partitionBy(BUCKET_COL).parquet(stage)
-        elif zorder:
-            from ..operators.layout import zvalue
-
-            n = target_files or int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
-            # no checkpoint barrier: the sampling pass re-evaluates the
-            # (now-cheap) z expression once more, which beats
-            # materializing the whole table (see operators/layout.py)
-            z = df.withColumn("_z", zvalue(df, list(zorder)))
-            (
-                z.repartitionByRange(max(1, n), "_z")
-                .sortWithinPartitions("_z")
-                .drop("_z")
-                .write.parquet(stage)
-            )
-        else:
-            n = target_files or int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
-            df.coalesce(max(1, n)).write.parquet(stage)
-        new_files = adopt_staged(stage, path)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    part_by = [BUCKET_COL] if BUCKET_COL in df.columns else []
+    n = max(1, target_files or int(spark.conf.get("spark.sql.shuffle.partitions", "8")))
+    if part_by:  # bucketed merge table: keep the layout
+        out = df.repartition(F.col(BUCKET_COL))
+        if zorder:  # z-sort within each bucket
+            out = out.withColumn("_z", zvalue(df, list(zorder)))
+    elif zorder:
+        # no checkpoint barrier: the sampling pass re-evaluates the
+        # (now-cheap) z expression once more, which beats
+        # materializing the whole table (see operators/layout.py)
+        out = df.withColumn("_z", zvalue(df, list(zorder))).repartitionByRange(n, "_z")
+    else:
+        out = df.coalesce(n)
+    if zorder:
+        out = out.sortWithinPartitions("_z").drop("_z")
     props = load_table_props(path) or {}
     stats_cols = props.get("stats_cols") or (m.get("stats_cols") or None)
     bloom_cols = props.get("bloom_cols") or (m.get("bloom_cols") or None)
@@ -2173,34 +2210,22 @@ def compact_snapshot(
     # column mapping is MATERIALIZED here (renames become the files'
     # physical names, dropped columns' bytes are reclaimed) and the new
     # manifest resets to an identity mapping — Delta's "column mapping
-    # removal" rewrite. Stats/bloom column pins follow the rename.
+    # removal" rewrite. Stats/bloom column pins follow the rename; CHECK
+    # constraints (logical-name exprs) carry through.
     renames, dropped = mapping_of(m)
     if stats_cols:
-        stats_cols = [renames.get(c, c) for c in stats_cols if c not in dropped] or None
+        stats_cols = [renames.get(c, c) for c in stats_cols if c not in dropped]
     if bloom_cols:
-        bloom_cols = [renames.get(c, c) for c in bloom_cols if c not in dropped] or None
-    blooms = compute_blooms(spark, new_files, bloom_cols) if bloom_cols else None
-    return _publish(
-        path,
-        new_files,
-        base=path,
-        mixed_schema=False,  # a full rewrite unifies the schema
-        txns=m.get("txns") or None,
-        stats_cols=stats_cols,
-        bloom_cols=bloom_cols,
-        blooms=blooms,
-        reset_mapping=True,
-        # compaction preserves the logical schema, so CHECK constraints
-        # (logical-name exprs) carry through the mapping materialization
-        constraints=m.get("constraints") or None,
-        dv={},  # the rewrite materialized every deletion vector
-        expected_version=int(m["version"]),
-        # content-preserving: a concurrent merge that lost the CAS to
-        # this commit may rebase onto it without recompute — but only
-        # when no mapping was materialized here (the merge's files carry
-        # the OLD physical names); mapped compacts stay "write"
-        op="compact" if not (m.get("renames") or m.get("dropped_cols")) else "write",
-    )
+        bloom_cols = [renames.get(c, c) for c in bloom_cols if c not in dropped]
+    with Txn(path, m) as t:
+        t.reset()
+        t.remove(lambda f: True)
+        t.set(stats_cols=stats_cols, bloom_cols=bloom_cols)
+        t.write(lambda stage: out.write.partitionBy(*part_by).parquet(stage), "compact-", spark)
+        # content-preserving, so a merge that lost its CAS to this commit
+        # may rebase onto it — but not when a mapping was materialized
+        # here (the merge's files carry the OLD physical names)
+        return t.commit("write" if renames or dropped else "compact")
 
 
 def compact_small_files(
@@ -2248,98 +2273,22 @@ def compact_small_files(
     if len(small) < 2:
         return int(m["version"]), 0
     small_set = set(small)
-    dv_all = read_dv(m)
-    dv_small = {f: ids for f, ids in dv_all.items() if f in small_set}
+    dv_small = {f: ids for f, ids in read_dv(m).items() if f in small_set}
     raw = _read_physical(spark, m, small, with_meta=bool(dv_small))
     if dv_small:
         raw = _apply_dv(spark, raw, dv_small)  # materialize their deletes
     n_out = max(1, -(-sum(sizes[f] for f in small) // max(target_file_bytes, 1)))
-    stage = os.path.abspath(os.path.join(path, f"_stage-autocompact-{uuid.uuid4().hex[:8]}"))
-    try:
-        raw.coalesce(n_out).write.parquet(stage)
-        new_files = adopt_staged(stage, path)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    stats_cols = m.get("stats_cols") or None
-    new_stats = {}
-    if stats_cols:
-        for f in new_files:
-            st = _file_stats(f, stats_cols)
-            if st:
-                new_stats[f] = st
-    bloom_cols = m.get("bloom_cols") or None
-    new_blooms = compute_blooms(spark, new_files, bloom_cols) or {} if bloom_cols else {}
-    # publish with the append-aware rebase (r10): a streaming sink's
-    # maintenance pass races its own appends CONSTANTLY, and every
-    # intervening APPEND commit is file-disjoint from the small-file
-    # set being rewritten — so a lost CAS re-lists (new manifest's
-    # files minus the rewritten small set, plus the bin-packed output)
-    # instead of redoing the rewrite. Any other intervening op
-    # (merge/overwrite/DDL/another compact) raises as before.
-    pub = m
-    for _ in range(20):
-        keep_now = [f for f in pub["files"] if f not in small_set]
-        keep_now_set = set(keep_now)
-        stats = None
-        if stats_cols:
-            stats = {
-                f: st
-                for f, st in resolved_stats_blooms(pub)[0].items()
-                if f in keep_now_set
-            }
-            stats.update(new_stats)
-        blooms = {
-            f: b for f, b in resolved_stats_blooms(pub)[1].items() if f in keep_now_set
-        }
-        blooms.update(new_blooms)
-        try:
-            version = _publish(
-                path,
-                keep_now + new_files,
-                base=pub.get("base"),
-                mixed_schema=bool(pub.get("mixed_schema")),
-                txns=pub.get("txns") or None,
-                stats_cols=stats_cols,
-                stats=stats,
-                bloom_cols=bloom_cols,
-                blooms=blooms,
-                renames=pub.get("renames") or None,
-                dropped_cols=pub.get("dropped_cols") or None,
-                constraints=pub.get("constraints") or None,
-                dv={f: ids for f, ids in read_dv(pub).items() if f in keep_now_set},
-                expected_version=int(pub["version"]),
-                op="compact",  # bin-packing is content-preserving (DVs on the
-                # rewritten small files are materialized, carried files keep theirs)
-            )
-            return version, len(small)
-        except ConcurrentWriteError:
-            nm = read_manifest(path, resolve=False)
-            ok = True
-            for v in range(int(pub["version"]) + 1, int(nm["version"]) + 1):
-                try:
-                    mv = nm if v == int(nm["version"]) else read_manifest(path, v, resolve=False)
-                except Exception:
-                    ok = False
-                    break
-                if mv.get("op") != "append":
-                    ok = False
-                    break
-            if not ok:
-                for f in new_files:  # referenced by no manifest
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                raise
-            pub = nm
-    for f in new_files:
-        try:
-            os.remove(f)
-        except OSError:
-            pass
-    raise ConcurrentWriteError(
-        f"compact_small_files on {path} lost 20 consecutive publish races"
-    )
+
+    def appends_only(nm):
+        # a streaming sink's maintenance races its own appends constantly,
+        # and appended files are disjoint from the small set rewritten here
+        since = t.since(nm)
+        return since is not None and all(mv.get("op") == "append" for mv in since)
+
+    with Txn(path, m) as t:
+        t.remove(small)
+        t.write(lambda stage: raw.coalesce(n_out).write.parquet(stage), "autocompact-", spark)
+        return t.commit("compact", rebase=appends_only), len(small)
 
 
 def restore(path: str, version: int) -> int:
@@ -2350,27 +2299,9 @@ def restore(path: str, version: int) -> int:
     travel with the restored manifest; the txn ledger carries FORWARD
     from the current version (rolling back data must not reopen
     exactly-once windows — a replayed merge/stream batch stays applied)."""
-    target = read_manifest(path, version)
-    cur = read_manifest(path)
-    return _publish(
-        path,
-        list(target["files"]),
-        base=target.get("base"),
-        mixed_schema=bool(target.get("mixed_schema")),
-        txns=cur.get("txns") or None,
-        stats_cols=target.get("stats_cols") or None,
-        stats=target.get("stats") or None,
-        bloom_cols=target.get("bloom_cols") or None,
-        blooms=target.get("blooms") or None,
-        # the restored version's mapping comes back with it — RESTORE
-        # rolls back renames/drops exactly like data
-        renames=target.get("renames") or None,
-        dropped_cols=target.get("dropped_cols") or None,
-        reset_mapping=not (target.get("renames") or target.get("dropped_cols")),
-        constraints=dict(target.get("constraints") or {}),
-        dv=read_dv(target),  # the restored version's vectors come back too
-        expected_version=int(cur["version"]),
-    )
+    t = Txn(path)
+    t.load(read_manifest(path, version))
+    return t.commit("restore")
 
 
 def fsck_repair(path: str, dry_run: bool = False) -> list[str]:
@@ -2391,21 +2322,9 @@ def fsck_repair(path: str, dry_run: bool = False) -> list[str]:
     missing = [f for f in m["files"] if not os.path.exists(f)]
     if not missing or dry_run:
         return missing
-    gone = set(missing)
-    keep = [f for f in m["files"] if f not in gone]
-    stats = {f: s for f, s in (m.get("stats") or {}).items() if f not in gone}
-    blooms = {f: b for f, b in (m.get("blooms") or {}).items() if f not in gone}
-    dv = {f: ids for f, ids in read_dv(m).items() if f not in gone}
-    _publish(
-        path, keep, base=m.get("base"),
-        mixed_schema=bool(m.get("mixed_schema")), txns=m.get("txns") or None,
-        stats_cols=m.get("stats_cols") or None, stats=stats or None,
-        bloom_cols=m.get("bloom_cols") or None, blooms=blooms or None,
-        renames=m.get("renames") or None, dropped_cols=m.get("dropped_cols") or None,
-        constraints=m.get("constraints") or None, dv=dv or None,
-        expected_version=int(m["version"]),
-        op="fsck",
-    )
+    t = Txn(path, m)
+    t.remove(missing)
+    t.commit("fsck")
     return missing
 
 
@@ -2419,23 +2338,21 @@ def _where_cond(where: list):
     return F.coalesce(cond, F.lit(False))
 
 
-def _rewrite_candidates(spark: SparkSession, path: str, where: list, transform):
+def _rewrite_candidates(spark: SparkSession, path: str, where: list, transform, op: str):
     """Shared pruned-rewrite core of DELETE/UPDATE WHERE: stats/bloom-
     prune the candidate files, apply ``transform(df, cond)`` to exactly
-    those, carry every other file untouched into the next version.
-    Returns (new_version, files_rewritten)."""
+    those, carry every other file untouched into the next version as
+    commit ``op``. Returns (new_version, files_rewritten)."""
     m = read_manifest(path, resolve=False)  # lazy shard pruning
     # prune with PHYSICAL names (stats keyed physically); present the
     # transform with the LOGICAL view (rename-only — dropped physical
     # columns are reclaimed here: a rewrite is the moment their bytes go)
     pwhere = translate_where(m, where)
     candidates = set(prune_files(m, pwhere))
-    keep = [f for f in m["files"] if f not in candidates]
     if not candidates:
         return int(m["version"]), 0  # nothing can match: metadata-only no-op
 
-    dv_all = read_dv(m)
-    dv_cand = {f: ids for f, ids in dv_all.items() if f in candidates}
+    dv_cand = {f: ids for f, ids in read_dv(m).items() if f in candidates}
     raw = _read_physical(spark, m, sorted(candidates), with_meta=bool(dv_cand))
     if dv_cand:
         # rewriting a DV-bearing file materializes its deletes — the
@@ -2448,44 +2365,13 @@ def _rewrite_candidates(spark: SparkSession, path: str, where: list, transform):
     if m.get("constraints"):
         check_constraints(out, m["constraints"])
     rewritten = to_physical(out, m)
-
-    stage = os.path.abspath(os.path.join(path, f"_stage-dml-{uuid.uuid4().hex[:8]}"))
-    try:
-        rewritten.write.parquet(stage)
-        new_files = adopt_staged(stage, path)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    stats_cols = m.get("stats_cols") or None
-    bloom_cols = m.get("bloom_cols") or None
-    all_stats, all_blooms = resolved_stats_blooms(m)  # carry needs them all
-    keep_set = set(keep)  # hoisted: per-element set() builds are O(n^2)
-    stats = None
-    if stats_cols:
-        stats = {f: s for f, s in all_stats.items() if f in keep_set}
-        for f in new_files:
-            st = _file_stats(f, stats_cols)
-            if st:
-                stats[f] = st
-    blooms = {f: b for f, b in all_blooms.items() if f in keep_set}
-    if bloom_cols and new_files:
-        # rewritten files get fresh bloom filters like compact_small_files'
-        # output — omitting them silently retired equality pruning for
-        # every file a DELETE/UPDATE ever touched (review r8)
-        blooms.update(compute_blooms(spark, new_files, bloom_cols))
-    version = _publish(
-        path,
-        keep + new_files,
-        base=m.get("base"),
-        mixed_schema=bool(m.get("mixed_schema")),
-        txns=m.get("txns") or None,
-        stats_cols=stats_cols,
-        stats=stats,
-        bloom_cols=bloom_cols,
-        blooms=blooms or None,
-        dv={f: ids for f, ids in dv_all.items() if f in keep_set},
-        expected_version=int(m["version"]),
-    )
-    return version, len(candidates)
+    # rewritten files get fresh stats and bloom filters — omitting blooms
+    # silently retired equality pruning for every file a DELETE/UPDATE
+    # ever touched (review r8)
+    with Txn(path, m) as t:
+        t.remove(candidates)
+        t.write(lambda stage: rewritten.write.parquet(stage), "dml-", spark)
+        return t.commit(op), len(candidates)
 
 
 def delete_where(spark: SparkSession, path: str, where: list) -> tuple[int, int]:
@@ -2499,11 +2385,9 @@ def delete_where(spark: SparkSession, path: str, where: list) -> tuple[int, int]
 
     The txn ledger, layout metadata, and (for pinned ``stats_cols``)
     per-file stats all carry; untouched files keep their recorded stats,
-    rewritten files re-read footers (the `_publish` incremental rule
-    covers files already known to the PREVIOUS manifest, so rewritten
-    files' fresh stats are computed here)."""
+    rewritten files read footers."""
     return _rewrite_candidates(
-        spark, path, where, lambda df, cond: df.filter(~cond)
+        spark, path, where, lambda df, cond: df.filter(~cond), "delete"
     )
 
 
@@ -2579,18 +2463,9 @@ def delete_where_dv(
         merged.setdefault(by_abs.get(r["_dv_file"], r["_dv_file"]), set()).add(
             int(r["_dv_idx"])
         )
-    dvs_stats, dvs_blooms = resolved_stats_blooms(m)
-    version = _publish(
-        path, list(m["files"]), base=m.get("base"),
-        mixed_schema=bool(m.get("mixed_schema")), txns=m.get("txns") or None,
-        stats_cols=m.get("stats_cols") or None, stats=dvs_stats or None,
-        bloom_cols=m.get("bloom_cols") or None, blooms=dvs_blooms or None,
-        renames=m.get("renames") or None, dropped_cols=m.get("dropped_cols") or None,
-        constraints=m.get("constraints") or None,
-        dv={f: sorted(ids) for f, ids in merged.items()},
-        expected_version=int(m["version"]),
-    )
-    return version, len(hits)
+    t = Txn(path, m)
+    t.set(dv=merged)
+    return t.commit("delete"), len(hits)
 
 
 def update_where(
@@ -2610,4 +2485,4 @@ def update_where(
             )
         return out
 
-    return _rewrite_candidates(spark, path, where, transform)
+    return _rewrite_candidates(spark, path, where, transform, "update")

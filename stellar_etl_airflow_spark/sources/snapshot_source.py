@@ -32,7 +32,6 @@ missing columns as nulls.
 from __future__ import annotations
 import base64
 import os
-import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -393,8 +392,8 @@ class _SnapshotWriter(DataSourceArrowWriter):
       task from the batches it writes (zero extra reads; the write IS
       the scan);
     - ``commit`` (driver, runs once) publishes the next manifest version
-      listing exactly the committed tasks' files — atomic via the
-      manifest log's write-rename. ``overwrite`` lists only the new
+      listing exactly the committed tasks' files — one
+      :class:`snapshots.Txn` commit. ``overwrite`` lists only the new
       files (old versions stay for time travel); append carries the
       previous version's files, stats, blooms, and txn ledger forward.
     - ``abort`` deletes this attempt's files; readers never saw them.
@@ -536,108 +535,88 @@ class _SnapshotWriter(DataSourceArrowWriter):
         return _MultiFileCommit(parts=commits)
 
     def commit(self, messages) -> None:
-        # optimistic-concurrency rebase (Delta's concurrent-append
-        # semantics): _publish_files re-reads the CURRENT manifest each
-        # attempt, so a lost race just means recomputing the file-list
-        # union against the interleaved writer's version and re-claiming
-        # the next slot. Appends commute; overwrite retries win-latest.
-        for attempt in range(20):
-            try:
-                self._publish_files(messages)
-                return
-            except S.ConcurrentWriteError:
-                if attempt == 19:
-                    raise
-                time.sleep(0.02 * (attempt + 1))  # linear backoff
+        self._publish_files(messages)
 
     def _publish_files(self, messages, txn_id: str | None = None) -> None:
-        import pyarrow.parquet as pq
-
         new = [m for m in _flatten_commits(messages) if m.file]
         files = [m.file for m in new]
-        stats = {m.file: m.stats for m in new if m.stats}
-        blooms = {m.file: m.blooms for m in new if m.blooms}
-        cur = S.read_manifest(self._path) if S.latest_version(self._path) else None
-        expected = int(cur["version"]) if cur else 0
-        prev = None if self._overwrite else cur
-        mixed, txns = False, {}
-        # the txn ledger survives OVERWRITE too (Delta's txnAppId
-        # semantics): exactly-once identity belongs to the WRITERS, not
-        # the content — without this, an overwrite landing inside a
-        # stream's commit/offset crash window reopens the replay hole
-        # (caught by the writer-protocol property test)
-        if cur and self._overwrite:
-            txns = dict(cur.get("txns") or {})
-        stats_cols, bloom_cols = list(self._stats_cols), list(self._bloom_cols)
-        if prev:
-            from ..operators.merge import BUCKET_COL
-
-            # files under ANY col=val dir (the _p= bucket layout OR a
-            # generic hive partition layout adopted via snapshot()):
-            # appending flat root files would publish a MIXED-DEPTH file
-            # list that basePath reads reject ("Conflicting directory
-            # structures") — breaking read_snapshot AND the CDF reader.
-            # Appends to such tables go through the merge path /
-            # partition-aware writers (review r8: the guard previously
-            # checked only _p=).
-            base = prev.get("base") or self._path
-            layered = next(
-                (
-                    seg
-                    for f in prev["files"]
-                    for seg in os.path.relpath(f, base).split(os.sep)[:-1]
-                    if "=" in seg
-                ),
-                None,
+        with S.Txn(self._path) as t:
+            t.add(
+                files,
+                stats={m.file: m.stats for m in new if m.stats},
+                blooms={m.file: m.blooms for m in new if m.blooms},
             )
-            if files and layered:
-                _drop_files(messages)
-                kind, hint = (
-                    ("a bucketed merge table",
-                     "append via apply_changes/merge_upsert_versioned")
-                    if layered.startswith(f"{BUCKET_COL}=")
-                    else ("a hive-partitioned table",
-                          "append via the partition-aware library writers")
-                )
-                raise ValueError(
-                    f"{self._path} is {kind} ({layered} layout); flat "
-                    f"Data Source appends would mix directory depths — {hint}"
-                )
-            mixed = bool(prev.get("mixed_schema"))
-            if not mixed and prev["files"] and files:
-                # one footer read decides whether this append evolves the
-                # schema; readers then (and only then) pay mergeSchema
-                old_s = pq.read_schema(prev["files"][0])
-                new_s = pq.read_schema(files[0])
-                mixed = {f.name: str(f.type) for f in old_s} != {
-                    f.name: str(f.type) for f in new_s
-                }
-            txns = dict(prev.get("txns") or {})
-            stats_cols = sorted(set(prev.get("stats_cols") or []) | set(stats_cols))
-            bloom_cols = sorted(set(prev.get("bloom_cols") or []) | set(bloom_cols))
-            files = list(prev["files"]) + files
-            stats = {**(prev.get("stats") or {}), **stats}
-            blooms = {**(prev.get("blooms") or {}), **blooms}
-        if txn_id is not None:
-            txns[txn_id] = (S.latest_version(self._path) or 0) + 1
-        S._publish(
-            self._path,
-            files,
-            mixed_schema=mixed,
-            txns=txns or None,
-            stats_cols=stats_cols,
-            stats=stats,
-            bloom_cols=bloom_cols,
-            blooms=blooms,
-            # append: default-inherit carries the column mapping; a full
-            # overwrite retires it (the frame defines a fresh schema)
-            reset_mapping=bool(self._overwrite),
-            # compare-and-swap: the file list above was derived from
-            # ``cur`` — if the table advanced since, rebase via the
-            # commit retry loop instead of silently dropping the
-            # interleaved writer's files from the union
-            expected_version=expected,
+            if t.stamp(txn_id) is not None:
+                return  # redelivered micro-batch: drop its files, publish nothing
+            if self._overwrite:
+                # the ledger survives OVERWRITE too (Delta's txnAppId
+                # semantics): exactly-once identity belongs to the WRITERS,
+                # not the content (caught by the writer-protocol property
+                # test). A lost race re-lists over the newer version.
+                t.reset()
+                t.remove(lambda f: True)
+                t.set(stats_cols=self._stats_cols, bloom_cols=self._bloom_cols)
+                t.commit("write", rebase=lambda nm: True)
+            else:
+                # appends commute: a lost race re-derives the union
+                # against the interleaved writer's version
+                self._fit_append(t, t.m, files)
+                t.commit("write", rebase=lambda nm: self._fit_append(t, nm, files))
+
+    def _fit_append(self, t, prev: dict, files: list[str]) -> bool:
+        """Check this append against ``prev`` and set what it derives
+        from it: the schema-drift flag and the union of stats/bloom
+        pins."""
+        import pyarrow.parquet as pq
+
+        from ..operators.merge import BUCKET_COL
+
+        if not prev:  # a fresh table: this append defines it
+            t.set(stats_cols=self._stats_cols, bloom_cols=self._bloom_cols)
+            return True
+        # files under ANY col=val dir (the _p= bucket layout OR a generic
+        # hive partition layout adopted via snapshot()): appending flat
+        # root files would publish a MIXED-DEPTH file list that basePath
+        # reads reject ("Conflicting directory structures") — breaking
+        # read_snapshot AND the CDF reader (review r8: the guard
+        # previously checked only _p=).
+        base = prev.get("base") or self._path
+        layered = next(
+            (
+                seg
+                for f in prev["files"]
+                for seg in os.path.relpath(f, base).split(os.sep)[:-1]
+                if "=" in seg
+            ),
+            None,
         )
+        if files and layered:
+            kind, hint = (
+                ("a bucketed merge table",
+                 "append via apply_changes/merge_upsert_versioned")
+                if layered.startswith(f"{BUCKET_COL}=")
+                else ("a hive-partitioned table",
+                      "append via the partition-aware library writers")
+            )
+            raise ValueError(
+                f"{self._path} is {kind} ({layered} layout); flat "
+                f"Data Source appends would mix directory depths — {hint}"
+            )
+        mixed = bool(prev.get("mixed_schema"))
+        if not mixed and prev["files"] and files:
+            # one footer read decides whether this append evolves the
+            # schema; readers then (and only then) pay mergeSchema
+            old_s = pq.read_schema(prev["files"][0])
+            new_s = pq.read_schema(files[0])
+            mixed = {f.name: str(f.type) for f in old_s} != {
+                f.name: str(f.type) for f in new_s
+            }
+        t.set(
+            mixed_schema=mixed,
+            stats_cols=sorted(set(prev.get("stats_cols") or []) | set(self._stats_cols)),
+            bloom_cols=sorted(set(prev.get("bloom_cols") or []) | set(self._bloom_cols)),
+        )
+        return True
 
     def abort(self, messages) -> None:
         _drop_files(messages)
@@ -690,27 +669,7 @@ class _SnapshotStreamWriter(_SnapshotWriter, DataSourceStreamArrowWriter):
         return f"snapshot_stream:{self._appid}:{int(batch_id)}"
 
     def commit(self, messages, batchId: int) -> None:
-        for attempt in range(20):
-            try:
-                self._commit_once(messages, batchId)
-                return
-            except S.ConcurrentWriteError:
-                if attempt == 19:
-                    raise
-                time.sleep(0.02 * (attempt + 1))  # linear backoff
-
-    def _commit_once(self, messages, batchId: int) -> None:
-        key = self._txn_key(batchId)
-        if S.latest_version(self._path):
-            # resolve=False: only the ledger key matters — eager shard
-            # inlining would parse every stats sidecar per micro-batch
-            recorded = (
-                S.read_manifest(self._path, resolve=False).get("txns") or {}
-            )
-            if key in recorded:  # redelivered micro-batch: drop, don't publish
-                _drop_files(messages)
-                return
-        self._publish_files(messages, txn_id=key)
+        self._publish_files(messages, txn_id=self._txn_key(batchId))
 
     def abort(self, messages, batchId: int) -> None:
         _drop_files(messages)

@@ -214,16 +214,10 @@ def test_fold_refolds_on_concurrent_stats_repin(spark, tmp_path, monkeypatch):
         if "_stage-fold-" in stage and fired["n"] == 0:
             fired["n"] = 1
             # a metadata-only DDL re-pin: same file list, new pins
-            m0 = S.read_manifest(tbl, resolve=False)
-            S._publish(
-                tbl,
-                m0["files"],
-                stats_cols=["n"],
-                bloom_cols=["k"],
-                blooms=S.compute_blooms(spark, m0["files"], ["k"]),
-                txns=m0.get("txns") or None,
-                op="repin",
-            )
+            t = S.Txn(tbl)
+            t.set(stats_cols=["n"], bloom_cols=["k"])
+            t.add(t.m["files"], spark=spark)  # listed files: new blooms
+            t.commit("repin")
         return out
 
     monkeypatch.setattr(S, "adopt_staged", adopt_then_repin)

@@ -133,13 +133,11 @@ def test_apply_changes_pins_layout_and_rejects_key_mismatch(spark, tmp_path):
         )
 
 
-def test_optimize_versioned_compacts_without_breaking_history(spark, tmp_path):
-    """After several merge batches a bucket holds several small files;
-    optimize_versioned rewrites each such bucket to ONE file in a NEW
-    manifest version — current state identical, pre-compaction versions
-    still exactly readable (old files untouched), vacuum reclaims them."""
-    from stellar_etl_airflow_spark.operators.maintenance import optimize_versioned
-
+def test_compact_snapshot_compacts_adopted_buckets_without_breaking_history(spark, tmp_path):
+    """After several writes a bucket holds several small files;
+    compact_snapshot rewrites each bucket to ONE file in a NEW manifest
+    version — current state identical, pre-compaction versions still
+    exactly readable (old files untouched), vacuum reclaims them."""
     from stellar_etl_airflow_spark.operators.merge import key_bucket
 
     tbl = str(tmp_path / "t")
@@ -154,10 +152,9 @@ def test_optimize_versioned_compacts_without_breaking_history(spark, tmp_path):
     pre_version = S.latest_version(tbl)
     pre_state = _state(spark, tbl)
     assert pre_state == {1: 1.0, 2: 2.0, 3: 3.0, 4: 4.0}
-    results = optimize_versioned(spark, tbl, min_files=2)
-    assert results  # at least one bucket compacted
-    for d, (before, after) in results.items():
-        assert before >= 2 and after == 1
+    S.compact_snapshot(spark, tbl)
+    dirs = [os.path.dirname(f) for f in S.read_manifest(tbl)["files"]]
+    assert len(dirs) == len(set(dirs)) == 2  # one file per bucket
     assert S.latest_version(tbl) == pre_version + 1
     assert _state(spark, tbl) == pre_state  # current rows unchanged
     assert _state(spark, tbl, pre_version) == pre_state  # history intact

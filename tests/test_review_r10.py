@@ -71,7 +71,7 @@ def test_lost_bootstrap_already_tracked_rebases(spark, tmp_path, monkeypatch):
 
 def test_lost_bootstrap_cas_loss_rebases(spark, tmp_path, monkeypatch):
     """Interleaving 2: both writers pass snapshot's own guard and race
-    _publish for the v1 manifest slot; the loser's exclusive link fails
+    the commit for the v1 manifest slot; the loser's exclusive link fails
     with ConcurrentWriteError. Same contract: fall through to the
     peer's v1 and merge normally."""
     tbl = str(tmp_path / "t")

@@ -225,7 +225,7 @@ def test_merge_rebase_raises_on_flat_files(spark, tmp_path, monkeypatch):
     real_adopt = S.adopt_staged
     fired = {"n": 0}
 
-    def adopt_then_flat_publish(stage, path):
+    def adopt_then_flat_commit(stage, path):
         out = real_adopt(stage, path)
         if fired["n"] == 0 and "_stage-" in stage:
             fired["n"] += 1
@@ -243,17 +243,12 @@ def test_merge_rebase_raises_on_flat_files(spark, tmp_path, monkeypatch):
             import shutil
 
             shutil.copy(src, flat)
-            S._publish(
-                tbl,
-                m["files"] + [flat],
-                base=m.get("base"),
-                txns=m.get("txns") or None,
-                expected_version=int(m["version"]),
-                op="compact",  # content-preserving per _rebase_compatible
-            )
+            t = S.Txn(tbl, m)
+            t.add([flat])
+            t.commit("compact")  # content-preserving per _rebase_compatible
         return out
 
-    monkeypatch.setattr(S, "adopt_staged", adopt_then_flat_publish)
+    monkeypatch.setattr(S, "adopt_staged", adopt_then_flat_commit)
     # the merge loses its CAS to the injected commit; _rebase_compatible
     # admits "compact", but the manifest now holds a flat file -> the
     # row-loss guard must force a recompute (outer wrapper retries) and

@@ -105,16 +105,10 @@ def test_fold_cleans_staged_files_on_unexpected_raise(spark, tmp_path, monkeypat
         raise OSError("stats shard sidecar unreadable")
 
     # force the bloom branch: pin bloom cols via a fresh publish
-    m0 = S.read_manifest(tbl, resolve=False)
-    S._publish(
-        tbl,
-        m0["files"],
-        stats_cols=["n"],
-        bloom_cols=["k"],
-        blooms=S.compute_blooms(spark, m0["files"], ["k"]),
-        txns=m0.get("txns") or None,
-        op="repin",
-    )
+    t = S.Txn(tbl)
+    t.set(stats_cols=["n"], bloom_cols=["k"])
+    t.add(t.m["files"], spark=spark)  # listed files: new blooms
+    t.commit("repin")
     # a delta landing after the fold pins its base version forces the
     # rebase path, whose bloom resolution now raises
     real_adopt = S.adopt_staged

@@ -10,7 +10,7 @@ its session self-sufficient); the driver-session-simulation fixture
 below pins the property mechanically so no future connector entry can
 re-acquire the dependence.
 
-Plus the three ADVICE r12 items: _publish's post-commit pointer update
+Plus the three ADVICE r12 items: the commit's post-commit pointer update
 must be best-effort (a raise after the commit point made fold_additive's
 cleanup delete LIVE files), bench's shed ladder must be cumulative, and
 cleanup_meta must catch a typed NotAdditiveMorTable instead of

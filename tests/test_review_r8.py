@@ -34,7 +34,7 @@ def test_dv_masks_on_path_with_space(spark, tmp_path):
 
 def test_compute_blooms_keys_match_caller_strings(spark, tmp_path):
     """Bloom results must be keyed by the CALLER'S file strings —
-    abspath keys were silently dropped by _publish's membership filter
+    abspath keys were silently dropped by the commit's membership filter
     for relative-path manifests."""
     p = str(tmp_path / "pq")
     spark.createDataFrame([(i,) for i in range(50)], "id long").write.parquet(p)
@@ -280,7 +280,7 @@ def test_ds_append_inherits_stats_and_bloom_pins(spark, tmp_path):
 def test_merge_materializes_deletion_vectors(spark, tmp_path):
     """Merging into a FLAT table carrying merge-on-read deletion vectors
     used to read rewrite files raw — resurrecting every masked row while
-    _publish silently dropped the vectors."""
+    the commit silently dropped the vectors."""
     from stellar_etl_airflow_spark.operators.merge import merge_upsert_versioned
 
     tbl = str(tmp_path / "t")

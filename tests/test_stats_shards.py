@@ -141,8 +141,9 @@ def test_concurrent_publish_never_clobbers(spark, tmp_path, monkeypatch):
         return v
 
     monkeypatch.setattr(S, "latest_version", stale_latest)
+    t = S.Txn(tbl)  # begins at the stale v2
     with _pt.raises(S.ConcurrentWriteError):
-        S._publish(tbl, list(S.read_manifest(tbl, 1)["files"]), reset_mapping=True)
+        t.commit("overwrite")
     monkeypatch.undo()
     assert S.read_manifest(tbl, 3, resolve=False)["files"] == []  # winner intact
 
@@ -192,23 +193,24 @@ def test_datasource_append_rebases_on_conflict(spark, tmp_path, monkeypatch):
     _sh.copyfile(base_file, mine)
 
     # interleave a competing append INSIDE the read->publish window:
-    # the first _publish call from the writer is preempted by an
-    # external publish that claims the version slot first
-    real_publish = S._publish
+    # the writer's first manifest link is preempted by an external
+    # commit that claims the version slot first
+    real_link = S._atomic_write_exclusive
     state = {"fired": False}
 
-    def racy_publish(path, files, **kw):
+    def racy_link(target, payload):
         if not state["fired"]:
             state["fired"] = True
-            ext = os.path.join(path, "part-ext.parquet")
+            ext = os.path.join(tbl, "part-ext.parquet")
             _sh.copyfile(base_file, ext)
-            prev = S.read_manifest(path)
-            real_publish(path, list(prev["files"]) + [ext])
-            # now the writer's own attempt computes the SAME version
+            peer = S.Txn(tbl)
+            peer.add([ext])
+            peer.commit("write")
+            # now the writer's own attempt links the SAME version
             # number and must hit ConcurrentWriteError -> rebase
-        return real_publish(path, files, **kw)
+        return real_link(target, payload)
 
-    monkeypatch.setattr(S, "_publish", racy_publish)
+    monkeypatch.setattr(S, "_atomic_write_exclusive", racy_link)
     w = _SnapshotWriter({"path": tbl}, overwrite=False)
     w.commit([_FileCommit(file=mine, rows=1)])
     monkeypatch.undo()

@@ -57,20 +57,20 @@ def main():
     spark = get_spark("fold-liveness-probe")
 
     # count the publish CAS losses the fold's rebase loop absorbs
-    real_publish = S._publish
+    real_commit_once = S.Txn._commit_once
     lock = threading.Lock()
     stats = {"fold_cas_losses": 0}
 
-    def counting_publish(path, files, **kw):
+    def counting_commit_once(self, op, info):
         try:
-            return real_publish(path, files, **kw)
+            return real_commit_once(self, op, info)
         except S.ConcurrentWriteError:
-            if kw.get("op") == "fold":
+            if op == "fold":
                 with lock:
                     stats["fold_cas_losses"] += 1
             raise
 
-    S._publish = counting_publish
+    S.Txn._commit_once = counting_commit_once
     try:
         with tempfile.TemporaryDirectory() as root:
             tbl = os.path.join(root, "mor")
@@ -198,7 +198,7 @@ def main():
             print(json.dumps(out))
             sys.exit(0 if ok else 1)
     finally:
-        S._publish = real_publish
+        S.Txn._commit_once = real_commit_once
 
 
 if __name__ == "__main__":

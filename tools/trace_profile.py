@@ -67,11 +67,12 @@ def main() -> None:
 
     for fname in (
         "overwrite_versioned", "append_versioned", "append_versioned_rows",
-        "compact_snapshot", "compact_small_files", "_publish", "compute_blooms",
+        "compact_snapshot", "compact_small_files", "compute_blooms",
         "_file_stats", "read_snapshot", "scan_snapshot", "read_manifest",
         "delete_where_dv", "vacuum", "adopt_staged", "_shard_stats",
     ):
         _wrap(S, fname, f"snapshots.{fname}")
+    _wrap(S.Txn, "commit", "snapshots.Txn.commit")
     for fname in ("merge_upsert", "apply_changes", "load_table_props"):
         _wrap(merge, fname, f"merge.{fname}")
     for fname in ("read_additive", "append_additive"):
