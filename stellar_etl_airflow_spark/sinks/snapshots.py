@@ -249,10 +249,13 @@ def _canon_probe(v) -> str:
 
 
 def _bloom_positions(v, m: int, k: int) -> list[int]:
+    """The k bit positions of ``v``: the first k big-endian 32-bit words
+    of md5(canonical string), mod m (k <= 4)."""
     import hashlib
+    import struct
 
-    h = hashlib.md5(_canon_probe(v).encode("utf-8")).hexdigest()
-    return [int(h[8 * i : 8 * i + 8], 16) % m for i in range(k)]
+    d = hashlib.md5(_canon_probe(v).encode("utf-8")).digest()
+    return [w % m for w in struct.unpack(">4I", d)[:k]]
 
 
 def bloom_contains(bf: dict, v) -> bool:
@@ -273,46 +276,19 @@ def _bloom_m_for(n_rows: int) -> int:
     return m
 
 
-def _bloom_position_sets(spark, files, cols, mdf, k):
-    """Distinct (_f, _m, _col, _p) bit positions for ALL bloom columns in
-    ONE column-pruned scan: ``stack`` emits a (column-name, md5) row per
-    column per input row (nulls dropped — per-column isNotNull semantics),
-    k md5-slice positions mod the file's m (tiny broadcast (file, m)
-    map), deduped map-side by ``distinct``. One scan + one job however
-    many bloom columns the table declares (guide §1/§5 — the previous
-    per-column loop re-scanned the files and paid one action per
-    column)."""
-    from pyspark.sql import functions as F
+def _bloom_filter(values, m: int, k: int = _BLOOM_K) -> dict:
+    """One manifest bloom entry ({"m", "k", "b64"}) over non-null
+    ``values``: the single packer behind every write path (the
+    :func:`compute_blooms` pass and the snapshot Data Source writer), set
+    with the same :func:`_bloom_positions` that :func:`bloom_contains`
+    probes."""
+    import base64
 
-    pairs = []
-    for c in cols:
-        pairs.extend([F.lit(c), F.md5(F.col(c).cast("string"))])
-    scan = (
-        spark.read.parquet(*files)
-        .select(
-            # input_file_name is a URI; normalize to the os path the
-            # manifest records so the m-lookup join and output match
-            F.url_decode(F.regexp_replace(F.input_file_name(), "^file://", ""))
-            .alias("_f"),
-            F.stack(F.lit(len(cols)), *pairs).alias("_col", "_h"),
-        )
-        .where(F.col("_h").isNotNull())
-        .join(F.broadcast(mdf), F.col("_f") == F.col("_fp"))
-    )
-    return scan.select(
-        "_f",
-        "_m",
-        "_col",
-        F.explode(
-            F.array(
-                *[
-                    F.conv(F.substring("_h", 1 + 8 * i, 8), 16, 10).cast("long")
-                    % F.col("_m")
-                    for i in range(k)
-                ]
-            )
-        ).alias("_p"),
-    ).distinct()
+    bits = bytearray(m >> 3)
+    for v in values:
+        for p in _bloom_positions(v, m, k):
+            bits[p >> 3] |= 1 << (p & 7)
+    return {"m": m, "k": k, "b64": base64.b64encode(bytes(bits)).decode("ascii")}
 
 
 def _check_bloomable(col: str, dtype) -> None:
@@ -333,81 +309,66 @@ def _check_bloomable(col: str, dtype) -> None:
         )
 
 
+def _bloom_partition(cols, k, files):
+    """Task body of :func:`compute_blooms`: for each (key, abspath), read
+    only the bloom columns the file has, size m from its footer row
+    count and pack one filter per column holding a non-null value."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for key, path in files:
+        pf = pq.ParquetFile(path)
+        have = [c for c in cols if c in pf.schema_arrow.names]
+        m = _bloom_m_for(pf.metadata.num_rows)
+        table = pf.read(columns=have)
+        out = {}
+        for c in have:
+            vals = pc.unique(table.column(c)).drop_null().to_pylist()
+            if vals:
+                out[c] = _bloom_filter(vals, m, k)
+        if out:
+            yield key, out
+
+
 def compute_blooms(
     spark: SparkSession,
     files: list[str],
     cols,
     k: int = _BLOOM_K,
 ) -> dict:
-    """{file: {col: {"m", "k", "b64"}}} via ONE distributed pass for ALL
-    columns (r13: previously one scan+job per column). m is sized per
-    file from the parquet footer row count (driver-local footer reads,
-    the ``_file_stats`` pattern), then a single column-pruned scan of
-    (input_file_name, *cols) stacks per-column md5s, computes k
-    md5-slice positions mod that file's m, dedups them map-side
-    (``distinct`` on (file, col, position) — bounded by m entries per
-    file-column regardless of row count), and PACKS THE BITSET
-    EXECUTOR-SIDE via ``applyInPandas``: the driver receives only
-    (file, col, b64) rows of m/8 bytes each, never position sets and
-    never values.
+    """{file: {col: {"m", "k", "b64"}}} via ONE map-only Spark job over
+    the file list: ``min(len(files), defaultParallelism)`` tasks, each
+    reading only the bloom columns of its files with pyarrow and packing
+    the bitsets itself (:func:`_bloom_partition`). No scan plan, no
+    shuffle: the driver receives only m/8-byte bitsets, never values. A
+    (file, column) with no non-null value — or a column the file lacks —
+    gets no entry. Results are keyed by the CALLER'S file strings:
+    manifests may hold relative paths, and Txn.commit keeps blooms by
+    membership in that list (review r8); tasks open the driver-resolved
+    absolute path.
 
     Columns must cast to string identically in Spark and Python: use
     string / integral / boolean columns (the natural merge-key types);
     floats' formatting differs between engines and is not supported."""
-    import base64
-
-    from pyspark.sql import functions as F
-
     if not files:
         return {}
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    file_m: dict[str, int] = {}
-    arrow_schema = None
+    # enforce the docstring's type contract (ADVICE r7) before any job: a
+    # float/timestamp bloom column would record hashes that Spark's CAST
+    # AS STRING probe does NOT reproduce — silent false negatives, i.e.
+    # wrongly pruned files. The first readable footer decides.
     for f in files:
         try:
-            pf = pq.ParquetFile(f)
-            n = pf.metadata.num_rows
-            if arrow_schema is None:
-                arrow_schema = pf.schema_arrow
+            schema = pq.read_schema(f)
         except Exception:
-            n = _BLOOM_M_MAX  # unreadable footer: size for the cap
-        file_m[os.path.abspath(f)] = _bloom_m_for(n)
-
-    def _pack(pdf):
-        import numpy as np
-        import pandas as pd
-
-        m = int(pdf["_m"].iloc[0])
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        p = pdf["_p"].to_numpy()
-        np.bitwise_or.at(bits, p >> 3, (1 << (p & 7)).astype(np.uint8))
-        return pd.DataFrame(
-            {
-                "_f": [pdf["_f"].iloc[0]],
-                "_m": [m],
-                "_col": [pdf["_col"].iloc[0]],
-                "_b64": [base64.b64encode(bits.tobytes()).decode("ascii")],
-            }
-        )
-
-    mdf = local_df(
-        spark, [(f, m) for f, m in file_m.items()], "_fp string, _m long"
-    )
-    # enforce the docstring's type contract (ADVICE r7): a float/timestamp
-    # bloom column would record hashes of Spark's CAST AS STRING, which
-    # Python's str() in bloom_contains does NOT reproduce — silent false
-    # negatives, i.e. wrongly pruned files. Fail loudly instead. The
-    # schema comes from the footers the sizing loop already opened — no
-    # extra Spark read (review r8).
-    if arrow_schema is not None:
-        import pyarrow as pa
-
+            continue
         for c in cols:
-            idx = arrow_schema.get_field_index(c)
+            idx = schema.get_field_index(c)
             if idx < 0:
                 continue
-            t = arrow_schema.field(idx).type
+            t = schema.field(idx).type
             if not (pa.types.is_string(t) or pa.types.is_large_string(t)
                     or pa.types.is_integer(t) or pa.types.is_boolean(t)):
                 raise TypeError(
@@ -415,25 +376,13 @@ def compute_blooms(
                     "only string/integral/boolean columns (Spark CAST AS "
                     "STRING must match Python str() exactly)"
                 )
-    # key results by the CALLER'S file strings: manifests may hold
-    # relative paths, and Txn.commit keeps blooms by membership in that
-    # list — abspath keys would silently drop every bloom (review r8)
-    orig_by_abs = {os.path.abspath(f): f for f in files}
-    out: dict[str, dict] = {}
-    rows = (
-        _bloom_position_sets(spark, files, list(cols), mdf, k)
-        .groupBy("_f", "_m", "_col")
-        .applyInPandas(_pack, "_f string, _m long, _col string, _b64 string")
-        .collect()
-    )
-    for r in rows:
-        key = orig_by_abs.get(os.path.abspath(r["_f"]), r["_f"])
-        out.setdefault(key, {})[r["_col"]] = {
-            "m": int(r["_m"]),
-            "k": k,
-            "b64": r["_b64"],
-        }
-    return out
+        break
+    from functools import partial
+
+    sc = spark.sparkContext
+    todo = [(f, os.path.abspath(f)) for f in dict.fromkeys(files)]
+    rdd = sc.parallelize(todo, min(len(todo), sc.defaultParallelism))
+    return dict(rdd.mapPartitions(partial(_bloom_partition, list(cols), k)).collect())
 
 
 class Txn:
@@ -1295,9 +1244,8 @@ def _read_physical(
     df = reader.parquet(*(m["files"] if files is None else files))
     if with_meta:
         # _metadata.file_path renders URL-ENCODED ("file:/a/has%20space/x")
-        # — verified on this Spark — so strip the scheme AND url_decode,
-        # matching the bloom path's input_file_name normalization; a raw
-        # strip would leave %-escapes that never equal the manifest's os
+        # — verified on this Spark — so strip the scheme AND url_decode;
+        # a raw strip would leave %-escapes that never equal the manifest's os
         # paths and deletion vectors would silently fail open (review r8)
         df = df.select(
             "*",
@@ -2170,7 +2118,7 @@ def compact_snapshot(
       bucket and keep the hive layout, so later scoped merges still
       rewrite only touched buckets;
     - pinned ``stats_cols``/``bloom_cols`` are recomputed for the new
-      files (footer stats driver-side, blooms via the distributed pass).
+      files (footer stats driver-side, blooms in one map-only job).
 
     ``target_files``: plain (non-bucketed) tables coalesce to this many
     files (default: the session's shuffle parallelism).

@@ -30,7 +30,6 @@ missing columns as nulls.
 """
 
 from __future__ import annotations
-import base64
 import os
 import uuid
 from dataclasses import dataclass, field
@@ -471,15 +470,7 @@ class _SnapshotWriter(DataSourceArrowWriter):
             stats = S._file_stats(fpath, self._stats_cols) if self._stats_cols else None
             blooms = {}
             for c, vals in bloom_vals.items():
-                m = S._bloom_m_for(rows)
-                bits = bytearray(m >> 3)
-                for v in vals:
-                    for p in S._bloom_positions(v, m, S._BLOOM_K):
-                        bits[p >> 3] |= 1 << (p & 7)
-                blooms[c] = {
-                    "m": m, "k": S._BLOOM_K,
-                    "b64": base64.b64encode(bytes(bits)).decode(),
-                }
+                blooms[c] = S._bloom_filter(vals, S._bloom_m_for(rows))
                 vals.clear()
             commits.append(
                 _FileCommit(file=fpath, rows=rows, stats=stats, blooms=blooms or None)

@@ -343,48 +343,58 @@ def test_round7_entries_plan_shapes(spark):
     assert "partial" in plan.lower() or "HashAggregate" in plan, plan
 
 
-def test_bloom_build_prunes_scan_and_broadcasts_m_map(spark, tmp_path):
-    """compute_blooms' per-column pass (r7): the parquet scan must be
-    pruned to ONLY the bloom column (building filters for one key never
-    reads the whole row — at 100 TB that is the difference between a
-    1-column and an N-column scan), and the (file, m) sizing map must be
-    BROADCAST (it is n_files rows; shuffling the corpus to join it would
-    dwarf the build). The dedup must partial-aggregate before the
-    exchange (map-side combine bounds shuffle volume by m per file)."""
-    from pyspark.sql import functions as F
+def _zero_column_chunks(path: str, col: str) -> None:
+    """Overwrite every column chunk of ``col`` in a parquet file with
+    zero bytes: a reader that touches the column fails to decode it."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    idx = md.schema.names.index(col)
+    with open(path, "r+b") as fh:
+        for rg in range(md.num_row_groups):
+            cc = md.row_group(rg).column(idx)
+            start = cc.dictionary_page_offset if cc.has_dictionary_page else cc.data_page_offset
+            fh.seek(start)
+            fh.write(b"\0" * cc.total_compressed_size)
+
+
+def test_bloom_build_is_one_map_only_job_reading_bloom_columns(spark, tmp_path):
+    """compute_blooms builds metadata, so it must cost one map-only job
+    whatever the file or column count: two bloom columns over 8 files run
+    exactly ONE Spark job (status store), with zero shuffle bytes and at
+    most defaultParallelism tasks. Each task reads only the bloom columns:
+    the wide non-bloom column is zeroed on disk, so any task that read it
+    would fail, and the bitsets still equal those of the intact files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from stellar_etl_airflow_spark.sinks import snapshots as S
 
-    p = str(tmp_path / "t")
-    spark.range(1000).select(
-        F.md5(F.col("id").cast("string")).alias("h"),
-        F.col("id").alias("v"),
-        (F.col("id") % 7).alias("w"),
-    ).repartition(4, "h").write.parquet(p)
-    files = [
-        os.path.join(p, f) for f in sorted(os.listdir(p)) if f.endswith(".parquet")
-    ]
-    mdf = spark.createDataFrame(
-        [(os.path.abspath(f), 8192) for f in files], "_fp string, _m long"
-    )
-    plan = _physical(S._bloom_position_sets(spark, files, ["h"], mdf, 4))
-    m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
-    assert m and [c.split(":")[0] for c in m.group(1).split(",")] == ["h"], plan
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan, plan
-    # distinct renders as HashAggregate / Exchange / HashAggregate —
-    # the lower aggregate IS the map-side combine
-    assert plan.count("HashAggregate") >= 2 and "Exchange hashpartitioning" in plan, plan
-    # r13: ALL bloom columns ride ONE scan (stack) — the read schema is
-    # pruned to exactly the bloom columns, still no wide-row read, and
-    # the whole build stays a single query (one job per publish, not one
-    # per column)
-    plan2 = _physical(S._bloom_position_sets(spark, files, ["h", "w"], mdf, 4))
-    m2 = re.search(r"ReadSchema: struct<([^>]*)>", plan2)
-    assert m2 and sorted(
-        c.split(":")[0] for c in m2.group(1).split(",")
-    ) == ["h", "w"], plan2
-    assert "SortMergeJoin" not in plan2 and "CartesianProduct" not in plan2, plan2
+    from .spark_jobs import jobs_of
+
+    files = []
+    for i in range(8):
+        f = str(tmp_path / f"part-{i}.parquet")
+        ids = list(range(i * 500, (i + 1) * 500))
+        pq.write_table(pa.table({
+            "h": [f"{x:032x}" for x in ids],
+            "w": [x % 7 for x in ids],
+            "pad": ["x" * 200 + str(x) for x in ids],
+        }), f)
+        files.append(f)
+    intact = S.compute_blooms(spark, files, ["h", "w"])
+    for f in files:
+        _zero_column_chunks(f, "pad")
+    with pytest.raises(Exception):
+        pq.read_table(files[0])  # the zeroed column really is unreadable
+
+    out = {}
+    jobs = jobs_of(spark, lambda: out.update(S.compute_blooms(spark, files, ["h", "w"])))
+    assert out == intact and set(out) == set(files)
+    assert all(set(cols) == {"h", "w"} for cols in out.values())
+    assert len(jobs) == 1, jobs
+    assert jobs[0]["shuffle_bytes"] == 0, jobs
+    assert jobs[0]["tasks"] == min(len(files), spark.sparkContext.defaultParallelism), jobs
 
 
 def test_t42_bigram_backoff_plan_shape(spark):
