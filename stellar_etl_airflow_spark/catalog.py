@@ -38,7 +38,7 @@ def register_snapshot_table(
     ``version``). The catalog twin of ``load_warehouse`` for
     manifest-backed tables; the internal bucket column is hidden like
     PART_COL is for directory tables."""
-    from .operators.merge import BUCKET_COL
+    from .sinks.snapshots import BUCKET_COL
     from .sources import snapshot_source
 
     snapshot_source.register(spark)

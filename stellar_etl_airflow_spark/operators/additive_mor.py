@@ -48,49 +48,16 @@ class NotAdditiveMorTable(ValueError):
     so any rewording silently flipped its behavior)."""
 
 
-def _props_path(path: str) -> str:
-    return os.path.join(S._snap_dir(path), _PROPS)
-
-
-def _load_props(path: str) -> dict | None:
-    import json
-
-    try:
-        with open(_props_path(path)) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return None
-
-
 def _check_or_pin(path: str, keys, sum_cols) -> None:
-    import json
-
-    props = _load_props(path)
-    if props is None:
-        os.makedirs(S._snap_dir(path), exist_ok=True)
-        # exclusive CREATE, not check-then-write (ADVICE r10): two
-        # concurrent FIRST writers with different key/sum splits would
-        # otherwise each validate against their own pin and the last
-        # atomic replace would silently win — the loser's deltas then
-        # fold under the wrong split. The link-claim makes exactly one
-        # writer the pinner; everyone else falls through and validates
-        # against the winner's pin like any later writer.
-        try:
-            S._atomic_write_exclusive(
-                _props_path(path),
-                json.dumps({"keys": list(keys), "sum_cols": list(sum_cols)}),
-            )
-            return
-        except S.ConcurrentWriteError:
-            props = _load_props(path)
-            if props is None:  # pinner vanished between link-fail and read
-                raise
-    for name, got in (("keys", list(keys)), ("sum_cols", list(sum_cols))):
-        if props.get(name) != got:
-            raise ValueError(
-                f"{path} is an additive-MoR table with {name}={props.get(name)!r}; "
-                f"got {got!r}"
-            )
+    # a writer whose split differs from the pin would fold its deltas
+    # under the wrong split
+    S.pin_table_props(
+        path,
+        {"keys": list(keys), "sum_cols": list(sum_cols)},
+        check=("keys", "sum_cols"),
+        name=_PROPS,
+        what="is an additive-MoR table",
+    )
 
 
 def write_delta(
@@ -161,7 +128,7 @@ def read_additive(spark: SparkSession, path: str, version: int | None = None) ->
     delta (and any previously folded base rows — a fold's output is
     itself just rows that sum). Time travel works: ``version`` folds
     exactly that version's pile."""
-    props = _load_props(path)
+    props = S.load_table_props(path, _PROPS)
     if props is None:
         raise NotAdditiveMorTable(f"{path} is not an additive-MoR table (no {_PROPS})")
     keys, sum_cols = props["keys"], props["sum_cols"]
@@ -208,7 +175,7 @@ def fold_additive(
     ``max_refolds``."""
     if max_retries is not None:
         max_refolds = max_retries
-    props = _load_props(path)
+    props = S.load_table_props(path, _PROPS)
     if props is None:
         raise NotAdditiveMorTable(f"{path} is not an additive-MoR table (no {_PROPS})")
     last: Exception | None = None

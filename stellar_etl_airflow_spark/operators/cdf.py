@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sinks import snapshots as S
-from .merge import BUCKET_COL, load_table_props
+from ..sinks.snapshots import BUCKET_COL, load_table_props
 
 #: change-type column name, matching Delta CDF's reader contract
 CHANGE_TYPE_COL = "_change_type"

@@ -242,19 +242,6 @@ def clone_dataset(
     return results
 
 
-def _is_bucketed(path: str) -> bool:
-    from ..sinks import snapshots as S
-    from .merge import BUCKET_COL, load_table_props
-
-    # resolve=False: this only scans file name strings — eagerly inlining
-    # stats/bloom shard sidecars here would read every shard JSON on a
-    # large table for nothing (review r8, same rule as delete_where_dv)
-    return load_table_props(path) is not None or any(
-        f"{BUCKET_COL}=" in f
-        for f in S.read_manifest(path, resolve=False)["files"]
-    )
-
-
 def rename_state_column(spark: SparkSession, path: str, old: str, new: str) -> int:
     """RENAME COLUMN on ANY snapshot table — bucketed ``apply_changes``
     state tables included (r8, VERDICT r7 ask #5). Plain tables get the
@@ -266,7 +253,7 @@ def rename_state_column(spark: SparkSession, path: str, old: str, new: str) -> i
     publishing the rename."""
     from ..sinks import snapshots as S
 
-    if _is_bucketed(path):
+    if S.is_bucketed(path):
         S.unbucket_snapshot(spark, path)
     return S.rename_column(path, old, new)
 
@@ -275,7 +262,7 @@ def drop_state_column(spark: SparkSession, path: str, name: str) -> int:
     """DROP COLUMN twin of :func:`rename_state_column`."""
     from ..sinks import snapshots as S
 
-    if _is_bucketed(path):
+    if S.is_bucketed(path):
         S.unbucket_snapshot(spark, path)
     return S.drop_column(path, name)
 
@@ -292,6 +279,6 @@ def delete_state_rows_dv(
     rewrites affected buckets anyway)."""
     from ..sinks import snapshots as S
 
-    if _is_bucketed(path):
+    if S.is_bucketed(path):
         S.unbucket_snapshot(spark, path)
     return S.delete_where_dv(spark, path, where, max_rows)

@@ -14,8 +14,10 @@ whose file count exceeds the bin-packed target, sized from the leaf's
 actual bytes. Optional ``sort_cols`` applies ``sortWithinPartitions``
 (z-order-lite clustering: range-correlated columns end up co-located, so
 min/max row-group pruning works after compaction). Each leaf rewrite is
-atomic via the same sibling-rename swap MERGE uses (safe_overwrite), so a
-crash mid-compaction never loses a partition.
+atomic via the sibling-rename swap of ``safe_overwrite``, so a crash
+mid-compaction never loses a partition (``Warehouse.recover``). This is
+for PLAIN parquet directories only; snapshot tables are refused and
+compact with ``snapshots.compact_snapshot``.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ..sinks.snapshots import latest_version
 from .merge import safe_overwrite
 
 
@@ -54,9 +57,15 @@ def compact_table(
     ``min_files`` files are left untouched. Returns
     ``{leaf: (files_before, files_after)}`` for the rewritten leaves.
 
-    Never point this at a manifest-snapshot table: an in-place rewrite
-    corrupts every published manifest. ``snapshots.compact_snapshot`` is
-    the OPTIMIZE for those."""
+    Raises ``ValueError`` on a manifest-snapshot table: an in-place
+    rewrite would delete files every published manifest lists.
+    ``snapshots.compact_snapshot`` is the OPTIMIZE for those."""
+    if latest_version(path) is not None:
+        raise ValueError(
+            f"{path} is a snapshot table; compact it with "
+            "snapshots.compact_snapshot (an in-place rewrite would delete "
+            "files its manifests list)"
+        )
     results: dict[str, tuple[int, int]] = {}
     target = target_file_mb * 1024 * 1024
     for leaf in _leaf_dirs(path):

@@ -12,26 +12,29 @@ and a dedup-append variant (:152-181):
   WHEN NOT MATCHED THEN INSERT  (insert-unique)
 
 On a Delta/Iceberg deployment these are literal ``MERGE INTO`` statements;
-this module implements the identical semantics over plain parquet as
+this module implements the identical semantics over the manifest snapshot
+format (sinks/snapshots.py) as
 
   target(kept) = target left_anti changes(keys)
   result       = kept UNION latest-change-per-key WHERE NOT deleted
 
-which is exactly the copy-on-write plan a MERGE compiles to. The rewrite
-is atomic via write-temp-then-swap (``safe_overwrite``).
+which is exactly the copy-on-write plan a MERGE compiles to.
 
 At 100 TB a full-table rewrite per 10-minute change batch is the scale
-killer (BigQuery's MERGE only rewrites matched blocks). The scoped variant
-(:func:`merge_upsert_scoped`) removes it without a transactional table
-format: the state table is hash-bucket partitioned on the merge key
-(``_p = pmod(xxhash64(keys), n_buckets)``), so every key's current row
-lives in exactly one known partition, a change batch touches only the
-buckets its keys hash to, and ONLY those leaf directories are rewritten —
-untouched partitions keep their files byte-identical. Each touched leaf
-swaps via the same backup-rename protocol as ``safe_overwrite``; a crash
-mid-swap is recoverable per-partition (``Warehouse.recover``), and because
-MERGE application is idempotent (latest-version-per-key wins), re-running
-the interrupted batch converges to the same state.
+killer (BigQuery's MERGE only rewrites matched blocks). The one upsert
+path, :func:`apply_changes`, removes it: the state table is hash-bucket
+partitioned on the merge key (``_p = pmod(xxhash64(keys), n_buckets)``),
+so every key's current row lives in exactly one known partition, a change
+batch touches only the buckets its keys hash to, and ONLY those buckets
+are rewritten — as new immutable files the next manifest lists, committed
+through ``snapshots.Txn``. Untouched buckets keep their files
+byte-identical, every published version stays readable, and a crash
+before the commit leaves the table at the prior version with orphan
+files only; re-running the batch (or passing ``txn_id``) converges.
+
+``safe_overwrite``/``recover_overwrite`` (bottom) are the backup-and-rename
+swap for PLAIN parquet directories that are not snapshot tables
+(``maintenance.compact_table``, ``jobs.cleanup_meta``, ``Warehouse.recover``).
 
 Changes within one batch may contain several versions of a key; the
 MERGE source is first collapsed to the latest version per key with the
@@ -44,12 +47,15 @@ from __future__ import annotations
 import os
 import shutil
 import threading
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from ..session import empty_df
+from ..sinks import snapshots as S
+from ..sinks.snapshots import BUCKET_COL, key_bucket, load_table_props  # noqa: F401
 
 
 def latest_changes(
@@ -59,109 +65,6 @@ def latest_changes(
 ) -> DataFrame:
     w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*[F.col(c).desc() for c in order_cols])
     return changes.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
-def merge_upsert(
-    target: DataFrame,
-    changes: DataFrame,
-    keys: tuple[str, ...],
-    deleted_col: str = "deleted",
-    order_cols: tuple[str, ...] = ("last_modified_ledger", "ledger_entry_change"),
-) -> DataFrame:
-    """Apply a change batch to the current state. Column sets must match
-    (the reference generates the UPDATE/INSERT column list from the pinned
-    schema, build_apply_gcs_changes_to_bq_task.py:42-75, including the
-    reserved-word escape for ``order``/``from``/``to`` — moot here because
-    DataFrame columns are never re-parsed as SQL)."""
-    cols = target.columns
-    src = latest_changes(changes.select(*cols), keys, order_cols)
-    kept = target.join(src.select(*keys), list(keys), "left_anti")
-    applied = src.filter(~F.coalesce(F.col(deleted_col), F.lit(False)))
-    return kept.unionByName(applied)
-
-
-#: partition column for hash-bucketed state tables (scoped MERGE)
-BUCKET_COL = "_p"
-
-
-def key_bucket(keys: tuple[str, ...], n_buckets: int):
-    """Stable hash bucket of the merge key — the partition value a key's
-    current row always lives in."""
-    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
-
-
-def merge_upsert_scoped(
-    spark: SparkSession,
-    changes: DataFrame,
-    path: str,
-    keys: tuple[str, ...],
-    n_buckets: int = 64,
-    deleted_col: str = "deleted",
-    order_cols: tuple[str, ...] = ("last_modified_ledger", "ledger_entry_change"),
-) -> list[int]:
-    """Partition-scoped MERGE over a hash-bucketed parquet state table.
-
-    Reference semantics: build_apply_gcs_changes_to_bq_task.py:116-149
-    (MATCHED+deleted -> DELETE, MATCHED -> UPDATE, NOT MATCHED -> INSERT),
-    with BigQuery's targeted-rewrite cost profile: only the ``_p`` buckets
-    containing changed keys are read and rewritten. ``n_buckets`` fixes the
-    layout for the table's lifetime (storing it in a table manifest is the
-    caller's concern); at 100 TB size it so one bucket ~ a few GB.
-
-    Returns the sorted list of bucket values rewritten.
-    """
-    # persist the bucketed batch: the touched-bucket probe and the merged
-    # write both consume it; uncached, each re-runs the caller's whole
-    # upstream plan (batch-sized, unpersisted before return)
-    ch = changes.withColumn(BUCKET_COL, key_bucket(keys, n_buckets)).persist()
-    touched = sorted(r[0] for r in ch.select(BUCKET_COL).distinct().collect())
-    if not touched:
-        ch.unpersist()
-        return []
-    os.makedirs(path, exist_ok=True)
-    leaf = lambda root, v: os.path.join(root, f"{BUCKET_COL}={v}")  # noqa: E731
-    # a bucket emptied by a previous batch is a file-less dir — treat it as
-    # absent (reading it would fail schema inference)
-    existing = [
-        v
-        for v in touched
-        if os.path.isdir(leaf(path, v))
-        and any(f.endswith(".parquet") for f in os.listdir(leaf(path, v)))
-    ]
-    if existing:
-        tgt = spark.read.option("basePath", path).parquet(*[leaf(path, v) for v in existing])
-        extra = [c for c in tgt.columns if c not in set(ch.columns)]
-        if extra:
-            # a subset batch would silently DROP the target-only columns
-            # from every rewritten bucket (the versioned core raises for
-            # exactly this; review r8 added the same guard here)
-            ch.unpersist()
-            raise ValueError(
-                f"{path}: change batch columns {sorted(ch.columns)} lack "
-                f"table columns {sorted(extra)}; rewriting would drop them"
-            )
-        # basePath keeps the _p column; align column order with changes
-        tgt = tgt.select(*ch.columns)
-    else:
-        tgt = empty_df(spark, ch.schema)
-    merged = merge_upsert(tgt, ch, keys, deleted_col, order_cols)
-
-    # one job writes every touched bucket into a dot-prefixed sibling stage
-    # (invisible to Spark partition discovery), then each leaf swaps in via
-    # the backup-rename protocol
-    parent = os.path.dirname(os.path.abspath(path)) or "."
-    stage = os.path.join(parent, f".merge-stage-{uuid.uuid4().hex}")
-    try:
-        merged.write.partitionBy(BUCKET_COL).parquet(stage)
-        for v in touched:
-            # a bucket whose rows were all deleted produces no stage output;
-            # an empty leaf dir keeps the swap uniform and scans clean
-            os.makedirs(leaf(stage, v), exist_ok=True)
-            _swap_dir(leaf(stage, v), leaf(path, v))
-    finally:
-        ch.unpersist()
-        shutil.rmtree(stage, ignore_errors=True)
-    return touched
 
 
 def _txn_replay(path: str, txn_id: str | None) -> tuple[int, list[int]] | None:
@@ -174,109 +77,12 @@ def _txn_replay(path: str, txn_id: str | None) -> tuple[int, list[int]] | None:
     ``(recorded_version, [])`` or None."""
     if txn_id is None:
         return None
-    from ..sinks import snapshots as S
-
     if S.latest_version(path) is None:
         return None
     txns = S.read_manifest(path, resolve=False).get("txns") or {}
     if txn_id in txns:
         return int(txns[txn_id]), []
     return None
-
-
-def merge_upsert_versioned(
-    spark: SparkSession,
-    changes: DataFrame,
-    path: str,
-    keys: tuple[str, ...],
-    n_buckets: int = 64,
-    deleted_col: str = "deleted",
-    order_cols: tuple[str, ...] = ("last_modified_ledger", "ledger_entry_change"),
-    allow_schema_evolution: bool = False,
-    txn_id: str | None = None,
-) -> tuple[int, list[int]]:
-    """Scoped MERGE with full MVCC: targeted-rewrite cost AND time travel.
-
-    Like ``apply_changes``/``merge_additive_versioned``, an existing
-    table's PINNED layout wins: ``n_buckets`` is adopted from the table
-    props and mismatched ``keys`` are rejected — without this, a direct
-    call with the default bucket count against a table pinned at another
-    would hash the same key into two different buckets and silently
-    duplicate state (caught by tests/test_compact_snapshot.py's
-    evolution path).
-
-    ``allow_schema_evolution=True`` permits additive evolution (the
-    reference's BigQuery tables evolve via ALLOW_FIELD_ADDITION — see
-    SCHEMA_EVOLUTION_EXTRAS in sinks/avro_defs.py): new change columns
-    are added to rewritten rows. Columns the batch LACKS follow Delta
-    ``UPDATE SET *`` semantics: a matched key KEEPS its current value
-    (the update only sets the columns the batch carries); an inserted
-    key gets NULL. Untouched buckets keep their old-schema files;
-    ``read_snapshot`` merges schemas on read, surfacing missing columns
-    as NULL. Without the flag, a column-set mismatch raises.
-
-    The Delta-style composition of :func:`merge_upsert_scoped` with the
-    manifest log (sinks/snapshots.py): touched buckets write NEW immutable
-    files under their ``_p=`` dirs (nothing is deleted or renamed), and
-    the next manifest lists untouched buckets' current files plus the new
-    files. Readers of any published version are never torn; an old version
-    is still exactly readable after any number of merges (until
-    ``vacuum``); a crash before publication leaves the table at the prior
-    version with only orphan files. Reference semantics unchanged:
-    build_apply_gcs_changes_to_bq_task.py:116-149. Read the table with
-    ``snapshots.read_snapshot`` — raw directory scans would see every
-    historical file.
-
-    Returns ``(published_version, touched_buckets)``.
-    """
-    replay = _txn_replay(path, txn_id)
-    if replay is not None:
-        return replay
-    props = load_table_props(path)
-    if props is not None:
-        pinned_keys = props.get("keys")
-        if pinned_keys is not None and pinned_keys != list(keys):
-            raise ValueError(f"{path} was created with keys={pinned_keys!r}; got {list(keys)!r}")
-        n_buckets = int(props.get("n_buckets", n_buckets))
-    else:
-        # pin the layout on FIRST use like apply_changes/additive do
-        # (review r8): without the pin, a later direct call with a
-        # different n_buckets would hash the same key into another
-        # bucket and silently duplicate state — the exact failure the
-        # docstring documents the pin preventing
-        save_table_props(
-            path,
-            {"n_buckets": n_buckets, "keys": list(keys),
-             "deleted_col": deleted_col, "order_cols": list(order_cols)},
-        )
-    batch_cols = set(changes.columns)
-
-    def combine(tgt: DataFrame, ch: DataFrame) -> DataFrame:
-        # columns the batch did not carry at all (added by alignment as
-        # NULL): matched keys must keep their current value, not be
-        # clobbered — the Delta UPDATE SET * contract
-        carried = [c for c in tgt.columns if c not in batch_cols and c != BUCKET_COL]
-        if not carried:
-            return merge_upsert(tgt, ch, keys, deleted_col, order_cols)
-        src = latest_changes(ch.select(*tgt.columns), keys, order_cols)
-        tvals = tgt.select(*keys, *[F.col(c).alias(f"_tv_{c}") for c in carried])
-        src = src.join(tvals, list(keys), "left")
-        for c in carried:
-            src = src.withColumn(c, F.col(f"_tv_{c}")).drop(f"_tv_{c}")
-        kept = tgt.join(src.select(*keys), list(keys), "left_anti")
-        applied = src.filter(~F.coalesce(F.col(deleted_col), F.lit(False)))
-        return kept.unionByName(applied.select(*tgt.columns))
-
-    return _merge_versioned_core(
-        spark,
-        changes,
-        path,
-        keys,
-        n_buckets,
-        combine,
-        evolve=allow_schema_evolution,
-        txn_id=txn_id,
-    )
 
 
 def merge_additive_versioned(
@@ -294,7 +100,7 @@ def merge_additive_versioned(
     current batch by batch, the incremental-dbt / streaming-counter
     pattern the reference's dbt marts recompute from scratch).
 
-    Same MVCC bucket machinery as :func:`merge_upsert_versioned` (only
+    Same MVCC bucket machinery as :func:`apply_changes` (only
     touched buckets are read and rewritten; every version stays
     readable), but the combine is ``union -> groupBy keys -> sum``.
     ``batch`` must carry exactly ``keys + sum_cols``. Use exact-summable
@@ -313,19 +119,12 @@ def merge_additive_versioned(
     # pin the layout exactly like apply_changes: a changed n_buckets
     # between batches would scatter keys across partitions and silently
     # split counters into duplicate rows
-    props = load_table_props(path)
-    if props is None:
-        save_table_props(
-            path,
-            {"n_buckets": n_buckets, "keys": list(keys), "sum_cols": list(sum_cols),
-             "additive": True},
-        )
-    else:
-        for pname, got in (("keys", list(keys)), ("sum_cols", list(sum_cols))):
-            pinned = props.get(pname, got)
-            if pinned != got:
-                raise ValueError(f"{path} was created with {pname}={pinned!r}; got {got!r}")
-        n_buckets = int(props["n_buckets"])
+    pin = S.pin_table_props(
+        path,
+        {"n_buckets": n_buckets, "keys": list(keys), "sum_cols": list(sum_cols),
+         "additive": True},
+        check=("keys", "sum_cols"),
+    )
 
     def combine(tgt: DataFrame, ch: DataFrame) -> DataFrame:
         both = tgt.unionByName(ch)
@@ -337,7 +136,7 @@ def merge_additive_versioned(
 
     # additive combines are NOT replay-idempotent: pass ``txn_id`` under
     # any at-least-once delivery (streaming foreachBatch, retried jobs)
-    return _merge_versioned_core(spark, batch, path, keys, n_buckets, combine, txn_id=txn_id)
+    return _merge_versioned_core(spark, batch, path, keys, pin, combine, txn_id=txn_id)
 
 
 def _align_schemas(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -398,7 +197,7 @@ def _merge_versioned_core(
     changes: DataFrame,
     path: str,
     keys: tuple[str, ...],
-    n_buckets: int,
+    pin: dict,
     combine,
     evolve: bool = False,
     txn_id: str | None = None,
@@ -415,21 +214,18 @@ def _merge_versioned_core(
     publishes (global progress), so ``retries`` bounds the writer COUNT a
     table tolerates, not time — 10 matches Delta's default attempt budget; a short
     linear backoff breaks lockstep re-collisions. ``retries=0`` restores
-    raise-on-first-conflict."""
-    import time as _time
-
-    from ..sinks import snapshots as S
-
+    raise-on-first-conflict. ``pin`` is the table's layout pin
+    (:func:`snapshots.pin_table_props`)."""
     for attempt in range(retries + 1):
         try:
             return _merge_versioned_once(
-                spark, changes, path, keys, n_buckets, combine,
+                spark, changes, path, keys, pin, combine,
                 evolve=evolve, txn_id=txn_id,
             )
         except S.ConcurrentWriteError:
             if attempt == retries:
                 raise
-            _time.sleep(0.05 * (attempt + 1))
+            time.sleep(0.05 * (attempt + 1))
     raise AssertionError("unreachable")
 
 
@@ -438,7 +234,7 @@ def _merge_versioned_once(
     changes: DataFrame,
     path: str,
     keys: tuple[str, ...],
-    n_buckets: int,
+    pin: dict,
     combine,
     evolve: bool = False,
     txn_id: str | None = None,
@@ -456,8 +252,7 @@ def _merge_versioned_once(
     from (a replayed batch costs a manifest read, not a bucket rewrite).
     The ledger survives merges and clones; a plain overwrite_versioned
     resets it (new table contents, new lineage)."""
-    from ..sinks import snapshots as S
-
+    n_buckets = int(pin["n_buckets"])
     os.makedirs(path, exist_ok=True)
     if S.latest_version(path) is None:
         # bootstrap: adopt whatever bucketed files already exist. Two
@@ -622,17 +417,10 @@ def _merge_versioned_once(
                 empty_drift = True
         tgt = empty_df(spark, ch.schema)
     merged = combine(tgt, ch)
-    # stats/bloom pins come from props, falling back to the manifest's
-    # (ADVICE r7, same rule as compact_snapshot): a table bootstrapped
-    # via overwrite_versioned(stats_cols=...) has manifest pins but no
-    # props file. Untouched buckets' files keep their recorded values;
-    # only the newly written files read footers and get blooms.
-    props = load_table_props(path) or {}
-    t.set(
-        base=path,
-        stats_cols=props.get("stats_cols") or m.get("stats_cols"),
-        bloom_cols=props.get("bloom_cols") or m.get("bloom_cols"),
-    )
+    # untouched buckets' files keep their recorded stats/blooms; only
+    # the newly written files read footers and get blooms
+    stats_cols, bloom_cols = S.index_pins(path, m, pin)
+    t.set(base=path, stats_cols=stats_cols, bloom_cols=bloom_cols)
     # once evolved, later versions keep mixing schemas (old keep-files
     # persist) until a full rewrite
     if evolve or empty_drift:
@@ -690,52 +478,6 @@ def _merge_versioned_once(
     return version, touched if t.committed else []
 
 
-def _swap_dir(src: str, dst: str) -> None:
-    """Atomically replace ``dst`` with ``src`` (same-filesystem renames),
-    leaving a ``.bak-`` sibling during the non-atomic window — the same
-    crash-recovery contract as :func:`safe_overwrite`."""
-    old = backup_path(dst)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(dst):
-        os.rename(dst, old)
-    os.rename(src, dst)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
-#: table-properties file, beside the snapshot manifests. Pins the physical
-#: layout parameters a state table was created with.
-_PROPS_FILE = "_props.json"
-
-
-def _props_path(path: str) -> str:
-    from ..sinks import snapshots as S
-
-    return os.path.join(S._snap_dir(path), _PROPS_FILE)
-
-
-def load_table_props(path: str) -> dict | None:
-    """Layout properties pinned at table creation (``n_buckets``, merge
-    ``keys``), or None for a table that has never been merged into."""
-    import json
-
-    try:
-        with open(_props_path(path)) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return None
-
-
-def save_table_props(path: str, props: dict) -> None:
-    import json
-
-    from ..sinks import snapshots as S
-
-    os.makedirs(S._snap_dir(path), exist_ok=True)
-    S._atomic_write(_props_path(path), json.dumps(props))
-
-
 def apply_changes(
     spark: SparkSession,
     changes: DataFrame,
@@ -749,65 +491,75 @@ def apply_changes(
     bloom_cols: tuple[str, ...] = (),
     allow_schema_evolution: bool = False,
 ) -> tuple[int, list[int]]:
-    """THE default state-table apply path: scoped + MVCC merge
-    (:func:`merge_upsert_versioned`) with the bucket layout pinned in the
-    table's properties file.
+    """THE state-table upsert: scoped MERGE with full MVCC —
+    targeted-rewrite cost AND time travel.
 
     The reference applies every 10-minute change batch with a BigQuery
     MERGE (build_apply_gcs_changes_to_bq_task.py:116-149) whose cost is
-    proportional to the matched blocks, not the table. This wrapper gives
-    the same cost profile by default: first use pins ``(keys, n_buckets)``
-    into ``_snapshots/_props.json``; every later batch loads the pinned
-    ``n_buckets`` (a changed bucket count would scatter keys across
-    partitions and silently duplicate state) and rejects mismatched keys.
-    Read the table with ``snapshots.read_snapshot``.
+    proportional to the matched blocks, not the table. Touched buckets
+    write NEW immutable files under their ``_p=`` dirs (nothing is
+    deleted or renamed), and the next manifest lists untouched buckets'
+    current files plus the new files. Readers of any published version
+    are never torn; an old version stays exactly readable after any
+    number of merges (until ``vacuum``); a crash before publication
+    leaves the table at the prior version with only orphan files. Read
+    the table with ``snapshots.read_snapshot`` — raw directory scans
+    would see every historical file.
+
+    First use pins ``(keys, n_buckets, deleted_col, order_cols,
+    stats_cols, bloom_cols)`` into ``_snapshots/_props.json``
+    (:func:`snapshots.pin_table_props`, an exclusive create). Every
+    later batch adopts the pinned ``n_buckets`` — a changed bucket count
+    would hash the same key into two buckets and silently duplicate
+    state — and rejects a mismatched ``keys``, ``deleted_col`` or
+    ``order_cols``, which would change latest-row selection and delete
+    handling mid-table. ``stats_cols`` are advisory manifest [min, max]
+    columns for ``scan_snapshot`` pruning; ``bloom_cols`` get per-file
+    bloom filters for equality pruning on hash-like keys.
 
     ``allow_schema_evolution=True`` is the reference's
-    ALLOW_FIELD_ADDITION on the UPSERT path (r12 — the append path is
-    q54's surface): a change batch carrying NEW columns evolves the
-    table additively through :func:`merge_upsert_versioned`'s evolve
-    semantics — untouched rows read the new columns as NULL, matched
-    rows take the batch's values (Delta ``UPDATE SET *``).
+    ALLOW_FIELD_ADDITION on the upsert path (the reference's BigQuery
+    tables evolve that way — see SCHEMA_EVOLUTION_EXTRAS in
+    sinks/avro_defs.py): new change columns are added to rewritten rows.
+    Columns the batch LACKS follow Delta ``UPDATE SET *`` semantics: a
+    matched key KEEPS its current value (the update only sets the
+    columns the batch carries); an inserted key gets NULL. Untouched
+    buckets keep their old-schema files; ``read_snapshot`` merges
+    schemas on read, surfacing missing columns as NULL. Without the
+    flag, a column-set mismatch raises.
 
     Returns ``(published_version, touched_buckets)``.
     """
     replay = _txn_replay(path, txn_id)
     if replay is not None:
         return replay
-    props = load_table_props(path)
-    if props is None:
-        save_table_props(
-            path,
-            {
-                "n_buckets": n_buckets,
-                "keys": list(keys),
-                "deleted_col": deleted_col,
-                "order_cols": list(order_cols),
-                # advisory manifest-stats columns for scan_snapshot
-                # pruning; first use pins them like the layout params
-                "stats_cols": list(stats_cols),
-                # per-file bloom filters for equality pruning on the
-                # merge keys (hash-like: [min,max] can't prune them)
-                "bloom_cols": list(bloom_cols),
-            },
-        )
-    else:
-        # every pinned merge-semantics parameter is validated, not just the
-        # layout: silently switching deleted_col/order_cols would change
-        # latest-row selection and delete handling mid-table
-        for pname, got in (
-            ("keys", list(keys)),
-            ("deleted_col", deleted_col),
-            ("order_cols", list(order_cols)),
-        ):
-            pinned = props.get(pname, got)
-            if pinned != got:
-                raise ValueError(f"{path} was created with {pname}={pinned!r}; got {got!r}")
-        n_buckets = int(props["n_buckets"])
-    return merge_upsert_versioned(
-        spark, changes, path, keys, n_buckets=n_buckets,
-        deleted_col=deleted_col, order_cols=order_cols, txn_id=txn_id,
-        allow_schema_evolution=allow_schema_evolution,
+    pin = S.pin_table_props(
+        path,
+        {"n_buckets": n_buckets, "keys": list(keys), "deleted_col": deleted_col,
+         "order_cols": list(order_cols), "stats_cols": list(stats_cols),
+         "bloom_cols": list(bloom_cols)},
+        check=("keys", "deleted_col", "order_cols"),
+    )
+    batch_cols = set(changes.columns)
+
+    def combine(tgt: DataFrame, ch: DataFrame) -> DataFrame:
+        src = latest_changes(ch.select(*tgt.columns), keys, order_cols)
+        # columns the batch did not carry at all (added by alignment as
+        # NULL): matched keys must keep their current value, not be
+        # clobbered — the Delta UPDATE SET * contract
+        carried = [c for c in tgt.columns if c not in batch_cols and c != BUCKET_COL]
+        if carried:
+            tvals = tgt.select(*keys, *[F.col(c).alias(f"_tv_{c}") for c in carried])
+            src = src.join(tvals, list(keys), "left")
+            for c in carried:
+                src = src.withColumn(c, F.col(f"_tv_{c}")).drop(f"_tv_{c}")
+        kept = tgt.join(src.select(*keys), list(keys), "left_anti")
+        applied = src.filter(~F.coalesce(F.col(deleted_col), F.lit(False)))
+        return kept.unionByName(applied)
+
+    return _merge_versioned_core(
+        spark, changes, path, keys, pin, combine,
+        evolve=allow_schema_evolution, txn_id=txn_id,
     )
 
 

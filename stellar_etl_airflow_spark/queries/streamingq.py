@@ -788,7 +788,7 @@ def q54_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     files; ``read_snapshot`` schema-merges on read, so rows whose latest
     change came from batch 1 surface ``src IS NULL`` while batch-2 rows
     carry it — exactly the FULL-OUTER semantics the oracle states."""
-    from ..operators.merge import merge_upsert_versioned
+    from ..operators.merge import apply_changes
     from ..sinks.snapshots import read_snapshot
 
     (ev,) = tables(spark, sf_dir, "events")
@@ -803,10 +803,10 @@ def q54_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = os.path.join(tempfile.gettempdir(), f"q54-state-{uuid.uuid4().hex[:8]}")
     try:
-        merge_upsert_versioned(
+        apply_changes(
             spark, b1, path, ("user_id",), n_buckets=8, order_cols=("ts", "event_id")
         )
-        merge_upsert_versioned(
+        apply_changes(
             spark, b2, path, ("user_id",), n_buckets=8, order_cols=("ts", "event_id"),
             allow_schema_evolution=True,
         )

@@ -102,6 +102,82 @@ def _atomic_write_exclusive(target: str, payload: str) -> None:
             pass
 
 
+#: partition column of hash-bucketed merge tables: a key's current row
+#: always lives under ``_p=<key_bucket>``
+BUCKET_COL = "_p"
+
+#: layout pin of a merge table (``n_buckets``, merge ``keys`` and the
+#: merge-semantics/stats parameters it was created with), beside the
+#: manifests
+_PROPS_FILE = "_props.json"
+
+
+def key_bucket(keys: tuple[str, ...], n_buckets: int):
+    """Stable hash bucket of the merge key — the partition value a key's
+    current row always lives in."""
+    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
+
+
+def _props_path(path: str, name: str = _PROPS_FILE) -> str:
+    return os.path.join(_snap_dir(path), name)
+
+
+def load_table_props(path: str, name: str = _PROPS_FILE) -> dict | None:
+    """The table's layout pin, or None for a table never merged into."""
+    try:
+        with open(_props_path(path, name)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
+def pin_table_props(
+    path: str, props: dict, check, name: str = _PROPS_FILE, what: str = "was created"
+) -> dict:
+    """Pin ``props`` as the table's layout on first use, else validate
+    the ``check`` fields against the pin in force (a field the pin lacks
+    is not checked); returns that pin, whose ``n_buckets`` callers
+    adopt. The pin is an exclusive CREATE, never check-then-replace:
+    two racing first writers would otherwise each validate against
+    their own pin, the last replace would win, and the loser's rows
+    would hash under another bucket count than the winner's — their
+    keys read back twice. Exactly one writer links the pin; everyone
+    else validates against the winner's like any later writer."""
+    pinned = load_table_props(path, name)
+    if pinned is None:
+        os.makedirs(_snap_dir(path), exist_ok=True)
+        try:
+            _atomic_write_exclusive(_props_path(path, name), json.dumps(props))
+            return props
+        except ConcurrentWriteError:
+            pinned = load_table_props(path, name)
+            if pinned is None:  # pinner vanished between link-fail and read
+                raise
+    for field in check:
+        got, have = props[field], pinned.get(field, props[field])
+        if have != got:
+            raise ValueError(f"{path} {what} with {field}={have!r}; got {got!r}")
+    return pinned
+
+
+def is_bucketed(path: str, m: dict | None = None) -> bool:
+    """Whether ``path`` is a bucketed merge table: it carries a layout
+    pin or its manifest (``m``, else the latest) lists ``_p=`` files."""
+    if load_table_props(path) is not None:
+        return True
+    # resolve=False: only file names are scanned, no stats shards
+    m = m if m is not None else read_manifest(path, resolve=False)
+    return any(f"{BUCKET_COL}=" in f for f in m["files"])
+
+
+def index_pins(path: str, m: dict, props: dict | None = None) -> tuple:
+    """``(stats_cols, bloom_cols)`` a rewrite of ``path`` records: the
+    layout pin's, falling back to the manifest's (a table bootstrapped
+    by ``overwrite_versioned(stats_cols=...)`` has no pin)."""
+    props = props if props is not None else (load_table_props(path) or {})
+    return tuple(props.get(k) or m.get(k) or None for k in ("stats_cols", "bloom_cols"))
+
+
 def latest_version(path: str) -> int | None:
     """Current published version, or None for an un-snapshotted directory.
 
@@ -1114,13 +1190,11 @@ def _append_prestage(path, txn_id, staged_fields, frame, stats_cols, bloom_cols)
             f"{path} carries a column mapping (renames/drops); appending "
             "would fork the physical schema. Run compact_snapshot first."
         )
-    from ..operators.merge import BUCKET_COL
-
     if any(f"{BUCKET_COL}=" in f for f in prev["files"]):
         raise NotImplementedError(
             "append_versioned would break the bucketed merge layout "
             "(new files carry no bucket assignment); write through "
-            "merge_upsert_versioned / merge_additive_versioned instead"
+            "apply_changes / merge_additive_versioned instead"
         )
     if prev.get("constraints"):
         check_constraints(frame(), prev["constraints"])
@@ -1143,8 +1217,6 @@ def _append_commit(t: Txn, frame, staged_fields, max_retries: int) -> int:
     constraint or schema-changing overwrite landing while this append
     staged refuses instead of publishing through stale guarantees.
     ``frame`` as in :func:`_append_prestage`."""
-    from ..operators.merge import BUCKET_COL
-
     checked = {"constraints": t.m.get("constraints") or None}
     probed_schema: dict[str, frozenset] = {}
 
@@ -1157,7 +1229,7 @@ def _append_commit(t: Txn, frame, staged_fields, max_retries: int) -> int:
         if any(f"{BUCKET_COL}=" in f for f in nm["files"]):
             raise NotImplementedError(
                 "the table gained a bucketed merge layout while this "
-                "append staged; write through merge_upsert_versioned / "
+                "append staged; write through apply_changes / "
                 "merge_additive_versioned instead"
             )
         cons = nm.get("constraints") or None
@@ -1205,15 +1277,12 @@ def unbucket_snapshot(
     content — the same bill as ``compact_snapshot``; at 100 TB do this
     per-table when schema surgery is actually needed, not on cadence.
     """
-    from ..operators.merge import BUCKET_COL, _props_path, load_table_props
-
-    props = load_table_props(path) or {}
     m = read_manifest(path, resolve=False)
     df = read_snapshot(spark, path)
     if BUCKET_COL in df.columns:
         df = df.drop(BUCKET_COL)
-    sc = stats_cols or props.get("stats_cols") or m.get("stats_cols") or None
-    bc = bloom_cols or props.get("bloom_cols") or m.get("bloom_cols") or None
+    pinned_sc, pinned_bc = index_pins(path, m)
+    sc, bc = stats_cols or pinned_sc, bloom_cols or pinned_bc
     # CAS on the version this rewrite derived its content from (review
     # r8): a concurrent apply_changes landing between the read above and
     # the publish would otherwise be silently clobbered — and its
@@ -1353,12 +1422,7 @@ def translate_where(m: dict, where) -> list:
 
 
 def _mapping_guard(path: str) -> None:
-    from ..operators.merge import BUCKET_COL, load_table_props
-
-    bucketed = load_table_props(path) is not None or any(
-        f"{BUCKET_COL}=" in f for f in read_manifest(path)["files"]
-    )
-    if bucketed:
+    if is_bucketed(path):
         raise NotImplementedError(
             "rename/drop column is not supported on bucketed merge tables: "
             "the merge write path appends files with the frame's own column "
@@ -2132,7 +2196,6 @@ def compact_snapshot(
     each bucket (row-group-level skipping).
     """
     from ..operators.layout import zvalue
-    from ..operators.merge import BUCKET_COL, load_table_props
 
     m = read_manifest(path, resolve=False)
     df = read_snapshot(spark, path)
@@ -2151,9 +2214,7 @@ def compact_snapshot(
         out = df.coalesce(n)
     if zorder:
         out = out.sortWithinPartitions("_z").drop("_z")
-    props = load_table_props(path) or {}
-    stats_cols = props.get("stats_cols") or (m.get("stats_cols") or None)
-    bloom_cols = props.get("bloom_cols") or (m.get("bloom_cols") or None)
+    stats_cols, bloom_cols = index_pins(path, m)
     # compaction reads the LOGICAL view and rewrites every file, so any
     # column mapping is MATERIALIZED here (renames become the files'
     # physical names, dropped columns' bytes are reclaimed) and the new
@@ -2202,8 +2263,6 @@ def compact_small_files(
     use `compact_snapshot`, which keeps it). Returns (version,
     n_files_rewritten); (current, 0) when fewer than two small files.
     """
-    from ..operators.merge import BUCKET_COL
-
     m = read_manifest(path)
     if any(f"{BUCKET_COL}=" in f for f in m["files"]):
         raise NotImplementedError(
@@ -2359,12 +2418,8 @@ def delete_where_dv(
     survivors). Returns (new_version, rows_deleted). Bucketed merge
     tables are refused — their merge path rewrites buckets wholesale
     and would resurrect masked rows."""
-    from ..operators.merge import BUCKET_COL, load_table_props
-
     m = read_manifest(path, resolve=False)  # lazy shard pruning
-    if load_table_props(path) is not None or any(
-        f"{BUCKET_COL}=" in f for f in m["files"]
-    ):
+    if is_bucketed(path, m):
         raise NotImplementedError(
             "deletion vectors are not supported on bucketed merge tables: "
             "the merge write path rewrites buckets without consulting "

@@ -560,8 +560,6 @@ class _SnapshotWriter(DataSourceArrowWriter):
         pins."""
         import pyarrow.parquet as pq
 
-        from ..operators.merge import BUCKET_COL
-
         if not prev:  # a fresh table: this append defines it
             t.set(stats_cols=self._stats_cols, bloom_cols=self._bloom_cols)
             return True
@@ -584,8 +582,8 @@ class _SnapshotWriter(DataSourceArrowWriter):
         if files and layered:
             kind, hint = (
                 ("a bucketed merge table",
-                 "append via apply_changes/merge_upsert_versioned")
-                if layered.startswith(f"{BUCKET_COL}=")
+                 "append via apply_changes")
+                if layered.startswith(f"{S.BUCKET_COL}=")
                 else ("a hive-partitioned table",
                       "append via the partition-aware library writers")
             )

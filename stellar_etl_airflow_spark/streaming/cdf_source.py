@@ -88,9 +88,7 @@ class _CDFStreamReader(DataSourceStreamReader):
         if keys:
             self._keys = tuple(k.strip() for k in keys.split(","))
         else:
-            from ..operators.merge import load_table_props
-
-            props = load_table_props(self._path) or {}
+            props = S.load_table_props(self._path) or {}
             self._keys = tuple(props.get("keys") or ())
         if not self._keys:
             raise ValueError(

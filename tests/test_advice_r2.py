@@ -201,6 +201,22 @@ def test_compact_table_preserves_data_and_shrinks_files(spark, tmp_path):
     assert compact_table(spark, path) == {}
 
 
+def test_compact_table_refuses_snapshot_table(spark, tmp_path):
+    """An in-place leaf rewrite would delete files the manifests list;
+    snapshot tables compact through compact_snapshot instead."""
+    from stellar_etl_airflow_spark.operators.maintenance import compact_table
+    from stellar_etl_airflow_spark.sinks import snapshots as S
+
+    path = str(tmp_path / "t")
+    df = spark.range(200).selectExpr("id", "id % 2 AS _p").repartition(4)
+    S.overwrite_versioned(spark, df, path)
+    files = S.read_manifest(path)["files"]
+    with pytest.raises(ValueError, match="snapshot table"):
+        compact_table(spark, path, min_files=2)
+    assert all(os.path.exists(f) for f in files)
+    assert S.read_snapshot(spark, path).count() == 200
+
+
 def test_cli_corpus_single_query(spark, capsys):
     import stellar_etl_airflow_spark.__main__ as cli
 

@@ -13,8 +13,8 @@ from pyspark.sql.types import LongType
 
 from stellar_etl_airflow_spark.operators.merge import (
     BUCKET_COL,
+    apply_changes,
     key_bucket,
-    merge_upsert_versioned,
 )
 from stellar_etl_airflow_spark.sinks import snapshots as S
 from stellar_etl_airflow_spark.training.text import repetition_stats
@@ -160,7 +160,7 @@ def test_merge_versioned_mixed_flat_and_bucketed_bootstrap(spark, tmp_path):
     changes = spark.createDataFrame(
         [("a1", 11, False, 2, 1), ("a4", 40, False, 2, 1)], cols
     )
-    version, touched = merge_upsert_versioned(spark, changes, tbl, keys, n_buckets=8)
+    version, touched = apply_changes(spark, changes, tbl, keys, n_buckets=8)
     got = {
         r["account_id"]: r["balance"]
         for r in S.read_snapshot(spark, tbl, version).collect()
@@ -185,7 +185,7 @@ def test_merge_versioned_bootstrap_preserves_foreign_partition_column(spark, tmp
     assert S.latest_version(tbl) is None
 
     changes = spark.createDataFrame([("a1", 11, "2024-01-03", False, 2, 1)], cols)
-    version, _ = merge_upsert_versioned(spark, changes, tbl, ("account_id",), n_buckets=8)
+    version, _ = apply_changes(spark, changes, tbl, ("account_id",), n_buckets=8)
     got = {
         r["account_id"]: (r["balance"], str(r["batch_run_date"]))
         for r in S.read_snapshot(spark, tbl, version).collect()

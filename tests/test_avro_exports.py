@@ -4,8 +4,9 @@
 
 For every export: build the source table from the reference's pinned load
 schema (/root/reference/schemas/<table>_schema.json, plus the documented
-SCHEMA_EVOLUTION_EXTRAS; synthesized for the four dbt-model sources that
-have no pinned schema), fill it with deterministic rows — nested details
+SCHEMA_EVOLUTION_EXTRAS; synthesized from the export's own expressions for
+the four dbt-model sources that have no pinned schema, and for every source
+when the reference checkout is absent), fill it with deterministic rows — nested details
 structs, arrays, NULLs, and timestamps straddling the batch window — write
 it to parquet, and compare the Spark export frame against a DuckDB
 transcription of the same projection over the same parquet file. This
@@ -43,11 +44,17 @@ N_ROWS = 32
 # ---------------------------------------------------------------- schemas
 
 
+#: the one ``details`` subfield of each pinned load schema that the export
+#: projection leaves out (history_operations.sql names 121 of 122): the
+#: synthesized struct carries it so nested-schema pruning has work to do
+_UNEXPORTED_DETAILS = {"history_operations": "claimants", "history_effects": "predicate"}
+
+
 def _synth_field_type(name: str) -> str:
-    """Fixture types for the four dbt-model sources with no pinned schema."""
+    """Fixture types for sources synthesized without a pinned schema."""
     if name == "day":
         return "DATE"
-    if name in ("closed_at",):
+    if name.endswith("closed_at") or name in ("batch_run_date", "batch_insert_ts"):
         return "TIMESTAMP"
     if name == "is_soroban":
         return "BOOLEAN"
@@ -77,18 +84,35 @@ def source_schema(export_name: str) -> T.StructType:
             else:
                 spec.append({"name": parts[0], "type": bq_type})
         return bq_schema_to_struct(spec)
-    # dbt-model source: derive a schema from the identifiers the export uses
+    # no pinned schema: derive one from the identifiers the export uses,
+    # with ``details.<sub>`` references collected into a details struct
     import re
 
     cols: list[str] = []
+    subs: list[str] = []
     for expr, _alias in d.columns:
-        for ident in re.findall(r"[A-Za-z_]\w*", expr.replace("`", "")):
+        expr = expr.replace("`", "")
+        for sub in re.findall(r"\bdetails\.(\w+)", expr):
+            if sub not in subs:
+                subs.append(sub)
+        expr = re.sub(r"\bdetails\.\w+", "details", expr)
+        for ident in re.findall(r"[A-Za-z_]\w*", expr):
             if ident not in cols and ident not in ("try_cast", "replace", "as", "integer"):
                 cols.append(ident)
-    for c in d.filters:
+    # filters, plus the batch columns every ingested table is stamped with
+    # (operators/ingest.py) — the pinned schemas carry more than the
+    # export reads, so top-level pruning has work to do too
+    for c in (*d.filters, "batch_id", "batch_run_date", "batch_insert_ts"):
         if c not in cols:
             cols.append(c)
-    return bq_schema_to_struct([{"name": c, "type": _synth_field_type(c)} for c in cols])
+    if export_name in _UNEXPORTED_DETAILS:
+        subs.append(_UNEXPORTED_DETAILS[export_name])
+    return bq_schema_to_struct([
+        {"name": c, "type": "RECORD",
+         "fields": [{"name": f, "type": _synth_field_type(f)} for f in subs]}
+        if c == "details" else {"name": c, "type": _synth_field_type(c)}
+        for c in cols
+    ])
 
 
 # ------------------------------------------------------- deterministic rows

@@ -133,9 +133,7 @@ def test_cdf_schema_evolution_across_range(spark, tmp_path):
     evolved = spark.createDataFrame(
         [(2, 20.0, 2, 0, False, "gold")], SCHEMA + ", tier string"
     )
-    from stellar_etl_airflow_spark.operators.merge import merge_upsert_versioned
-
-    merge_upsert_versioned(
+    apply_changes(
         spark, evolved, path, keys=("account_id",), n_buckets=2,
         allow_schema_evolution=True,
     )

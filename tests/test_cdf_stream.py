@@ -235,9 +235,7 @@ def test_stream_cdf_refuses_post_start_column_add(spark, tmp_path):
     _drain(spark, path, ckpt, sink)
     frozen = (spark.readStream.format(cdf_source.FORMAT_NAME)
               .option("path", path).load().schema)
-    from stellar_etl_airflow_spark.operators.merge import merge_upsert_versioned
-
-    merge_upsert_versioned(
+    apply_changes(
         spark,
         spark.createDataFrame(
             [(1, 11, 7, False, 2, 0)],

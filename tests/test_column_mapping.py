@@ -124,13 +124,13 @@ def test_overwrite_resets_mapping(spark, tmp_path):
 
 
 def test_mapping_guard_on_bucketed_merge_tables(spark, tmp_path):
-    from stellar_etl_airflow_spark.operators.merge import merge_upsert_versioned
+    from stellar_etl_airflow_spark.operators.merge import apply_changes
 
     tbl = str(tmp_path / "m")
     df = spark.createDataFrame(
         [(1, "x", 5, False)], "id long, v string, seq long, deleted boolean"
     )
-    merge_upsert_versioned(spark, df, tbl, keys=("id",), n_buckets=4, order_cols=("seq",))
+    apply_changes(spark, df, tbl, keys=("id",), n_buckets=4, order_cols=("seq",))
     with pytest.raises(NotImplementedError, match="bucketed merge"):
         S.rename_column(tbl, "v", "w")
 

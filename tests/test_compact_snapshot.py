@@ -45,10 +45,8 @@ def test_compact_bucketed_merge_table(spark, tmp_path):
         [(5, 5.0 * 4, 4, False, "x")],
         "account_id long, balance double, seq long, deleted boolean, tag string",
     )
-    from stellar_etl_airflow_spark.operators.merge import merge_upsert_versioned
-
-    merge_upsert_versioned(spark, evolved, path, ("account_id",),
-                           order_cols=("seq",), allow_schema_evolution=True)
+    apply_changes(spark, evolved, path, ("account_id",),
+                  order_cols=("seq",), allow_schema_evolution=True)
     assert S.read_manifest(path)["mixed_schema"] is True
     before = _content(spark, path)
     v_before = S.latest_version(path)
@@ -68,7 +66,7 @@ def test_compact_bucketed_merge_table(spark, tmp_path):
     # scoped merges keep working and stay scoped: touching one key
     # rewrites ONE bucket's file (the batch lacks the evolved column, so
     # it rides the UPDATE SET * path)
-    merge_upsert_versioned(
+    apply_changes(
         spark, _batch(spark, [(7, 777.0, 9, False)]), path, ("account_id",),
         order_cols=("seq",), allow_schema_evolution=True,
     )

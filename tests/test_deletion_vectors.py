@@ -107,13 +107,13 @@ def test_dv_composes_with_column_mapping_and_appends(spark, tmp_path):
 
 
 def test_dv_guards(spark, tmp_path):
-    from stellar_etl_airflow_spark.operators.merge import merge_upsert_versioned
+    from stellar_etl_airflow_spark.operators.merge import apply_changes
 
     tbl = str(tmp_path / "m")
     df = spark.createDataFrame(
         [(1, "x", 5, False)], "id long, v string, seq long, deleted boolean"
     )
-    merge_upsert_versioned(spark, df, tbl, keys=("id",), n_buckets=4, order_cols=("seq",))
+    apply_changes(spark, df, tbl, keys=("id",), n_buckets=4, order_cols=("seq",))
     with pytest.raises(NotImplementedError, match="deletion vectors"):
         S.delete_where_dv(spark, tbl, [("id", "=", 1)])
     # max_rows cap routes bulk deletes to copy-on-write

@@ -21,6 +21,7 @@ from stellar_etl_airflow_spark.operators import scd2 as S2
 from stellar_etl_airflow_spark.operators.ingest import Warehouse, ingest_batch, read_table
 from stellar_etl_airflow_spark.schemas.loader import bq_schema_to_struct, merge_additive
 from stellar_etl_airflow_spark.sinks import exports, writer
+from stellar_etl_airflow_spark.sinks import snapshots as SN
 from stellar_etl_airflow_spark.sources import csvsrc, ndjson
 from stellar_etl_airflow_spark.views import currentstate as CS
 from stellar_etl_airflow_spark.views import marts
@@ -130,10 +131,12 @@ def test_ingest_replay_idempotent(spark, tmp_path):
 
 
 # ----------------------------------------------------------------------- merge
-def test_merge_upsert_semantics(spark):
+def test_merge_upsert_semantics(spark, tmp_path):
+    path = str(tmp_path / "accounts")
     target = spark.createDataFrame(
         [("A", 10.0, 1, 100, 0, False), ("B", 5.0, 1, 101, 0, False)], FX.ACCOUNTS_SCHEMA
     )
+    MG.apply_changes(spark, target, path, ("account_id",), n_buckets=4)
     changes = spark.createDataFrame(
         [
             ("A", 99.0, 9, 110, 0, False),  # update
@@ -143,8 +146,8 @@ def test_merge_upsert_semantics(spark):
         ],
         FX.ACCOUNTS_SCHEMA,
     )
-    out = MG.merge_upsert(target, changes, ("account_id",))
-    rows = {r["account_id"]: r for r in out.collect()}
+    MG.apply_changes(spark, changes, path, ("account_id",), n_buckets=4)
+    rows = {r["account_id"]: r for r in SN.read_snapshot(spark, path).collect()}
     assert set(rows) == {"A", "D"}
     assert rows["A"]["balance"] == 99.0  # latest-change-wins
     ins = MG.insert_unique(target, changes, ("account_id",))

@@ -1,15 +1,21 @@
-"""MVCC scoped MERGE (operators/merge.py::merge_upsert_versioned): targeted
+"""MVCC scoped MERGE (operators/merge.py::apply_changes): targeted
 bucket rewrite + manifest publication = BigQuery-MERGE cost profile with
-Delta-style time travel. Reference semantics:
-/root/reference/dags/stellar_etl_airflow/build_apply_gcs_changes_to_bq_task.py:116-149."""
+Delta-style time travel, on a bucket layout pinned once per table.
+Reference semantics: build_apply_gcs_changes_to_bq_task.py:116-149."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from stellar_etl_airflow_spark.operators.merge import BUCKET_COL, merge_upsert_versioned
+from stellar_etl_airflow_spark.operators.merge import (
+    BUCKET_COL,
+    apply_changes,
+    key_bucket,
+    load_table_props,
+)
 from stellar_etl_airflow_spark.sinks import snapshots as S
 
 KEYS = ("account_id",)
@@ -31,10 +37,10 @@ def _state(spark, path, version=None):
 
 def test_versioned_merge_applies_and_time_travels(spark, tmp_path):
     tbl = str(tmp_path / "accounts")
-    v1, _ = merge_upsert_versioned(
+    v1, _ = apply_changes(
         spark, _changes(spark, [(1, 10.0, 100, 1, False), (2, 20.0, 100, 1, False)]), tbl, KEYS, n_buckets=8
     )
-    v2, _ = merge_upsert_versioned(
+    v2, _ = apply_changes(
         spark,
         _changes(spark, [(1, 11.0, 101, 1, False), (3, 30.0, 101, 1, False), (2, 0.0, 101, 1, True)]),
         tbl,
@@ -49,9 +55,9 @@ def test_versioned_merge_applies_and_time_travels(spark, tmp_path):
 def test_versioned_merge_touches_only_matching_buckets(spark, tmp_path):
     tbl = str(tmp_path / "t")
     seed = [(i, float(i), 100, 1, False) for i in range(1, 33)]
-    merge_upsert_versioned(spark, _changes(spark, seed), tbl, KEYS, n_buckets=8)
+    apply_changes(spark, _changes(spark, seed), tbl, KEYS, n_buckets=8)
     before = S.read_manifest(tbl)
-    _, touched = merge_upsert_versioned(
+    _, touched = apply_changes(
         spark, _changes(spark, [(1, 99.0, 101, 1, False)]), tbl, KEYS, n_buckets=8
     )
     after = S.read_manifest(tbl)
@@ -67,19 +73,19 @@ def test_versioned_merge_touches_only_matching_buckets(spark, tmp_path):
 def test_versioned_merge_replay_idempotent(spark, tmp_path):
     tbl = str(tmp_path / "t")
     batch = _changes(spark, [(1, 10.0, 100, 1, False), (2, 20.0, 100, 2, False)])
-    merge_upsert_versioned(spark, batch, tbl, KEYS, n_buckets=4)
+    apply_changes(spark, batch, tbl, KEYS, n_buckets=4)
     state1 = _state(spark, tbl)
-    merge_upsert_versioned(spark, batch, tbl, KEYS, n_buckets=4)  # crash-replay
+    apply_changes(spark, batch, tbl, KEYS, n_buckets=4)  # crash-replay
     assert _state(spark, tbl) == state1
 
 
 def test_versioned_merge_into_clone_localizes_and_preserves_source(spark, tmp_path):
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    merge_upsert_versioned(
+    apply_changes(
         spark, _changes(spark, [(1, 10.0, 100, 1, False), (2, 20.0, 100, 1, False)]), src, KEYS, n_buckets=4
     )
     S.clone(src, dst)
-    merge_upsert_versioned(spark, _changes(spark, [(1, 50.0, 200, 1, False)]), dst, KEYS, n_buckets=4)
+    apply_changes(spark, _changes(spark, [(1, 50.0, 200, 1, False)]), dst, KEYS, n_buckets=4)
     assert _state(spark, dst) == {1: 50.0, 2: 20.0}
     assert _state(spark, src) == {1: 10.0, 2: 20.0}  # source untouched
     # clone localized: its current files live under its own root
@@ -89,7 +95,7 @@ def test_versioned_merge_into_clone_localizes_and_preserves_source(spark, tmp_pa
 def test_versioned_merge_vacuum_bounds_history(spark, tmp_path):
     tbl = str(tmp_path / "t")
     for i in range(4):
-        merge_upsert_versioned(
+        apply_changes(
             spark, _changes(spark, [(1, float(i), 100 + i, 1, False)]), tbl, KEYS, n_buckets=4
         )
     newest = S.latest_version(tbl)
@@ -102,10 +108,6 @@ def test_apply_changes_pins_layout_and_rejects_key_mismatch(spark, tmp_path):
     """apply_changes (THE default state-table path) pins (keys, n_buckets)
     in the table props on first use: later batches use the pinned bucket
     count regardless of the argument, and mismatched keys are an error."""
-    import pytest
-
-    from stellar_etl_airflow_spark.operators.merge import apply_changes, load_table_props
-
     tbl = str(tmp_path / "accounts_state")
     apply_changes(spark, _changes(spark, [(1, 10.0, 100, 1, False)]), tbl, KEYS, n_buckets=4)
     assert load_table_props(tbl) == {
@@ -138,8 +140,6 @@ def test_compact_snapshot_compacts_adopted_buckets_without_breaking_history(spar
     compact_snapshot rewrites each bucket to ONE file in a NEW manifest
     version — current state identical, pre-compaction versions still
     exactly readable (old files untouched), vacuum reclaims them."""
-    from stellar_etl_airflow_spark.operators.merge import key_bucket
-
     tbl = str(tmp_path / "t")
     # two append writes -> each bucket dir holds 2 files (the multi-file
     # accumulation a parallel merge write or bootstrap adoption produces)
@@ -161,7 +161,7 @@ def test_compact_snapshot_compacts_adopted_buckets_without_breaking_history(spar
     # compacted manifest actually references fewer files
     assert len(S.read_manifest(tbl)["files"]) < len(S.read_manifest(tbl, pre_version)["files"])
     # a later merge composes with the compacted layout
-    merge_upsert_versioned(spark, _changes(spark, [(2, 9.0, 200, 1, False)]), tbl, KEYS, n_buckets=2)
+    apply_changes(spark, _changes(spark, [(2, 9.0, 200, 1, False)]), tbl, KEYS, n_buckets=2)
     st = _state(spark, tbl)
     assert st[2] == 9.0 and st[1] == 1.0 and st[3] == 3.0
     deleted = S.vacuum(tbl, keep_versions=1)
@@ -173,10 +173,6 @@ def test_merge_versioned_schema_evolution(spark, tmp_path):
     """Additive evolution: a later batch carries a NEW column; rewritten
     buckets get it, untouched buckets surface it as NULL through the
     mergeSchema read. Without the flag the mismatch raises."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from stellar_etl_airflow_spark.operators.merge import merge_upsert_versioned
     from stellar_etl_airflow_spark.sinks.snapshots import read_snapshot
 
     path = str(tmp_path / "t")
@@ -184,15 +180,15 @@ def test_merge_versioned_schema_evolution(spark, tmp_path):
         [("A", 1.0, 100, 0, False), ("B", 2.0, 100, 0, False), ("C", 3.0, 100, 0, False)],
         "k string, balance double, last_modified_ledger long, ledger_entry_change long, deleted boolean",
     )
-    merge_upsert_versioned(spark, base, path, keys=("k",), n_buckets=4)
+    apply_changes(spark, base, path, keys=("k",), n_buckets=4)
 
     evolved = spark.createDataFrame(
         [("A", 10.0, 101, 0, False, "memo-A"), ("D", 4.0, 101, 0, False, "memo-D")],
         "k string, balance double, last_modified_ledger long, ledger_entry_change long, deleted boolean, memo string",
     )
     with pytest.raises(Exception):
-        merge_upsert_versioned(spark, evolved, path, keys=("k",), n_buckets=4)
-    merge_upsert_versioned(
+        apply_changes(spark, evolved, path, keys=("k",), n_buckets=4)
+    apply_changes(
         spark, evolved, path, keys=("k",), n_buckets=4, allow_schema_evolution=True
     )
     out = {r["k"]: r for r in read_snapshot(spark, path).collect()}
@@ -209,7 +205,7 @@ def test_merge_versioned_schema_evolution(spark, tmp_path):
         [("E", 102, 0, False)],
         "k string, last_modified_ledger long, ledger_entry_change long, deleted boolean",
     )
-    merge_upsert_versioned(
+    apply_changes(
         spark, shrunk, path, keys=("k",), n_buckets=4, allow_schema_evolution=True
     )
     out2 = {r["k"]: r for r in read_snapshot(spark, path).collect()}
@@ -224,10 +220,83 @@ def test_merge_versioned_schema_evolution(spark, tmp_path):
         [("A", 99.0, 103, 0, False)],
         "k string, balance double, last_modified_ledger long, ledger_entry_change long, deleted boolean",
     )
-    merge_upsert_versioned(
+    apply_changes(
         spark, update_a, path, keys=("k",), n_buckets=4, allow_schema_evolution=True
     )
     out3 = {r["k"]: r for r in read_snapshot(spark, path).collect()}
     assert out3["A"]["balance"] == 99.0  # updated by the batch
     assert out3["A"]["memo"] == "memo-A"  # absent column carried, not clobbered
     assert out3["D"]["memo"] == "memo-D"
+
+
+def test_versioned_merge_empties_then_refills_bucket(spark, tmp_path):
+    """Deleting every key in a bucket leaves it with no files; a later
+    insert into the same bucket must land and reads must stay clean."""
+    tbl = str(tmp_path / "state")
+    df = _changes(spark, [(i, 1.0, 100, 1, False) for i in range(20)])
+    apply_changes(spark, df, tbl, KEYS, n_buckets=4)
+    bucket0_ids = [
+        r["account_id"]
+        for r in df.withColumn("_b", key_bucket(KEYS, 4)).collect()
+        if r["_b"] == 0
+    ]
+    assert bucket0_ids
+    wipe = _changes(spark, [(i, 0.0, 101, 1, True) for i in bucket0_ids])
+    _, touched = apply_changes(spark, wipe, tbl, KEYS, n_buckets=4)
+    assert touched == [0]
+    leaf = f"{os.sep}{BUCKET_COL}=0{os.sep}"
+    assert not any(leaf in f for f in S.read_manifest(tbl)["files"])
+    st = _state(spark, tbl)
+    assert not set(bucket0_ids) & set(st) and len(st) == 20 - len(bucket0_ids)
+
+    refill = _changes(spark, [(bucket0_ids[0], 9.0, 102, 1, False)])
+    apply_changes(spark, refill, tbl, KEYS, n_buckets=4)
+    st = _state(spark, tbl)
+    assert st[bucket0_ids[0]] == 9.0 and len(st) == 21 - len(bucket0_ids)
+
+
+def _race_pin(monkeypatch, rival):
+    """Run ``rival()`` after this merge found no layout pin but before it
+    links its own — a first writer whose props read went stale."""
+    real = S._atomic_write_exclusive
+
+    def hook(target, payload):
+        if target.endswith(S._PROPS_FILE):
+            monkeypatch.undo()
+            rival()
+        return real(target, payload)
+
+    monkeypatch.setattr(S, "_atomic_write_exclusive", hook)
+
+
+def test_apply_changes_pin_race_adopts_winner_layout(spark, tmp_path, monkeypatch):
+    """Two racing first writers with different bucket counts: exactly one
+    pin lands and the loser adopts its ``n_buckets``. Re-pinning would
+    hash the loser's keys into other buckets than the winner's rows and
+    read those keys back twice."""
+    tbl = str(tmp_path / "t")
+    seed = _changes(spark, [(i, float(i), 100, 1, False) for i in range(32)])
+    _race_pin(monkeypatch, lambda: apply_changes(spark, seed, tbl, KEYS, n_buckets=8))
+    batch = _changes(spark, [(i, i + 100.0, 101, 1, False) for i in range(32)])
+    apply_changes(spark, batch, tbl, KEYS, n_buckets=4)
+    assert load_table_props(tbl)["n_buckets"] == 8
+    rows = S.read_snapshot(spark, tbl)
+    assert sorted(r["account_id"] for r in rows.collect()) == list(range(32))
+    assert _state(spark, tbl) == {i: i + 100.0 for i in range(32)}
+    assert rows.filter(F.col(BUCKET_COL) != key_bucket(KEYS, 8)).count() == 0
+
+
+def test_apply_changes_pin_race_rejects_rival_keys(spark, tmp_path, monkeypatch):
+    """A rival first writer pinned other merge keys: the loser must raise
+    like any later mismatched writer, and leave the winner's pin."""
+    import json
+
+    tbl = str(tmp_path / "t")
+    rival = {"n_buckets": 8, "keys": ["balance"], "deleted_col": "deleted",
+             "order_cols": list(ORDER)}
+    _race_pin(monkeypatch, lambda: S._atomic_write_exclusive(
+        S._props_path(tbl), json.dumps(rival)))
+    with pytest.raises(ValueError, match="was created with keys"):
+        apply_changes(spark, _changes(spark, [(1, 1.0, 100, 1, False)]), tbl, KEYS, n_buckets=4)
+    assert load_table_props(tbl) == rival
+    assert S.latest_version(tbl) is None  # nothing was written

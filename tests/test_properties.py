@@ -49,14 +49,25 @@ def _model_merge(target_rows, change_rows):
     target=st.lists(change_row, max_size=6, unique_by=lambda r: r[0]),
     changes=st.lists(change_row, max_size=8, unique_by=lambda r: (r[0], r[3], r[4])),
 )
-def test_merge_upsert_matches_model(spark, target, changes):
-    tdf = spark.createDataFrame(target, FX.ACCOUNTS_SCHEMA) if target else spark.createDataFrame([], FX.ACCOUNTS_SCHEMA)
-    cdf = spark.createDataFrame(changes, FX.ACCOUNTS_SCHEMA) if changes else spark.createDataFrame([], FX.ACCOUNTS_SCHEMA)
+def test_merge_upsert_matches_model(spark, tmp_path_factory, target, changes):
+    """apply_changes on a fresh table seeded with ``target`` equals the
+    Python MERGE model."""
+    import os
+    import uuid
+
+    from stellar_etl_airflow_spark.sinks.snapshots import read_manifest, read_snapshot
+
+    path = os.path.join(str(tmp_path_factory.mktemp("upsert")), uuid.uuid4().hex[:8])
+    seed = [r[:5] + (False,) for r in target]
+    MG.apply_changes(spark, spark.createDataFrame(seed, FX.ACCOUNTS_SCHEMA), path, ("account_id",), n_buckets=4)
+    MG.apply_changes(spark, spark.createDataFrame(changes, FX.ACCOUNTS_SCHEMA), path, ("account_id",), n_buckets=4)
+    # a table every row was deleted from lists no files, and read_snapshot
+    # cannot infer a schema from none: that file list IS the empty state
     got = {
         r["account_id"]: (r["balance"], r["last_modified_ledger"], r["ledger_entry_change"])
-        for r in MG.merge_upsert(tdf, cdf, ("account_id",)).collect()
-    }
-    assert got == _model_merge(target, changes)
+        for r in read_snapshot(spark, path).collect()
+    } if read_manifest(path, resolve=False)["files"] else {}
+    assert got == _model_merge(seed, changes)
 
 
 @SLOW

@@ -281,8 +281,6 @@ def test_merge_materializes_deletion_vectors(spark, tmp_path):
     """Merging into a FLAT table carrying merge-on-read deletion vectors
     used to read rewrite files raw — resurrecting every masked row while
     the commit silently dropped the vectors."""
-    from stellar_etl_airflow_spark.operators.merge import merge_upsert_versioned
-
     tbl = str(tmp_path / "t")
     df = spark.createDataFrame(
         [(i, i, False, 1, 0) for i in range(20)],
@@ -295,7 +293,7 @@ def test_merge_materializes_deletion_vectors(spark, tmp_path):
         [(2, 99, False, 2, 1)],
         "k long, v long, deleted boolean, last_modified_ledger long, ledger_entry_change int",
     )
-    merge_upsert_versioned(spark, batch, tbl, keys=("k",), n_buckets=4)
+    apply_changes(spark, batch, tbl, keys=("k",), n_buckets=4)
     got = {r["k"]: r["v"] for r in S.read_snapshot(spark, tbl).collect()}
     assert 5 not in got, "merge resurrected a DV-deleted row"
     assert got[2] == 99 and len(got) == 19
@@ -304,8 +302,6 @@ def test_merge_materializes_deletion_vectors(spark, tmp_path):
 def test_merge_refuses_column_mapped_table(spark, tmp_path):
     """Merging into a renamed (column-mapped) flat table would fork the
     physical schema and duplicate the logical column on read."""
-    from stellar_etl_airflow_spark.operators.merge import merge_upsert_versioned
-
     tbl = str(tmp_path / "t")
     df = spark.createDataFrame(
         [(1, 10, False, 1, 0)],
@@ -318,31 +314,7 @@ def test_merge_refuses_column_mapped_table(spark, tmp_path):
         "k long, val long, deleted boolean, last_modified_ledger long, ledger_entry_change int",
     )
     with pytest.raises(NotImplementedError, match="column mapping"):
-        merge_upsert_versioned(spark, batch, tbl, keys=("k",), n_buckets=4)
-
-
-def test_merge_upsert_versioned_pins_layout_on_first_use(spark, tmp_path):
-    """Direct merge_upsert_versioned calls now pin (keys, n_buckets) on
-    first use like apply_changes — a later call with different buckets
-    adopts the pin instead of silently splitting keys across buckets."""
-    from stellar_etl_airflow_spark.operators.merge import (
-        load_table_props,
-        merge_upsert_versioned,
-    )
-
-    tbl = str(tmp_path / "t")
-    sch = "k long, v long, deleted boolean, last_modified_ledger long, ledger_entry_change int"
-    merge_upsert_versioned(
-        spark, spark.createDataFrame([(1, 10, False, 1, 0)], sch),
-        tbl, keys=("k",), n_buckets=4,
-    )
-    assert load_table_props(tbl)["n_buckets"] == 4
-    merge_upsert_versioned(
-        spark, spark.createDataFrame([(1, 11, False, 2, 0)], sch),
-        tbl, keys=("k",), n_buckets=128,  # ignored: pin wins
-    )
-    got = [r["v"] for r in S.read_snapshot(spark, tbl).collect()]
-    assert got == [11], f"duplicate state rows: {got}"
+        apply_changes(spark, batch, tbl, keys=("k",), n_buckets=4)
 
 
 def test_insert_unique_dedups_within_batch(spark):

@@ -88,12 +88,12 @@ def counting_core(counter: RetryCounter):
     before delegating to the single-attempt core, preserving the
     production retry/backoff shape."""
 
-    def core(spark, changes, path, keys, n_buckets, combine, evolve=False,
+    def core(spark, changes, path, keys, pin, combine, evolve=False,
              txn_id=None, retries=30):
         for attempt in range(retries + 1):
             try:
                 return M._merge_versioned_once(
-                    spark, changes, path, keys, n_buckets, combine,
+                    spark, changes, path, keys, pin, combine,
                     evolve=evolve, txn_id=txn_id,
                 )
             except S.ConcurrentWriteError:
@@ -382,14 +382,14 @@ def upsert_storm(spark, root: str, rounds: int) -> dict:
                 F.lit(w).cast("long").alias("ledger_entry_change"),
             )
 
-        M.merge_upsert_versioned(spark, batch_df(99, 0), tbl, keys=("k",),
-                                 n_buckets=8, txn_id="seed")
+        M.apply_changes(spark, batch_df(99, 0), tbl, keys=("k",),
+                        n_buckets=8, txn_id="seed")
         stop = threading.Event()
 
         def merger(w):
             def ups():
                 for r in range(rounds):
-                    M.merge_upsert_versioned(
+                    M.apply_changes(
                         spark, batch_df(w, r), tbl, keys=("k",),
                         txn_id=f"w{w}-r{r}",
                     )

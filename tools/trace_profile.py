@@ -70,11 +70,11 @@ def main() -> None:
         "compact_snapshot", "compact_small_files", "compute_blooms",
         "_file_stats", "read_snapshot", "scan_snapshot", "read_manifest",
         "delete_where_dv", "vacuum", "adopt_staged", "_shard_stats",
+        "load_table_props",
     ):
         _wrap(S, fname, f"snapshots.{fname}")
     _wrap(S.Txn, "commit", "snapshots.Txn.commit")
-    for fname in ("merge_upsert", "apply_changes", "load_table_props"):
-        _wrap(merge, fname, f"merge.{fname}")
+    _wrap(merge, "apply_changes", "merge.apply_changes")
     for fname in ("read_additive", "append_additive"):
         _wrap(additive_mor, fname, f"additive_mor.{fname}")
     for fname in ("_minhash_bands", "minhash_signatures"):
