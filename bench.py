@@ -580,8 +580,8 @@ def _emit_output(
     the byte bound by _print_final, with the per-query ``queries`` dict
     packed in, most expensive entries first (optimization r14: the
     driver's per-query analysis reads the final line only; the load
-    stamps moved to the sacrificial line to make room — they also land
-    in bench_history.jsonl). Unit-tested without Spark in
+    stamps moved to the sacrificial line to make room; they reach stdout
+    only, not bench_history.jsonl). Unit-tested without Spark in
     tests/test_bench_contract.py."""
     print(json.dumps(per_query))
     if ab:
@@ -676,69 +676,13 @@ def main() -> None:
 
     # pass 2: pooled corpus wall (the throughput headline)
     pass_hygiene()
-    ordered = sorted(QUERIES.items())
-    if par > 1 and timings:
-        # longest-first keeps the big entries (merge protocols, streaming
-        # drains, LSH) from landing last and serializing the tail —
-        # ordered by THIS run's own uncontended sweep (optimization r14:
-        # the static r7-measured list below had gone stale; today's
-        # 3-7 s entries t37/t39/t45/t47/t55 were absent from it and
-        # straggled the pooled tail). Name tiebreak keeps it
-        # deterministic.
-        ordered = sorted(QUERIES.items(), key=lambda kv: (-timings.get(kv[0], 0.0), kv[0]))
-    elif par > 1:
-        # fast mode has no sweep: fall back to the static longest-first
-        # list (descending by measured r7 full-corpus time, min-of-2)
-        heavy = [
-            "q51_incremental_mart",
-            "s14_stream_incremental_dedup",
-            "q61_zorder_optimize",
-            "s08_stream_crash_resume",
-            # fixed-cost ledger-op entries added r10/r11 (manifest
-            # publishes dominate; ~3-5 s each warm)
-            "q64_ingest_counters",
-            "s16_stream_mor_counters",
-            "q65_recursive_hierarchy",
-            "q62_transactional_append",
-            "q63_additive_mor",
-            # r12 protocol entries: two merge rounds / a full scratch
-            # ingest write — fixed-cost like the ledger entries above
-            "q67_merge_schema_evolution",
-            "q68_variant_storage",
-            "s15_stream_web_ingest",
-            "t14_jaccard_dfcapped",
-            "q56_scd2_from_cdf",
-            "s12_stream_cdf_to_scd2",
-            "s13_snapshot_stream_roundtrip",
-            "s09_stream_additive_exactly_once",
-            "t02_ngram_jaccard_pairs",
-            "t39_duplicate_spans",
-            "q48_fuzzy_blocked_join",
-            "s11_stream_snapshot_sink",
-            "t19_kmeans_ivf",
-            "q40_sketch_aggregates",
-            "t20_training_pipeline",
-            "q29_percentiles",
-            "s05_stream_stream_join",
-            "t28_contamination_report",
-            "t03_minhash_lsh_pairs",
-            "t43_bpe_vocab",
-            "t59_incremental_dedup",
-            "t58_bpe_tokenize",
-            "t44_pagerank",
-            "t45_pq_adc_topk",
-            "q01_pricing_summary",
-            "s10_cdf_net_changes",
-            "s06_stream_upsert_sink",
-            "q21_scalar_functions2",
-            "t34_boilerplate_coverage",
-            "q55_snapshot_pushdown",
-            "q28_rollup",
-            "q54_schema_evolution",
-            "t27_repetition_stats",
-        ]
-        ordered = [(n, QUERIES[n]) for n in heavy if n in QUERIES]
-        ordered += [(n, s) for n, s in sorted(QUERIES.items()) if n not in set(heavy)]
+    # longest-first keeps the big entries (merge protocols, streaming
+    # drains, LSH) from landing last and serializing the tail. Ordered by
+    # THIS run's own uncontended sweep; fast mode has none and uses the
+    # prior run's per-query map (the one the A/B reads), else name order.
+    # Name tiebreak keeps it deterministic.
+    cost = timings if timings is not None else (_prior_bench(sf) or (None, {}))[1]
+    ordered = sorted(QUERIES.items(), key=lambda kv: (-cost.get(kv[0], 0.0), kv[0]))
 
     # the host shows 2-6x wall-clock variance run to run (co-tenant load);
     # min over the repetitions estimates the machine's actual capability
@@ -818,7 +762,7 @@ def main() -> None:
 
     # per-rep load stamps ride the SACRIFICIAL line (optimization r14):
     # the final line's bytes belong to the per-query contract dict; the
-    # stamps stay on stdout for attribution and in bench_history.jsonl
+    # stamps stay on stdout only (_record_history does not write them)
     ab = dict(ab)
     ab["rep_load"] = rep_load
     ab["e2e_load"] = e2e_load

@@ -162,8 +162,8 @@ def fold_additive(
     ``folded(files@v) + deltas landed since v`` is exactly correct and
     the retry costs one manifest read, never a recompute. Under
     saturating append pressure the fold therefore still lands (measured
-    in ``tools/fold_liveness_probe.py``); only an intervening
-    NON-append commit (another fold, compact, overwrite, column
+    by ``git show b7fa307:tools/fold_liveness_probe.py``); only an
+    intervening NON-append commit (another fold, compact, overwrite, column
     surgery) forces a re-fold, bounded by ``max_refolds`` before
     raising ``ConcurrentWriteError``. Staged files of a lost attempt
     are removed (referenced by no manifest — never orphaned). Writers

@@ -304,6 +304,10 @@ def _merge_versioned_once(
     # one cached batch per merge in the CacheManager forever)
     _cached = ch
     touched = sorted(r[0] for r in ch.select(BUCKET_COL).distinct().collect())
+    if not touched:
+        # an empty batch changes nothing: no write job, no new version
+        ch.unpersist()
+        return int(m["version"]), []
 
     def bucket_of(f: str):
         rel = os.path.relpath(f, m.get("base", path))

@@ -9,8 +9,8 @@ fork loop. The first thing most of our forked workers then do is
 unpickle a function whose module graph pulls in pyarrow (every Arrow
 batch exchange), pandas/numpy (mapInPandas stages) and this engine's
 connector module — measured at 0.3-0.6 s of import latency PER FRESH
-WORKER on this host (tools/pooled_bisect.py, r13). A corpus entry whose
-plan runs a handful of Python-exchanging stages forks tens of workers,
+WORKER on this host (``git show b7fa307:tools/pooled_bisect.py``, r13).
+A corpus entry whose plan runs a handful of Python-exchanging stages forks tens of workers,
 so the import tax dominates the entry's wall (q56: 210 s task wall,
 10 s task CPU — the difference was almost entirely worker imports).
 

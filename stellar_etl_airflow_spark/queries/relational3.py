@@ -768,7 +768,8 @@ def q65_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     (cust,) = tables(spark, sf_dir, "customer")
-    # 100 TB guard (r12, found by tools/recursive_scale_probe.py): Spark 4
+    # 100 TB guard (r12, found by
+    # `git show b7fa307:tools/recursive_scale_probe.py`): Spark 4
     # caps recursive CTEs at spark.sql.cteRecursionRowLimit = 1e6 TOTAL
     # rows across levels — the walk visits every customer exactly once,
     # so any production-size run must raise it or die with

@@ -69,8 +69,9 @@ def get_spark(
         # default — a 154-query corpus emits ~1-1.5k distinct
         # whole-stage-codegen units per pass, so the cache thrashes and
         # EVERY pass re-Janino-compiles and re-JITs the entire corpus's
-        # generated code (optimization r14, tools/burst_probe.py: warm
-        # pooled rep 52-90 s wall / 764-1405 s CPU with the default vs
+        # generated code (optimization r14,
+        # `git show b7fa307:tools/burst_probe.py`: warm pooled rep
+        # 52-90 s wall / 764-1405 s CPU with the default vs
         # 33 s / 485 s with the cache sized to the workload; the JIT
         # storm is also r13's "cross-entry CPU burst" anomaly, which
         # charged 60-330 s bursts to whichever entry was running). 4096
@@ -83,16 +84,9 @@ def get_spark(
     # Python workers inherit pyarrow/pandas/connector imports via
     # copy-on-write instead of paying 0.3-0.6 s of imports per fresh
     # worker (measured r13 — the dominant cost of every Python-exchanging
-    # stage on a cold pool). Guarded: only when the module is importable
-    # from here (local mode / repo checkout); cluster deployments ship it
-    # with --py-files and set the conf themselves.
-    if os.environ.get("SPARK_GRAFT_PRELOAD_DAEMON", "1") != "0":
-        import importlib.util
-
-        if importlib.util.find_spec("stellar_etl_airflow_spark.pydaemon") is not None:
-            builder = builder.config(
-                "spark.python.daemon.module", "stellar_etl_airflow_spark.pydaemon"
-            )
+    # stage on a cold pool). Cluster deployments ship the module with
+    # --py-files.
+    builder = builder.config("spark.python.daemon.module", "stellar_etl_airflow_spark.pydaemon")
     # Local-FS permission shim (optimization r14, guide §1.2 "per-task
     # work"): without libhadoop.so, Hadoop's RawLocalFileSystem forks a
     # `chmod` for EVERY file/dir a checkpoint, state store or stage
@@ -105,7 +99,7 @@ def get_spark(
     # driver, tests) and is a no-op conf on an already-running JVM.
     # Local-mode-only concern: on HDFS/S3 the code path does not exist.
     _jar = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "fastlocalfs.jar")
-    if os.environ.get("SPARK_GRAFT_FASTFS", "1") != "0" and os.path.exists(_jar):
+    if os.path.exists(_jar):
         builder = (
             builder.config("spark.driver.extraClassPath", _jar)
             .config("spark.hadoop.fs.file.impl", "fastlocalfs.FastLocalFileSystem")
@@ -125,13 +119,14 @@ def warm_python_data_source(spark: SparkSession) -> None:
 
     The connector's first use in a session pays ~8 s of driver-side
     plan/write-worker spawn + registration on top of its ~2 s warm wall
-    (measured r12, ``tools/q55_sweep_probe.py``: cold 10.8 s / warm
-    1.7 s / ~4.5 s after 3 min idle — pyspark worker pools also shrink
-    when idle). bench.py warms before its sweeps; any production-shaped
-    long session should too — either ``get_spark(warm_ds=True)`` or this
-    one call (VERDICT r12 ask #6). The scratch table path is
-    uuid-suffixed and removed in a finally, so concurrent or crashed
-    callers never collide on a shared warmup directory."""
+    (measured r12, ``git show b7fa307:tools/q55_sweep_probe.py``: cold
+    10.8 s / warm 1.7 s / ~4.5 s after 3 min idle — pyspark worker pools
+    also shrink when idle). bench.py warms before its sweeps; any
+    production-shaped long session should too — either
+    ``get_spark(warm_ds=True)`` or this one call (VERDICT r12 ask #6).
+    The scratch table path is uuid-suffixed and removed in a finally, so
+    concurrent or crashed callers never collide on a shared warmup
+    directory."""
     import shutil
     import tempfile
     import uuid

@@ -194,7 +194,6 @@ class _SnapshotReader(DataSourceReader):
         # reader needs only files / mapping / dv refs besides that
         self._manifest = S.read_manifest(self._path, self._version, resolve=False)
         self._where: list = []
-        self._files_per_task = int(options.get("filespertask", 1) or 1)
         # unified schema computed ONCE driver-side (footer reads);
         # pa.Schema pickles with the reader to every task. A ZERO-FILE
         # version (truncate) carries no parquet schema of its own, so the
@@ -268,15 +267,13 @@ class _SnapshotReader(DataSourceReader):
 
     def partitions(self):
         files = S.prune_files(self._manifest, self._where)
-        n = max(1, self._files_per_task)
-        groups = [files[i : i + n] for i in range(0, len(files), n)]
         return [
             _FilePartition(
-                files=g,
+                files=[f],
                 where=list(self._where),
-                dv={f: self._dv[f] for f in g if f in self._dv},
+                dv={f: self._dv[f]} if f in self._dv else {},
             )
-            for g in groups
+            for f in files
         ] or [_FilePartition()]
 
     def read(self, partition: _FilePartition):
@@ -668,8 +665,7 @@ class SnapshotSource(DataSource):
     """``spark.read.format("snapshot")`` / ``df.write.format("snapshot")``.
 
     Read options: ``path`` (table dir, required), ``version`` (time
-    travel; default latest), ``filesPerTask`` (files grouped per input
-    partition; default 1).
+    travel; default latest). Each input partition reads one file.
 
     Write options: ``path`` (required), ``stats_cols`` /
     ``bloom_cols`` (comma-separated: record per-file [min, max] stats /
@@ -761,7 +757,6 @@ class _SnapshotStreamReader(DataSourceStreamReader):
 
         self._path = options["path"]
         self._ignore_changes = str(options.get("ignorechanges", "")).lower() == "true"
-        self._files_per_task = int(options.get("filespertask", 1) or 1)
         # the planner's schema is LOGICAL; files carry physical names.
         # The column mapping is PINNED AT STREAM START (a rename
         # mid-stream needs a restart, like Delta's columnMapping streams)
@@ -828,11 +823,8 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         added = sorted(new - old)
         end_dv = S.read_dv(m_new)  # ref-based; no shard resolution needed
         dv = {f: end_dv[f] for f in added if f in end_dv}
-        n = max(1, self._files_per_task)
-        groups = [added[i : i + n] for i in range(0, len(added), n)]
         return [
-            _AppendPartition(files=g, dv={f: dv[f] for f in g if f in dv})
-            for g in groups
+            _AppendPartition(files=[f], dv={f: dv[f]} if f in dv else {}) for f in added
         ] or [_AppendPartition()]
 
     def read(self, partition: _AppendPartition):

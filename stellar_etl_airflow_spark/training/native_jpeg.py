@@ -3,7 +3,8 @@
 with the system compiler and loaded via ctypes. This is the real
 "register a native decoder" swap SCALE.md's codec-throughput section
 documents — ~2-3 orders of magnitude over the pure-Python bit-serial
-Huffman path — exercised end-to-end by ``tools/native_seam_probe.py``.
+Huffman path — exercised end-to-end by ``tests/test_native_seam.py``
+(in-pipeline numbers: ``git show b7fa307:tools/native_seam_probe.py``).
 
 Gating: everything degrades honestly. ``available()`` is False when the
 compiler, jpeglib.h, or libjpeg is missing, and ``decoder()`` raises a

@@ -15,6 +15,7 @@ from stellar_etl_airflow_spark.operators.merge import (
     apply_changes,
     key_bucket,
     load_table_props,
+    merge_additive_versioned,
 )
 from stellar_etl_airflow_spark.sinks import snapshots as S
 
@@ -50,6 +51,24 @@ def test_versioned_merge_applies_and_time_travels(spark, tmp_path):
     assert (v1, v2) == (2, 3)  # v1 bootstrap publishes an empty snapshot first
     assert _state(spark, tbl) == {1: 11.0, 3: 30.0}  # update + insert + delete
     assert _state(spark, tbl, v1) == {1: 10.0, 2: 20.0}  # old version intact
+
+
+def test_empty_change_batch_is_a_noop(spark, tmp_path):
+    """A MERGE with no source rows changes nothing: no write job, no
+    new version, no new manifest (both merge entry points)."""
+    tbl, agg = str(tmp_path / "accounts"), str(tmp_path / "counts")
+    v1, _ = apply_changes(spark, _changes(spark, [(1, 10.0, 100, 1, False)]), tbl, KEYS, n_buckets=8)
+    a1, _ = merge_additive_versioned(
+        spark, spark.createDataFrame([(1, 5)], "k long, n long"), agg, ("k",), ("n",), n_buckets=4
+    )
+    metas = {p: sorted(os.listdir(os.path.join(p, "_snapshots"))) for p in (tbl, agg)}
+    assert apply_changes(spark, _changes(spark, []), tbl, KEYS, n_buckets=8) == (v1, [])
+    assert merge_additive_versioned(
+        spark, spark.createDataFrame([], "k long, n long"), agg, ("k",), ("n",), n_buckets=4
+    ) == (a1, [])
+    assert (S.latest_version(tbl), S.latest_version(agg)) == (v1, a1)
+    assert {p: sorted(os.listdir(os.path.join(p, "_snapshots"))) for p in (tbl, agg)} == metas
+    assert _state(spark, tbl) == {1: 10.0}
 
 
 def test_versioned_merge_touches_only_matching_buckets(spark, tmp_path):

@@ -305,8 +305,9 @@ def additive_mor_storm(spark, root: str, rounds: int) -> dict:
     materializes the aggregate and a vacuumer prunes — writers never
     read, never conflict, never recompute. Expected: exact counters,
     zero errors, zero merge recomputes. Since r11 the fold REBASES over
-    pure-append CAS losses (see tools/fold_liveness_probe.py for the
-    dedicated liveness measurement), so fold raises here should be ~0;
+    pure-append CAS losses (see
+    `git show b7fa307:tools/fold_liveness_probe.py` for the dedicated
+    liveness measurement), so fold raises here should be ~0;
     any counted ones are refolds forced by non-append interleavings."""
     from stellar_etl_airflow_spark.operators import additive_mor as AM
 

@@ -150,13 +150,14 @@ PROBES = [
     # regex; the t64/t63 wall ratio at the same K IS the Python-stage
     # cost a 100 TB operator choice weighs (salting appends to words,
     # never touches tag structure, so parse work stays linear).
-    # s16 and q65 are probed by dedicated tools: the streaming entries'
+    # s16 and q65 are not probed here: the streaming entries'
     # _stream_scratch links SINGLE-FILE testdata tables and this
-    # harness writes multi-file dirs (tools/mor_counter_scale_probe.py
-    # drives the same append+fold protocol directly), and q65's DIV-10
-    # forest can't ride the id-offset replication — offset keys'
-    # parents land outside the replica, breaking the walk
-    # (tools/recursive_scale_probe.py builds the forest shape itself).
+    # harness writes multi-file dirs, and q65's DIV-10 forest can't ride
+    # the id-offset replication — offset keys' parents land outside the
+    # replica, breaking the walk. Their dedicated probes (SCALE.md) are
+    # `git show b7fa307:tools/mor_counter_scale_probe.py` (the same
+    # append+fold protocol, driven directly) and
+    # `git show b7fa307:tools/recursive_scale_probe.py` (the forest shape).
     "t64_html_extract_dom",
 ]
 

@@ -14,6 +14,7 @@ run's attribution is printed, so one-time session costs don't pollute.
 from __future__ import annotations
 
 import functools
+import importlib
 import os
 import sys
 import time
@@ -25,10 +26,39 @@ ACC: dict[str, list[float]] = defaultdict(lambda: [0, 0.0])
 DEPTH = [0]
 
 
-def _wrap(mod, name: str, label: str):
-    fn = getattr(mod, name, None)
-    if fn is None or not callable(fn):
-        return
+# Engine functions wrapped with timers: module (under the package) ->
+# attribute names, dotted for class members. A name that no longer
+# resolves raises, so a rename cannot drop out of the profile unnoticed.
+WRAPPED: dict[str, tuple[str, ...]] = {
+    "sinks.snapshots": (
+        "overwrite_versioned", "append_versioned", "append_versioned_rows",
+        "compact_snapshot", "compact_small_files", "compute_blooms",
+        "_file_stats", "read_snapshot", "scan_snapshot", "read_manifest",
+        "delete_where_dv", "vacuum", "adopt_staged", "_shard_stats",
+        "load_table_props", "Txn.commit",
+    ),
+    "operators.merge": ("apply_changes",),
+    "operators.additive_mor": ("read_additive", "write_delta", "write_delta_rows", "fold_additive"),
+    "training.dedup": ("_minhash_bands", "_minhash_sig_frame"),
+}
+
+
+def resolve(mod_name: str, attr: str):
+    """``(owner, name, fn)`` for ``attr`` in ``stellar_etl_airflow_spark.<mod_name>``;
+    raises AttributeError when it is gone or not callable."""
+    owner = importlib.import_module(f"stellar_etl_airflow_spark.{mod_name}")
+    *path, name = attr.split(".")
+    for part in path:
+        owner = getattr(owner, part, None)
+    fn = getattr(owner, name, None)
+    if not callable(fn):
+        raise AttributeError(f"{mod_name}.{attr} does not resolve to a callable")
+    return owner, name, fn
+
+
+def _wrap(mod_name: str, attr: str) -> None:
+    owner, name, fn = resolve(mod_name, attr)
+    label = f"{mod_name.rsplit('.', 1)[-1]}.{attr}"
 
     @functools.wraps(fn)
     def timed(*a, **k):
@@ -49,7 +79,7 @@ def _wrap(mod, name: str, label: str):
                 ACC["  (nested) " + label][0] += 1
                 ACC["  (nested) " + label][1] += dt
 
-    setattr(mod, name, timed)
+    setattr(owner, name, timed)
 
 
 def main() -> None:
@@ -61,24 +91,9 @@ def main() -> None:
     spark = get_spark("trace-profile", warm_ds=True)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from stellar_etl_airflow_spark.operators import additive_mor, merge
-    from stellar_etl_airflow_spark.sinks import snapshots as S
-    from stellar_etl_airflow_spark.training import dedup
-
-    for fname in (
-        "overwrite_versioned", "append_versioned", "append_versioned_rows",
-        "compact_snapshot", "compact_small_files", "compute_blooms",
-        "_file_stats", "read_snapshot", "scan_snapshot", "read_manifest",
-        "delete_where_dv", "vacuum", "adopt_staged", "_shard_stats",
-        "load_table_props",
-    ):
-        _wrap(S, fname, f"snapshots.{fname}")
-    _wrap(S.Txn, "commit", "snapshots.Txn.commit")
-    _wrap(merge, "apply_changes", "merge.apply_changes")
-    for fname in ("read_additive", "append_additive"):
-        _wrap(additive_mor, fname, f"additive_mor.{fname}")
-    for fname in ("_minhash_bands", "minhash_signatures"):
-        _wrap(dedup, fname, f"dedup.{fname}")
+    for mod_name, attrs in WRAPPED.items():
+        for attr in attrs:
+            _wrap(mod_name, attr)
 
     # late import so the wrapped module attributes are what entries bind
     from stellar_etl_airflow_spark.queries import QUERIES
