@@ -52,6 +52,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 from ..session import empty_df
 from ..sinks import snapshots as S
@@ -267,7 +268,7 @@ def _merge_versioned_once(
         # manifest read instead of crashing. Re-raise when no version
         # appeared: then the failure was genuine, not a lost race.
         try:
-            S.snapshot(path)
+            S.snapshot(path, S.frame_schema(changes, {BUCKET_COL: T.IntegerType()}))
         except (ValueError, S.ConcurrentWriteError):
             if S.latest_version(path) is None:
                 raise

@@ -18,6 +18,7 @@ but every setting here is chosen for the 1000-executor / 100 TB case:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -29,42 +30,36 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
-def get_spark(
-    app_name: str = "stellar-etl-spark",
-    extra_conf: dict | None = None,
-    warm_ds: bool = False,
-) -> SparkSession:
-    """Build the session. ``warm_ds=True`` additionally absorbs the
-    Python Data Source's first-use cost up front (see
-    :func:`warm_python_data_source`) — recommended for long-lived /
-    production-shaped sessions that will use the snapshot connector."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    par = default_parallelism()
+_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "fastlocalfs.jar")
+_CLASSPATH = "spark.driver.extraClassPath"
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(max(par, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.parquet.filterPushdown", "true")
+
+def session_conf(extra_conf: dict | None, launching: bool, environ=os.environ) -> dict:
+    """Every conf :func:`get_spark` sets, ``extra_conf`` last.
+    ``launching``: this call starts the JVM, so launch-time confs still
+    take effect."""
+    par = default_parallelism()
+    conf = {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(max(par, 8)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        "spark.sql.parquet.filterPushdown": "true",
         # Spark 4.1 Python Data Source pushFilters (SPARK-48921) is
         # opt-in; the snapshot source's manifest pruning rides on it
-        .config("spark.sql.python.filterPushdown.enabled", "true")
+        "spark.sql.python.filterPushdown.enabled": "true",
         # driver testdata stores events.ts as TIMESTAMP(NANOS); Spark has no
         # nanos timestamp — read as long and convert (see load_tables)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.sources.partitionOverwriteMode": "dynamic",
         # local mode is one driver-only JVM — give it most of the host
         # (container budget 128 GiB); real clusters size executors instead
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
-        .config("spark.ui.enabled", "false")
+        "spark.driver.memory": environ.get("SPARK_DRIVER_MEMORY", "64g"),
+        "spark.ui.enabled": "false",
         # The JVM-global generated-class cache holds 100 entries by
         # default — a 154-query corpus emits ~1-1.5k distinct
         # whole-stage-codegen units per pass, so the cache thrashes and
@@ -78,15 +73,16 @@ def get_spark(
         # bounds the LRU at ~3x the corpus's working set; entries are
         # compiled classes (kB each), not data. Static conf: must be set
         # before the JVM session exists, hence here and not per-entry.
-        .config("spark.sql.codegen.cache.maxEntries", "4096")
-    )
-    # Preloaded worker daemon (guide §4.5 at the process level): forked
-    # Python workers inherit pyarrow/pandas/connector imports via
-    # copy-on-write instead of paying 0.3-0.6 s of imports per fresh
-    # worker (measured r13 — the dominant cost of every Python-exchanging
-    # stage on a cold pool). Cluster deployments ship the module with
-    # --py-files.
-    builder = builder.config("spark.python.daemon.module", "stellar_etl_airflow_spark.pydaemon")
+        "spark.sql.codegen.cache.maxEntries": "4096",
+        # Preloaded worker daemon (guide §4.5 at the process level): forked
+        # Python workers inherit pyarrow/pandas/connector imports via
+        # copy-on-write instead of paying 0.3-0.6 s of imports per fresh
+        # worker (measured r13 — the dominant cost of every
+        # Python-exchanging stage on a cold pool). Cluster deployments ship
+        # the module with --py-files.
+        "spark.python.daemon.module": "stellar_etl_airflow_spark.pydaemon",
+        **(extra_conf or {}),
+    }
     # Local-FS permission shim (optimization r14, guide §1.2 "per-task
     # work"): without libhadoop.so, Hadoop's RawLocalFileSystem forks a
     # `chmod` for EVERY file/dir a checkpoint, state store or stage
@@ -94,18 +90,60 @@ def get_spark(
     # measured r13/r14 via /proc/stat `processes`). The bundled jar
     # (tools/fastfs, ~60 lines of Java) reimplements setPermission with
     # java.nio setPosixFilePermissions — identical checksummed-FS
-    # semantics, no fork. Driver classpath confs only take effect at JVM
-    # launch, so this works for the session that starts the JVM (bench,
-    # driver, tests) and is a no-op conf on an already-running JVM.
-    # Local-mode-only concern: on HDFS/S3 the code path does not exist.
-    _jar = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "fastlocalfs.jar")
-    if os.path.exists(_jar):
-        builder = (
-            builder.config("spark.driver.extraClassPath", _jar)
-            .config("spark.hadoop.fs.file.impl", "fastlocalfs.FastLocalFileSystem")
-            .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "fastlocalfs.FastLocalFs")
-        )
-    for k, v in (extra_conf or {}).items():
+    # semantics, no fork. Local-mode-only concern: on HDFS/S3 the code
+    # path does not exist. The driver classpath is read only at JVM
+    # launch, and a class path given in PYSPARK_SUBMIT_ARGS wins over this
+    # conf; the fs confs name classes from the jar, so they are set only
+    # when this call puts the jar on the classpath of the JVM it starts.
+    if launching and os.path.exists(_JAR) and not _submit_args_set_classpath(environ):
+        prior = conf.get(_CLASSPATH) or _defaults_conf(environ).get(_CLASSPATH)
+        conf[_CLASSPATH] = os.pathsep.join(p for p in (prior, _JAR) if p)
+        conf.setdefault("spark.hadoop.fs.file.impl", "fastlocalfs.FastLocalFileSystem")
+        conf.setdefault("spark.hadoop.fs.AbstractFileSystem.file.impl", "fastlocalfs.FastLocalFs")
+    return conf
+
+
+def _submit_args_set_classpath(environ) -> bool:
+    args = environ.get("PYSPARK_SUBMIT_ARGS", "")
+    return "--driver-class-path" in args or _CLASSPATH in args
+
+
+def _defaults_conf(environ) -> dict:
+    """``spark-defaults.conf`` as spark-submit finds it: a ``--conf``
+    replaces its value rather than extending it."""
+    import pyspark
+
+    conf_dir = environ.get("SPARK_CONF_DIR") or os.path.join(
+        environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__), "conf"
+    )
+    out = {}
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as fh:
+            for line in fh:
+                line = line.strip()
+                if line and not line.startswith(("#", "!")):
+                    key, *value = re.split(r"\s*[=:\s]\s*", line, maxsplit=1)
+                    out[key] = value[0] if value else ""
+    except OSError:
+        pass
+    return out
+
+
+def get_spark(
+    app_name: str = "stellar-etl-spark",
+    extra_conf: dict | None = None,
+    warm_ds: bool = False,
+) -> SparkSession:
+    """Build the session. ``warm_ds=True`` additionally absorbs the
+    Python Data Source's first-use cost up front (see
+    :func:`warm_python_data_source`) — recommended for long-lived /
+    production-shaped sessions that will use the snapshot connector."""
+    from pyspark import SparkContext
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in session_conf(extra_conf, launching=SparkContext._gateway is None).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if warm_ds:

@@ -9,7 +9,7 @@
   we sort within partitions after range-partitioning on the sort key,
   matching the practical contract of the BigQuery export (SURVEY §7.2
   hard part b). This container lacks the spark-avro connector jar, so the
-  writer produces REAL Avro binary through the pure-Python container
+  writer produces REAL Avro binary through the column-wise container
   encoder (avro_writer.py), one file per partition via mapInArrow; with
   the jar present the DataSource path is used instead. Either way the
   bytes on the wire are Avro Object Container Files.
@@ -49,22 +49,31 @@ def export_slice(
     """Half-open time slice, explicit projection, ordered export. Returns
     the format actually written ('avro' or 'parquet' fallback)."""
     order_col = order_by or ts_col
-    out = (
-        df.filter((F.col(ts_col) >= F.lit(t0).cast("timestamp")) & (F.col(ts_col) < F.lit(t1).cast("timestamp")))
-        .select(*columns)
-        .repartitionByRange(F.col(order_col))
-        .sortWithinPartitions(order_col)
+    out = df.filter(
+        (F.col(ts_col) >= F.lit(t0).cast("timestamp")) & (F.col(ts_col) < F.lit(t1).cast("timestamp"))
+    ).select(*columns)
+    return write_ordered(out, order_col, dest)
+
+
+def write_ordered(out: DataFrame, order_col: str, dest: str) -> str:
+    """The reference's ORDER BY as a per-file guarantee: range-partition
+    on the sort key, sort within partitions, then
+    :func:`write_avro_or_parquet`. Returns the format written."""
+    return write_avro_or_parquet(
+        out.repartitionByRange(F.col(order_col)).sortWithinPartitions(order_col), dest
     )
-    return write_avro_or_parquet(out, dest)
 
 
 def write_avro_or_parquet(out: DataFrame, dest: str) -> str:
     """Write avro via the spark-avro DataSource when present; when the
     connector jar is absent, write REAL Avro binary anyway through the
-    pure-Python container writer (avro_writer.py) running distributed —
+    Python container writer (avro_writer.py) running distributed —
     one Avro Object Container File per partition via mapInArrow. Returns
     the format actually written ('avro' either way; 'parquet' remains only
-    as a last-resort marker if the Python writer cannot express a type).
+    as a last-resort marker if the Python writer cannot express a type:
+    ``spark_schema_to_avro`` raises that TypeError on the driver, before
+    any job, since one raised in a Python worker would arrive here as a
+    PythonException).
     Read results back with :func:`read_export` (DataSource if present,
     else the Python reader). Any real write failure (permissions, disk,
     task errors) propagates."""
@@ -92,13 +101,14 @@ def _missing_avro_datasource(exc: Exception) -> bool:
 
 def write_avro_distributed(out: DataFrame, dest: str, codec: str = "deflate") -> int:
     """Distributed Avro export without the spark-avro jar: each partition
-    writes one Avro Object Container File (pure-Python encoder,
-    avro_writer.py) via mapInArrow — Arrow batches preserve null/timestamp
-    /decimal fidelity exactly (no pandas NaN ambiguity). The per-partition
-    write preserves sortWithinPartitions ordering, matching the reference
-    export's per-file ordering contract. Blocks are deflate-compressed by
-    default (the spec's RFC-1951 codec, stdlib zlib) — the right trade for
-    export bandwidth at scale. Returns total rows written."""
+    writes one Avro Object Container File via mapInArrow, its blocks
+    encoded column-wise straight from the partition's Arrow batches
+    (avro_writer.py) — Arrow keeps null/timestamp/decimal fidelity exactly.
+    The per-partition write preserves sortWithinPartitions ordering,
+    matching the reference export's per-file ordering contract. Blocks are
+    deflate-compressed by default (the spec's RFC-1951 codec, stdlib zlib)
+    — the right trade for export bandwidth at scale. Returns total rows
+    written."""
     import itertools
     import shutil
 
@@ -112,12 +122,12 @@ def write_avro_distributed(out: DataFrame, dest: str, codec: str = "deflate") ->
     os.makedirs(dest, exist_ok=True)
 
     def write_part(batches):
-        rows = (r for b in batches for r in b.to_pylist())
-        first = next(rows, None)
+        batches = (b for b in batches if b.num_rows)
+        first = next(batches, None)
         if first is None:
             return  # empty partition -> no file
         path = os.path.join(dest, AW.new_part_name())
-        n = AW.write_container(path, avsc, itertools.chain([first], rows), codec=codec)
+        n = AW.write_container(path, avsc, itertools.chain([first], batches), codec=codec)
         yield pa.RecordBatch.from_pydict({"file": [path], "n_rows": [n]})
 
     manifest = out.mapInArrow(write_part, "file string, n_rows long").collect()

@@ -52,7 +52,7 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ..session import local_df
+from ..session import empty_df, local_df
 
 _SNAPDIR = "_snapshots"
 
@@ -473,7 +473,9 @@ class Txn:
     - **Carry-forward.** Everything the begin manifest records rides
       into the next version unless the caller changes it: the applied-txn
       ledger, stats/bloom pins and per-file values, column mapping, CHECK
-      constraints, deletion vectors, ``base`` and ``mixed_schema``.
+      constraints, deletion vectors, ``base``, ``mixed_schema`` and the
+      physical ``schema`` (re-read from the first file a txn adds, or
+      from the first listed file when none is recorded).
       Callers state only what they change: :meth:`add` the files they
       wrote (with stats/blooms), :meth:`remove` files or a predicate
       (their stats, blooms and DVs go with them), :meth:`set` or
@@ -707,6 +709,10 @@ class Txn:
         txns = dict(self.get("txns") or {})
         if self._txn_id is not None:
             txns[self._txn_id] = version
+        schema = self.get("schema")
+        probe = next(iter(self._added), None) or (None if schema or not files else files[0])
+        if probe:
+            schema = _physical_schema(probe, self.get("base") or self.path)
         manifest = {
             "version": version,
             "ts": time.time(),
@@ -718,6 +724,9 @@ class Txn:
             # schema-evolving merge keeps untouched buckets' old-schema files);
             # readers then pay the mergeSchema footer pass, and ONLY then
             "mixed_schema": bool(self.get("mixed_schema")),
+            # the physical schema (StructType JSON) of the files last added,
+            # carried forward: what a version listing no files reads as
+            "schema": schema,
             # applied-transaction ledger {txn_id: version} — the Delta
             # txnAppId/txnVersion idea: a write re-submitted with a
             # recorded txn_id is a no-op, giving EXACTLY-ONCE semantics for
@@ -817,13 +826,14 @@ def _shard_stats(path: str, version: int, manifest: dict) -> None:
     manifest["stats_shards"] = shards
 
 
-def snapshot(path: str) -> int:
+def snapshot(path: str, schema: str | None = None) -> int:
     """Publish the directory's current data files as the next version
     (bootstrap for tables written by plain writers). Refuses tables
     that are ALREADY version-tracked: their directory holds every
     retained version's files, so a blind re-bootstrap would publish
     superseded files alongside current ones and double rows
-    (review r8)."""
+    (review r8). ``schema`` (:func:`frame_schema`) is what the version
+    reads as when the directory holds no files."""
     if latest_version(path) is not None:
         raise ValueError(
             f"{path} is already snapshot-tracked (v{latest_version(path)}): "
@@ -831,8 +841,29 @@ def snapshot(path: str) -> int:
             "duplicate rows. Write through the versioned APIs instead."
         )
     t = Txn(path)
-    t.load({"files": _list_data_files(path)})
+    t.load({"files": _list_data_files(path), "schema": schema})
     return t.commit("bootstrap")
+
+
+def frame_schema(df: DataFrame, partition_cols: dict) -> str:
+    """``StructType.json()`` of the table written from ``df`` and
+    partitioned by ``partition_cols`` ({name: type}) as Spark reads it
+    back: every field nullable, partition columns last."""
+    from pyspark.sql import types as T
+
+    def nullable(dt):
+        if isinstance(dt, T.StructType):
+            return T.StructType([T.StructField(f.name, nullable(f.dataType), True) for f in dt])
+        if isinstance(dt, T.ArrayType):
+            return T.ArrayType(nullable(dt.elementType), True)
+        if isinstance(dt, T.MapType):
+            return T.MapType(nullable(dt.keyType), nullable(dt.valueType), True)
+        return dt
+
+    st = nullable(T.StructType([f for f in df.schema if f.name not in partition_cols]))
+    for name, dt in partition_cols.items():
+        st.add(name, dt, True)
+    return st.json()
 
 
 
@@ -1113,6 +1144,37 @@ def _parquet_fields(f: str) -> frozenset:
     return frozenset(pq.read_schema(f).names)
 
 
+def _physical_schema(f: str, base: str) -> str:
+    """Spark's schema of one data file as ``StructType.json()``: the
+    footer's Spark row metadata (else the Arrow schema), plus the
+    ``k=v`` directories between ``base`` and the file as partition
+    columns, typed as Spark infers integers (int, then long); any other
+    value is taken as a string."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    arrow = pq.read_schema(f)
+    row = (arrow.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    st = T.StructType.fromJson(json.loads(row)) if row else from_arrow_schema(arrow)
+    rel = os.path.relpath(os.path.dirname(os.path.abspath(f)), os.path.abspath(base))
+    for part in rel.split(os.sep):
+        k, eq, v = part.partition("=")
+        if eq and k not in st.names:
+            st.add(k, _partition_type(v), True)
+    return st.json()
+
+
+def _partition_type(v: str):
+    from pyspark.sql import types as T
+
+    try:
+        n = int(v)
+    except ValueError:
+        return T.StringType()
+    return T.IntegerType() if -(2**31) <= n < 2**31 else T.LongType()
+
+
 def _append_prestage(path, txn_id, staged_fields, frame, stats_cols, bloom_cols):
     """Shared pre-stage guards for the append paths. Returns the
     recorded version (int) on a txn replay, else the :class:`Txn` begun
@@ -1307,10 +1369,16 @@ def _read_physical(
     manifest's reader options — columns carry their PHYSICAL names.
     ``with_meta`` attaches the file path (scheme-stripped) and per-file
     row index as ``_dv_file``/``_dv_idx`` — the deletion-vector join key."""
+    files = m["files"] if files is None else files
+    if not files and m.get("schema"):
+        # a version listing no files (every row deleted) reads as empty
+        from pyspark.sql.types import StructType
+
+        return empty_df(spark, StructType.fromJson(json.loads(m["schema"])))
     reader = spark.read.option("mergeSchema", "true" if m.get("mixed_schema") else "false")
     if m.get("base"):
         reader = reader.option("basePath", m["base"])
-    df = reader.parquet(*(m["files"] if files is None else files))
+    df = reader.parquet(*files)
     if with_meta:
         # _metadata.file_path renders URL-ENCODED ("file:/a/has%20space/x")
         # — verified on this Spark — so strip the scheme AND url_decode;
@@ -1601,8 +1669,8 @@ def drop_constraint(path: str, name: str) -> int:
 def read_snapshot(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
     """DataFrame over one table version (default: latest), under that
     version's LOGICAL schema (column mapping applied — see
-    :func:`rename_column`). Empty versions read as an empty frame only
-    when the table has a readable schema."""
+    :func:`rename_column`). A version listing no files reads as an empty
+    frame of the schema its manifest carries."""
     m = read_manifest(path, version)
     # mergeSchema only when the manifest says this version mixes file
     # schemas (schema-evolving merges keep untouched buckets' old-schema

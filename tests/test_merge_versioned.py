@@ -71,6 +71,26 @@ def test_empty_change_batch_is_a_noop(spark, tmp_path):
     assert _state(spark, tbl) == {1: 10.0}
 
 
+def test_fully_deleted_table_reads_as_empty(spark, tmp_path):
+    """A table every row was deleted from lists no files; its latest
+    version reads as an empty frame of the schema it had, through
+    read_snapshot and scan_snapshot alike. So does one fed only empty
+    batches."""
+    tbl = str(tmp_path / "accounts")
+    apply_changes(spark, _changes(spark, [(1, 10.0, 100, 1, False), (2, 20.0, 100, 1, False)]), tbl, KEYS, n_buckets=8)
+    schema = S.read_snapshot(spark, tbl).schema
+    v, _ = apply_changes(spark, _changes(spark, [(1, 0.0, 101, 1, True), (2, 0.0, 101, 1, True)]), tbl, KEYS, n_buckets=8)
+    assert S.read_manifest(tbl, v)["files"] == []
+    for df in (S.read_snapshot(spark, tbl), S.scan_snapshot(spark, tbl, [("account_id", "=", 1)])):
+        assert df.schema == schema and df.count() == 0
+    # a table fed only an empty batch never wrote a file: its bootstrap
+    # version carries the batch's schema
+    fresh = str(tmp_path / "fresh")
+    apply_changes(spark, _changes(spark, []), fresh, KEYS, n_buckets=8)
+    back = S.read_snapshot(spark, fresh)
+    assert back.schema == schema and back.count() == 0
+
+
 def test_versioned_merge_touches_only_matching_buckets(spark, tmp_path):
     tbl = str(tmp_path / "t")
     seed = [(i, float(i), 100, 1, False) for i in range(1, 33)]

@@ -55,10 +55,10 @@ def test_lost_bootstrap_already_tracked_rebases(spark, tmp_path, monkeypatch):
 
     calls = {"n": 0}
 
-    def losing_snapshot(path):
+    def losing_snapshot(path, *args):
         calls["n"] += 1
-        real_snapshot(path)  # the peer wins the bootstrap ...
-        return real_snapshot(path)  # ... and our own attempt raises
+        real_snapshot(path, *args)  # the peer wins the bootstrap ...
+        return real_snapshot(path, *args)  # ... and our own attempt raises
 
     monkeypatch.setattr(S, "snapshot", losing_snapshot)
     batch = spark.createDataFrame([(k, 1) for k in range(4)], "k long, n long")
@@ -77,8 +77,8 @@ def test_lost_bootstrap_cas_loss_rebases(spark, tmp_path, monkeypatch):
     tbl = str(tmp_path / "t")
     real_snapshot = S.snapshot
 
-    def losing_snapshot(path):
-        real_snapshot(path)  # the peer's v1 hits the slot first
+    def losing_snapshot(path, *args):
+        real_snapshot(path, *args)  # the peer's v1 hits the slot first
         raise S.ConcurrentWriteError("version manifest v1 already published")
 
     monkeypatch.setattr(S, "snapshot", losing_snapshot)
@@ -95,7 +95,7 @@ def test_genuine_bootstrap_failure_still_raises(spark, tmp_path, monkeypatch):
     original error propagates."""
     tbl = str(tmp_path / "t")
 
-    def broken_snapshot(path):
+    def broken_snapshot(path, *args):
         raise ValueError("disk on fire")
 
     monkeypatch.setattr(S, "snapshot", broken_snapshot)
