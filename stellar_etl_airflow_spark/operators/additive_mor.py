@@ -239,10 +239,11 @@ def fold_additive(
                 last = e
                 continue
         # row count from the committed files' footers, not a second run
-        # of the aggregation; a zero-row table stages no part files
-        # (ADVICE r11)
-        files = t.m["files"]
-        return v, spark.read.parquet(*files).count() if files else 0
+        # of the aggregation (nor a Spark job); a zero-row table stages
+        # no part files (ADVICE r11)
+        import pyarrow.parquet as pq
+
+        return v, sum(pq.ParquetFile(f).metadata.num_rows for f in t.m["files"])
     raise S.ConcurrentWriteError(
         f"fold of {path} was invalidated by non-append commits {max_refolds} "
         "times; the pile is still correct — retry on the next maintenance "

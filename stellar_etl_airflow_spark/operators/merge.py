@@ -346,6 +346,10 @@ def _merge_versioned_once(
         # each group with basePath (preserving its partition columns), and
         # union by name with null fill for columns a layout lacks. Files
         # without a `_p` value get BUCKET_COL derived from the merge keys.
+        # Each group is read like any snapshot subset (S._read_physical):
+        # the group in the recorded layout plans from the manifest's
+        # schema with no footer job; the others infer theirs, so flat
+        # files never read a null `_p`.
         base = m.get("base", path)
 
         def signature(f: str) -> tuple[str, ...]:
@@ -359,26 +363,8 @@ def _merge_versioned_once(
             groups.setdefault(signature(f), []).append(f)
         parts = []
         for sig in sorted(groups):
-            gdf = (
-                spark.read
-                # mixed-schema tables (post-evolution keep-files) must
-                # merge footers, or inference from an arbitrary file
-                # silently drops an evolved column from the rewrite
-                # (review r8; same rule as snapshots._read_physical)
-                .option("mergeSchema", "true" if m.get("mixed_schema") else "false")
-                .option("basePath", base)
-                .parquet(*groups[sig])
-            )
+            gdf = S._read_physical(spark, m, groups[sig], with_meta=bool(dv_rw))
             if dv_rw:
-                gdf = gdf.select(
-                    "*",
-                    F.url_decode(
-                        F.regexp_replace(
-                            F.col("_metadata.file_path"), "^file:(//)?", ""
-                        )
-                    ).alias("_dv_file"),
-                    F.col("_metadata.row_index").alias("_dv_idx"),
-                )
                 gdf = S._apply_dv(spark, gdf, dv_rw)
             if BUCKET_COL not in gdf.columns:
                 gdf = gdf.withColumn(BUCKET_COL, key_bucket(keys, n_buckets))

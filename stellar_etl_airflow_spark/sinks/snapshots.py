@@ -475,7 +475,11 @@ class Txn:
       ledger, stats/bloom pins and per-file values, column mapping, CHECK
       constraints, deletion vectors, ``base``, ``mixed_schema`` and the
       physical ``schema`` (re-read from the first file a txn adds, or
-      from the first listed file when none is recorded).
+      from the first listed file when none is recorded) with its
+      partition ``layout``. The layout is recorded only when the schema
+      is exactly Spark's read schema for the listed files: a txn that
+      adds files beside carried ones keeps it only if the carried files
+      were recorded in the same layout with the same fields.
       Callers state only what they change: :meth:`add` the files they
       wrote (with stats/blooms), :meth:`remove` files or a predicate
       (their stats, blooms and DVs go with them), :meth:`set` or
@@ -709,10 +713,15 @@ class Txn:
         txns = dict(self.get("txns") or {})
         if self._txn_id is not None:
             txns[self._txn_id] = version
-        schema = self.get("schema")
+        schema, layout = self.get("schema"), self.get("layout")
         probe = next(iter(self._added), None) or (None if schema or not files else files[0])
         if probe:
-            schema = _physical_schema(probe, self.get("base") or self.path)
+            was = _data_fields(schema, layout)
+            schema, layout = _physical_schema(probe, self.get("base") or self.path)
+            # the record stands in for the carried files' footers only if
+            # they were recorded, in this layout, with the same fields
+            if carried and self._added and (was is None or was != _data_fields(schema, layout)):
+                layout = None
         manifest = {
             "version": version,
             "ts": time.time(),
@@ -727,6 +736,11 @@ class Txn:
             # the physical schema (StructType JSON) of the files last added,
             # carried forward: what a version listing no files reads as
             "schema": schema,
+            # the partition columns (`k=v` dir names under base) of the
+            # files `schema` was read from, when it is exactly Spark's read
+            # schema for every listed file in that layout; readers then plan
+            # from it without opening a footer (_read_schema). None: infer
+            "layout": layout,
             # applied-transaction ledger {txn_id: version} — the Delta
             # txnAppId/txnVersion idea: a write re-submitted with a
             # recorded txn_id is a no-op, giving EXACTLY-ONCE semantics for
@@ -768,6 +782,17 @@ class Txn:
             manifest["dv"] = {"path": sidecar, "counts": {f: len(v) for f, v in dv.items()}}
         _shard_stats(self.path, version, manifest)
         return manifest
+
+
+def _data_fields(schema: str | None, layout: list | None):
+    """A recorded schema's non-partition fields, nullable as Spark
+    reads them, with its layout; None when either is unrecorded."""
+    from pyspark.sql import types as T
+
+    if schema is None or layout is None:
+        return None
+    st = T.StructType.fromJson(json.loads(schema))
+    return _nullable(T.StructType([f for f in st if f.name not in layout])), list(layout)
 
 
 # Above this many files, per-file stats/blooms move out of the manifest
@@ -845,22 +870,27 @@ def snapshot(path: str, schema: str | None = None) -> int:
     return t.commit("bootstrap")
 
 
+def _nullable(dt):
+    """``dt`` with every field and element nullable, as Spark reads a
+    file source (field metadata dropped)."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType), True) for f in dt])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
 def frame_schema(df: DataFrame, partition_cols: dict) -> str:
     """``StructType.json()`` of the table written from ``df`` and
     partitioned by ``partition_cols`` ({name: type}) as Spark reads it
     back: every field nullable, partition columns last."""
     from pyspark.sql import types as T
 
-    def nullable(dt):
-        if isinstance(dt, T.StructType):
-            return T.StructType([T.StructField(f.name, nullable(f.dataType), True) for f in dt])
-        if isinstance(dt, T.ArrayType):
-            return T.ArrayType(nullable(dt.elementType), True)
-        if isinstance(dt, T.MapType):
-            return T.MapType(nullable(dt.keyType), nullable(dt.valueType), True)
-        return dt
-
-    st = nullable(T.StructType([f for f in df.schema if f.name not in partition_cols]))
+    st = _nullable(T.StructType([f for f in df.schema if f.name not in partition_cols]))
     for name, dt in partition_cols.items():
         st.add(name, dt, True)
     return st.json()
@@ -1144,12 +1174,18 @@ def _parquet_fields(f: str) -> frozenset:
     return frozenset(pq.read_schema(f).names)
 
 
-def _physical_schema(f: str, base: str) -> str:
+def _physical_schema(f: str, base: str) -> tuple[str, list | None]:
     """Spark's schema of one data file as ``StructType.json()``: the
     footer's Spark row metadata (else the Arrow schema), plus the
     ``k=v`` directories between ``base`` and the file as partition
-    columns, typed as Spark infers integers (int, then long); any other
-    value is taken as a string."""
+    columns, typed as Spark's partition discovery types the value
+    (:func:`_partition_type`; string where that is uncertain).
+
+    Also returns the file's partition layout — its ``k=v`` column
+    names, outermost first — when the data fields are exactly what
+    Spark infers for the file: the footer carries Spark's row metadata,
+    and every directory between ``base`` and the file is a partition
+    whose name no data column has. None otherwise."""
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import from_arrow_schema
@@ -1157,22 +1193,109 @@ def _physical_schema(f: str, base: str) -> str:
     arrow = pq.read_schema(f)
     row = (arrow.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
     st = T.StructType.fromJson(json.loads(row)) if row else from_arrow_schema(arrow)
+    dirs = _partition_dirs(f, base)
+    names = [k for k, _ in dirs or ()]
+    exact = (
+        bool(row)
+        and dirs is not None
+        and len(set(names)) == len(names)
+        and not {k.lower() for k in names} & {n.lower() for n in st.names}
+    )
     rel = os.path.relpath(os.path.dirname(os.path.abspath(f)), os.path.abspath(base))
     for part in rel.split(os.sep):
         k, eq, v = part.partition("=")
         if eq and k not in st.names:
-            st.add(k, _partition_type(v), True)
-    return st.json()
+            st.add(k, _partition_type(v) or T.StringType(), True)
+    return st.json(), names if exact else None
+
+
+def _partition_dirs(f: str, base: str) -> list[tuple[str, str]] | None:
+    """The ``(column, raw value)`` of each directory between ``base``
+    and data file ``f``, outermost first. None when one of them is not
+    a plain ``k=v`` partition directory or ``f`` is not under ``base``."""
+    rel = os.path.relpath(os.path.dirname(os.path.abspath(f)), os.path.abspath(base))
+    if rel == os.curdir:
+        return []
+    out = []
+    for seg in rel.split(os.sep):
+        k, eq, v = seg.partition("=")
+        if not (eq and k) or "%" in k:
+            return None
+        out.append((k, v))
+    return out
+
+
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+_INT_RE = re.compile(r"[+-]?[0-9]+")
+_FRACTION_RE = re.compile(r"[+-]?[0-9]*\.[0-9]+")
+_DATE_RE = re.compile(r"([0-9]{4})-([0-9]{2})-([0-9]{2})")
+_TIMESTAMP_RE = re.compile(
+    r"([0-9]{4})-([0-9]{2})-([0-9]{2}) ([0-9]{2}):([0-9]{2}):([0-9]{2})(\.[0-9])?"
+)
 
 
 def _partition_type(v: str):
+    """The type Spark's partition discovery infers for one raw ``k=v``
+    directory value, where that is certain; None for the rest (a
+    fraction with exponent or several digits of seconds, an integer
+    beyond long, a value not starting with a letter, ...) and for
+    ``__HIVE_DEFAULT_PARTITION__`` (a null, typed by its column's other
+    values). Spark tries int, long, decimal, double, timestamp, date,
+    then string; the cases below were checked against Spark 4.1."""
+    import datetime
+
     from pyspark.sql import types as T
 
-    try:
+    if v == _DEFAULT_PARTITION:
+        return None
+    if _INT_RE.fullmatch(v):
         n = int(v)
-    except ValueError:
+        if -(2**31) <= n < 2**31:
+            return T.IntegerType()
+        return T.LongType() if -(2**63) <= n < 2**63 else None
+    if _FRACTION_RE.fullmatch(v):
+        return T.DoubleType()
+    # Spark parses timestamps from the unescaped value (':' is %3A on disk)
+    text = re.sub(r"%([0-9A-Fa-f]{2})", lambda h: chr(int(h.group(1), 16)), v)
+    for pattern, typ, make in (
+        (_TIMESTAMP_RE, T.TimestampType, datetime.datetime),
+        (_DATE_RE, T.DateType, datetime.date),
+    ):
+        hit = pattern.fullmatch(text)
+        if hit:
+            try:
+                make(*(int(g) for g in hit.groups()[:6]))
+            except ValueError:
+                return None
+            return typ()
+    if v[:1].isascii() and v[:1].isalpha() and v.strip() not in ("NaN", "Infinity"):
         return T.StringType()
-    return T.IntegerType() if -(2**31) <= n < 2**31 else T.LongType()
+    return None
+
+
+def _partition_column_type(values):
+    """The type Spark infers for a partition column holding these raw
+    directory values, where :func:`_partition_type` is certain of each
+    and Spark's widening of them is known; None otherwise."""
+    from pyspark.sql import types as T
+
+    types = set()
+    for v in values:
+        if v != _DEFAULT_PARTITION:
+            t = _partition_type(v)
+            if t is None:
+                return None
+            types.add(t)
+    if len(types) == 1:
+        return types.pop()
+    if T.StringType() in types:
+        return T.StringType()
+    widened = {
+        frozenset({T.IntegerType(), T.LongType()}): T.LongType(),
+        frozenset({T.IntegerType(), T.DoubleType()}): T.DoubleType(),
+        frozenset({T.DateType(), T.TimestampType()}): T.TimestampType(),
+    }
+    return widened.get(frozenset(types))
 
 
 def _append_prestage(path, txn_id, staged_fields, frame, stats_cols, bloom_cols):
@@ -1367,8 +1490,11 @@ def _read_physical(
 ) -> DataFrame:
     """Raw frame over a manifest's files (or a subset) with the
     manifest's reader options — columns carry their PHYSICAL names.
-    ``with_meta`` attaches the file path (scheme-stripped) and per-file
-    row index as ``_dv_file``/``_dv_idx`` — the deletion-vector join key."""
+    Where the manifest's recorded schema stands in for Spark's inference
+    (:func:`_read_schema`), building the frame opens no footer and runs
+    no Spark job. ``with_meta`` attaches the file path (scheme-stripped)
+    and per-file row index as ``_dv_file``/``_dv_idx`` — the
+    deletion-vector join key."""
     files = m["files"] if files is None else files
     if not files and m.get("schema"):
         # a version listing no files (every row deleted) reads as empty
@@ -1376,6 +1502,9 @@ def _read_physical(
 
         return empty_df(spark, StructType.fromJson(json.loads(m["schema"])))
     reader = spark.read.option("mergeSchema", "true" if m.get("mixed_schema") else "false")
+    schema = _read_schema(spark, m, files)
+    if schema is not None:
+        reader = reader.schema(schema)
     if m.get("base"):
         reader = reader.option("basePath", m["base"])
     df = reader.parquet(*files)
@@ -1392,6 +1521,48 @@ def _read_physical(
             F.col("_metadata.row_index").alias("_dv_idx"),
         )
     return df
+
+
+def _read_schema(spark: SparkSession, m: dict, files: list):
+    """The schema Spark infers for ``files`` (listed by ``m``) read with
+    ``basePath``, built from the manifest's record instead of footers:
+    the recorded data fields, then one field per partition directory,
+    typed from the values these files sit under as Spark's discovery
+    types them. None — infer as Spark does — for an evolved
+    (``mixed_schema``) table, a record with no ``layout`` (written
+    before layouts were recorded, or read from a footer without Spark's
+    row metadata), files outside the recorded layout, or a partition
+    value whose inferred type is not certain.
+
+    Sound because a non-evolved version's files share one schema, the
+    one its ``layout`` was recorded with (:class:`Txn`)."""
+    from pyspark.sql import types as T
+
+    layout = m.get("layout")
+    if layout is None or m.get("mixed_schema") or not m.get("schema"):
+        return None
+    values: list[set] = [set() for _ in layout]
+    for f in files:
+        dirs = _partition_dirs(f, m.get("base") or os.path.dirname(f))
+        if dirs is None or [k for k, _ in dirs] != layout:
+            return None
+        for seen, (_, v) in zip(values, dirs):
+            seen.add(v)
+    recorded = T.StructType.fromJson(json.loads(m["schema"]))
+    fields = [f for f in recorded if f.name not in layout]
+    if layout and spark.conf.get(
+        "spark.sql.sources.partitionColumnTypeInference.enabled", "true"
+    ) != "true":
+        return None
+    for name, seen in zip(layout, values):
+        typ = _partition_column_type(seen)
+        if typ is None or (
+            typ == T.TimestampType()
+            and spark.conf.get("spark.sql.timestampType", "TIMESTAMP_LTZ") != "TIMESTAMP_LTZ"
+        ):
+            return None
+        fields.append(T.StructField(name, typ, True))
+    return T.StructType(fields)
 
 
 def read_dv(m: dict) -> dict:

@@ -88,9 +88,9 @@ def _unified_arrow_schema(files: list[str]):
     import pyarrow.parquet as pq
 
     if not files:
-        # a legal state (e.g. an overwrite of an empty frame = truncate)
-        # but schemaless: parquet manifests carry no standalone schema,
-        # so reads of such a version need an explicit reader schema
+        # a version listing no files has no footer to read; its schema
+        # is the manifest's recorded one (_version_schema), or, for a
+        # manifest that records none, an explicit reader schema
         raise ValueError(
             "snapshot version lists no data files (empty table); "
             "read an earlier version or supply .schema(...) explicitly"
@@ -141,6 +141,34 @@ def _hive_layout_guard(path: str, m: dict) -> None:
                     "path with partition discovery) for this layout"
                 )
 
+
+
+def _version_schema(m: dict) -> StructType:
+    """A version's LOGICAL Spark schema without the ``_p`` bucket
+    column, every top-level field nullable: the manifest's recorded
+    schema, or the union of the footers for an evolved
+    (``mixed_schema``) version or one whose record Spark's reads do not
+    plan from (no ``layout``). A version listing no files reads as its
+    record; with none recorded it raises."""
+    import json
+
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructField
+
+    files = list(m["files"])
+    if not m.get("schema") or (files and (m.get("mixed_schema") or m.get("layout") is None)):
+        # a non-mixed_schema manifest guarantees every file shares one
+        # schema: one footer suffices (review r8 — opening all 100k
+        # footers per plan defeats metadata-only planning)
+        sfiles = files if m.get("mixed_schema") else files[:1]
+        return from_arrow_schema(_logical_arrow_schema(_unified_arrow_schema(sfiles), m))
+    renames, dropped = S.mapping_of(m)
+    recorded = StructType.fromJson(json.loads(m["schema"]))
+    return StructType([
+        StructField(renames.get(f.name, f.name), f.dataType, True, f.metadata)
+        for f in recorded
+        if f.name != S.BUCKET_COL and f.name not in dropped
+    ])
 
 
 def _logical_arrow_schema(schema, m):
@@ -194,61 +222,35 @@ class _SnapshotReader(DataSourceReader):
         # reader needs only files / mapping / dv refs besides that
         self._manifest = S.read_manifest(self._path, self._version, resolve=False)
         self._where: list = []
-        # unified schema computed ONCE driver-side (footer reads);
-        # pa.Schema pickles with the reader to every task. A ZERO-FILE
-        # version (truncate) carries no parquet schema of its own, so the
-        # planner's schema — the user's explicit .schema(...) — is the
-        # source of truth there (and the only way to read such a version).
-        renames, dropped = S.mapping_of(self._manifest)
+        renames, _ = S.mapping_of(self._manifest)
         self._l2p = {log: phys for phys, log in renames.items()}
         self._dv = S.read_dv(self._manifest)
         _hive_layout_guard(self._path, self._manifest)
-        if self._manifest["files"]:
-            import pyarrow as pa
-
-            # a non-mixed_schema manifest guarantees every file shares
-            # one schema: one footer suffices (review r8 — opening all
-            # 100k footers per plan defeats metadata-only planning)
-            sfiles = (
-                self._manifest["files"]
-                if self._manifest.get("mixed_schema")
-                else self._manifest["files"][:1]
-            )
-            phys = _unified_arrow_schema(sfiles)
-            # align target: physical names minus dropped columns (their
-            # bytes are never materialized); batches then re-label to
-            # the version's logical names
-            self._schema_arrow = pa.schema([f for f in phys if f.name not in dropped])
-            self._logical_names = [
-                renames.get(f.name, f.name) for f in self._schema_arrow
-            ]
-            if schema is not None and list(schema.names) != self._logical_names:
-                # a user .schema(...) was previously IGNORED whenever the
-                # version had files — Spark then bound the emitted batches
-                # positionally against the divergent plan schema (review
-                # r8). Honor it as a projection/reorder over the logical
-                # columns, or reject loudly at plan time.
-                unknown = [n for n in schema.names if n not in self._logical_names]
-                if unknown:
-                    raise ValueError(
-                        f"{self._path}: .schema(...) names {unknown} not in "
-                        f"this version's columns {self._logical_names}"
-                    )
-                by_logical = dict(zip(self._logical_names, self._schema_arrow))
-                self._schema_arrow = pa.schema(
-                    [by_logical[n] for n in schema.names]
-                )
-                self._logical_names = list(schema.names)
-        else:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            if schema is None:
+        if self._manifest["files"] or schema is None:
+            # the planner's schema is this version's (SnapshotSource.schema)
+            # or the user's .schema(...): a projection/reorder of its
+            # columns, rejected loudly at plan time when it names others
+            # (review r8). A version listing no files takes the planner's
+            # schema as is.
+            logical = _version_schema(self._manifest)
+            schema = logical if schema is None else schema
+            unknown = [n for n in schema.names if n not in logical.names]
+            if unknown:
                 raise ValueError(
-                    "snapshot version lists no data files (empty table); "
-                    "read an earlier version or supply .schema(...) explicitly"
+                    f"{self._path}: .schema(...) names {unknown} not in "
+                    f"this version's columns {logical.names}"
                 )
-            self._schema_arrow = to_arrow_schema(schema)
-            self._logical_names = list(self._schema_arrow.names)
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        # every batch is cast to exactly the schema Spark planned with,
+        # under the files' physical names (dropped columns' bytes are
+        # never materialized); pa.Schema pickles with the reader to
+        # every task, and batches re-label to the logical names
+        self._schema_arrow = pa.schema(
+            [f.with_name(self._l2p.get(f.name, f.name)) for f in to_arrow_schema(schema)]
+        )
+        self._logical_names = list(schema.names)
 
     def pushFilters(self, filters):
         for f in filters:
@@ -679,23 +681,17 @@ class SnapshotSource(DataSource):
         return FORMAT_NAME
 
     def schema(self) -> StructType:
-        from pyspark.sql.pandas.types import from_arrow_schema
-
         opts = {k.lower(): v for k, v in self.options.items()}
         v = opts.get("version")
         ts = opts.get("timestampasof")
         if ts is not None and v is None:
             v = S.as_of(self.options["path"], _epoch(ts))
-        # resolve=False (metadata-only); a non-mixed manifest needs only
-        # ONE footer for the schema (review r8 — planning used to open
-        # every file's footer twice per read)
+        # resolve=False (metadata-only): the recorded schema, footers
+        # only for an evolved version or one with no usable record
         m = S.read_manifest(
             self.options["path"], int(v) if v is not None else None, resolve=False
         )
-        sfiles = list(m["files"]) if m.get("mixed_schema") else list(m["files"])[:1]
-        return from_arrow_schema(
-            _logical_arrow_schema(_unified_arrow_schema(sfiles), m)
-        )
+        return _version_schema(m)
 
     def reader(self, schema: StructType) -> _SnapshotReader:
         opts = {k.lower(): v for k, v in self.options.items()}
