@@ -201,14 +201,16 @@ def fold_additive(
             everything since the base was an append, and the files the
             rebase carries are pure delta files."""
             nonlocal refold
+            removed, added, dv_changed = S.changed_files(m, nm)
             same_meta = (
                 (nm.get("renames") or {}) == (m.get("renames") or {})
                 and (nm.get("dropped_cols") or []) == (m.get("dropped_cols") or [])
                 and (nm.get("constraints") or {}) == (m.get("constraints") or {})
-                # dv sidecar paths churn per publish; counts are the
-                # content signature
-                and ((nm.get("dv") or {}).get("counts") or {})
-                == ((m.get("dv") or {}).get("counts") or {})
+                # a deletion vector is a delete, on a base file or on an
+                # appended one (sidecar paths churn per publish, and equal
+                # counts can mask different rows: compare the vectors)
+                and not dv_changed
+                and not set(added) & set((nm.get("dv") or {}).get("counts") or {})
                 and bool(nm.get("mixed_schema")) == bool(m.get("mixed_schema"))
                 and os.path.abspath(nm.get("base", path))
                 == os.path.abspath(m.get("base", path))
@@ -219,7 +221,7 @@ def fold_additive(
                 and (nm.get("stats_cols") or None) == (m.get("stats_cols") or None)
                 and (nm.get("bloom_cols") or None) == (m.get("bloom_cols") or None)
             )
-            refold = not (same_meta and base_files <= set(nm["files"]))
+            refold = not (same_meta and not removed)
             return not refold
 
         with S.Txn(path, m) as t:

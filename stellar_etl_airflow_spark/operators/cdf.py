@@ -43,19 +43,6 @@ CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
 
 
-def _read_files(spark: SparkSession, m: dict, files: list[str]) -> DataFrame | None:
-    """A version's VISIBLE rows from a subset of its files: deletion
-    vectors are anti-joined out, so CDF diffs logical contents, never
-    the raw bytes."""
-    if not files:
-        return None
-    dv = {f: ids for f, ids in S.read_dv(m).items() if f in set(files)}
-    df = S._read_physical(spark, m, files, with_meta=bool(dv))
-    if dv:
-        df = S._apply_dv(spark, df, dv)
-    return df
-
-
 def read_changes(
     spark: SparkSession,
     path: str,
@@ -79,21 +66,15 @@ def read_changes(
     to_version = to_version if to_version is not None else S.latest_version(path)
     m_old = S.read_manifest(path, from_version)
     m_new = S.read_manifest(path, to_version)
-    old_only = [f for f in m_old["files"] if f not in set(m_new["files"])]
-    new_only = [f for f in m_new["files"] if f not in set(m_old["files"])]
     # a file BOTH versions list whose deletion vector changed holds
     # row-level churn without file churn (merge-on-read deletes): read
-    # it on both sides — each side under its own vectors — and the
-    # net-diff classifier below handles the rest (rows untouched by the
-    # vector appear identically on both sides and net out)
-    dv_old, dv_new = S.read_dv(m_old), S.read_dv(m_new)
-    common = [f for f in m_new["files"] if f in set(m_old["files"])]
-    dv_changed = [f for f in common if dv_old.get(f, []) != dv_new.get(f, [])]
-    old_only = old_only + dv_changed
-    new_only = new_only + dv_changed
-
-    old_df = _read_files(spark, m_old, old_only)
-    new_df = _read_files(spark, m_new, new_only)
+    # it on both sides — each side's VISIBLE rows, under its own vectors
+    # — and the net-diff classifier below handles the rest (rows
+    # untouched by the vector appear identically on both sides and net out)
+    removed, added, dv_changed = S.changed_files(m_old, m_new)
+    old_only, new_only = removed + dv_changed, added + dv_changed
+    old_df = S._read_physical(spark, m_old, old_only) if old_only else None
+    new_df = S._read_physical(spark, m_new, new_only) if new_only else None
     # column mapping: physical names never change (rename/drop are
     # metadata-only), so BOTH versions' files share physical names and
     # the diff is emitted under the TO version's logical schema — a

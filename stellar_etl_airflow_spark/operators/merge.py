@@ -310,18 +310,17 @@ def _merge_versioned_once(
         ch.unpersist()
         return int(m["version"]), []
 
+    base = m.get("base", path)
+
     def bucket_of(f: str):
-        rel = os.path.relpath(f, m.get("base", path))
-        for seg in rel.split(os.sep):
-            if seg.startswith(f"{BUCKET_COL}="):
-                return int(seg.split("=", 1)[1])
-        return None  # flat (pre-bucketing) file: always rewritten
+        b = dict(S._partition_dirs(f, base) or ()).get(BUCKET_COL)
+        return None if b is None else int(b)  # None: flat, always rewritten
 
     touched_set = set(touched)
     # merging into a zero-copy clone: its files live under the SOURCE's
     # partition root, and one manifest has one discovery base — localize
     # the clone completely on its first write (full CoW, source untouched)
-    localized = os.path.abspath(m.get("base", path)) != os.path.abspath(path)
+    localized = os.path.abspath(base) != os.path.abspath(path)
 
     def rewritten(f: str) -> bool:
         return localized or (b := bucket_of(f)) is None or b in touched_set
@@ -330,12 +329,6 @@ def _merge_versioned_once(
     for f in m["files"]:
         (rewrite if rewritten(f) else keep).append(f)
     had_flat = not localized and any(bucket_of(f) is None for f in rewrite)
-    # merge-on-read deletes on rewritten files must be MATERIALIZED into
-    # the rewrite (review r8): a raw read would resurrect masked rows,
-    # and a commit drops the vectors of files leaving the list on
-    # exactly the assumption that the rewrite applied them.
-    rewrite_set = set(rewrite)
-    dv_rw = {f: ids for f, ids in S.read_dv(m).items() if f in rewrite_set}
     empty_drift = False
     if rewrite:
         # A bootstrap snapshot may mix partition-dir layouts (flat root
@@ -349,23 +342,17 @@ def _merge_versioned_once(
         # Each group is read like any snapshot subset (S._read_physical):
         # the group in the recorded layout plans from the manifest's
         # schema with no footer job; the others infer theirs, so flat
-        # files never read a null `_p`.
-        base = m.get("base", path)
-
-        def signature(f: str) -> tuple[str, ...]:
-            rel = os.path.relpath(f, base)
-            return tuple(
-                seg.split("=", 1)[0] for seg in rel.split(os.sep)[:-1] if "=" in seg
-            )
-
+        # files never read a null `_p`. The read returns visible rows
+        # only: merge-on-read deletes on rewritten files are MATERIALIZED
+        # into the rewrite (review r8), as a commit drops the vectors of
+        # files leaving the list.
         groups: dict[tuple[str, ...], list[str]] = {}
         for f in rewrite:
-            groups.setdefault(signature(f), []).append(f)
+            sig = tuple(k for k, _ in S._partition_dirs(f, base) or ())
+            groups.setdefault(sig, []).append(f)
         parts = []
         for sig in sorted(groups):
-            gdf = S._read_physical(spark, m, groups[sig], with_meta=bool(dv_rw))
-            if dv_rw:
-                gdf = S._apply_dv(spark, gdf, dv_rw)
+            gdf = S._read_physical(spark, m, groups[sig])
             if BUCKET_COL not in gdf.columns:
                 gdf = gdf.withColumn(BUCKET_COL, key_bucket(keys, n_buckets))
             parts.append(gdf)

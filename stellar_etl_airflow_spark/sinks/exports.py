@@ -1,4 +1,4 @@
-"""Public export surface: Avro slices, NDJSON extract, copy/clone.
+"""Public export surface: Avro slices, copy/clone.
 
 - Avro export: the reference renders EXPORT DATA OPTIONS(uri, format=avro,
   overwrite=true) AS SELECT <explicit cols> WHERE closed_at in [t0,t1)
@@ -13,8 +13,8 @@
   encoder (avro_writer.py), one file per partition via mapInArrow; with
   the jar present the DataSource path is used instead. Either way the
   bytes on the wire are Avro Object Container Files.
-- NDJSON extract: dumps one table slice to a single JSON file
-  (dbt_stellar_marts_dag.py:162-178, the DefiLlama tvl feed).
+- NDJSON extract (dbt_stellar_marts_dag.py:162-178, the DefiLlama tvl
+  feed) is Spark's own ``df.coalesce(1).write.json(dest)``; no engine code.
 - copy / clone: WRITE_TRUNCATE table copy (build_copy_table_task.py:9-65)
   and the staging-refresh clone (dag_stellar_dbt_staging_refresh.py:83-88;
   time travel needs Delta/Iceberg — documented stub here).
@@ -182,16 +182,6 @@ def read_export(spark: SparkSession, fmt: str, path: str) -> DataFrame:
     return fdf.mapInArrow(read_part, schema)
 
 
-def ndjson_extract(df: DataFrame, dest: str) -> None:
-    """Single-file JSON dump (coalesce(1): the feed is one small mart)."""
-    df.coalesce(1).write.mode("overwrite").json(dest)
-
-
 def copy_table(spark: SparkSession, src_path: str, dest_path: str) -> None:
     """BQ copy job, WRITE_TRUNCATE disposition."""
     spark.read.parquet(src_path).write.mode("overwrite").parquet(dest_path)
-
-
-def create_or_replace_view(spark: SparkSession, name: str, df: DataFrame) -> None:
-    """CREATE OR REPLACE VIEW (dags/queries/create_view.sql:1-3)."""
-    df.createOrReplaceTempView(name)

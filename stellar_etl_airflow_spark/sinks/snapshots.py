@@ -167,7 +167,7 @@ def is_bucketed(path: str, m: dict | None = None) -> bool:
         return True
     # resolve=False: only file names are scanned, no stats shards
     m = m if m is not None else read_manifest(path, resolve=False)
-    return any(f"{BUCKET_COL}=" in f for f in m["files"])
+    return (_partition_layer(m, path) or ("",))[0] == BUCKET_COL
 
 
 def index_pins(path: str, m: dict, props: dict | None = None) -> tuple:
@@ -215,13 +215,7 @@ def read_manifest(path: str, version: int | None = None, resolve: bool = True) -
     with open(_manifest_path(path, v)) as fh:
         m = json.load(fh)
     if resolve and m.get("stats_shards"):
-        stats, blooms = dict(m.get("stats") or {}), dict(m.get("blooms") or {})
-        for sh in m["stats_shards"]:
-            with open(sh["path"]) as fh:
-                payload = json.load(fh)
-            stats.update(payload.get("stats") or {})
-            blooms.update(payload.get("blooms") or {})
-        m["stats"], m["blooms"] = stats, blooms
+        m["stats"], m["blooms"] = resolved_stats_blooms(m)
         m["stats_shards"] = []
     return m
 
@@ -479,7 +473,8 @@ class Txn:
       partition ``layout``. The layout is recorded only when the schema
       is exactly Spark's read schema for the listed files: a txn that
       adds files beside carried ones keeps it only if the carried files
-      were recorded in the same layout with the same fields.
+      were recorded in the same layout with the same fields; carried
+      files recorded with other fields make the version ``mixed_schema``.
       Callers state only what they change: :meth:`add` the files they
       wrote (with stats/blooms), :meth:`remove` files or a predicate
       (their stats, blooms and DVs go with them), :meth:`set` or
@@ -714,14 +709,23 @@ class Txn:
         if self._txn_id is not None:
             txns[self._txn_id] = version
         schema, layout = self.get("schema"), self.get("layout")
+        mixed = bool(self.get("mixed_schema"))
         probe = next(iter(self._added), None) or (None if schema or not files else files[0])
         if probe:
             was = _data_fields(schema, layout)
             schema, layout = _physical_schema(probe, self.get("base") or self.path)
             # the record stands in for the carried files' footers only if
             # they were recorded, in this layout, with the same fields
-            if carried and self._added and (was is None or was != _data_fields(schema, layout)):
-                layout = None
+            if carried and self._added:
+                now = _data_fields(schema, layout)
+                if was is None or was != now:
+                    layout = None
+                # recorded fields that differ (a DML rewrite under a
+                # dropped column): readers must merge the file schemas
+                if was and now and {(f.name, f.dataType) for f in was[0]} != {
+                    (f.name, f.dataType) for f in now[0]
+                }:
+                    mixed = True
         manifest = {
             "version": version,
             "ts": time.time(),
@@ -732,7 +736,7 @@ class Txn:
             # True when this version's files may carry differing schemas (a
             # schema-evolving merge keeps untouched buckets' old-schema files);
             # readers then pay the mergeSchema footer pass, and ONLY then
-            "mixed_schema": bool(self.get("mixed_schema")),
+            "mixed_schema": mixed,
             # the physical schema (StructType JSON) of the files last added,
             # carried forward: what a version listing no files reads as
             "schema": schema,
@@ -1031,11 +1035,13 @@ def append_versioned(
     cost. The stage write is deliberately UNPARTITIONED (no hive
     ``col=val`` layer), so the manifest's partition-discovery ``base``
     — which may point elsewhere for zero-copy clones — never applies to
-    the appended files. Column-mapped tables are refused like the merge
-    path (appended files carry logical names; the mapping would fork
-    the physical schema); schema drift vs the live table is refused
-    with one footer read per append — use the merge path with
-    ``evolve=True`` for additive evolution."""
+    the appended files. Tables whose files sit under ``k=v``
+    directories (bucketed or hive-partitioned) are refused: flat files
+    beside them break every basePath read. Column-mapped tables are
+    refused like the merge path (appended files carry logical names;
+    the mapping would fork the physical schema); schema drift vs the
+    live table is refused with one footer read per append — use the
+    merge path with ``evolve=True`` for additive evolution."""
     staged_fields = set(df.schema.fieldNames())
     t = _append_prestage(path, txn_id, staged_fields, lambda: df, stats_cols, bloom_cols)
     if isinstance(t, int):
@@ -1201,10 +1207,8 @@ def _physical_schema(f: str, base: str) -> tuple[str, list | None]:
         and len(set(names)) == len(names)
         and not {k.lower() for k in names} & {n.lower() for n in st.names}
     )
-    rel = os.path.relpath(os.path.dirname(os.path.abspath(f)), os.path.abspath(base))
-    for part in rel.split(os.sep):
-        k, eq, v = part.partition("=")
-        if eq and k not in st.names:
+    for k, v in dirs or ():
+        if k not in st.names:
             st.add(k, _partition_type(v) or T.StringType(), True)
     return st.json(), names if exact else None
 
@@ -1223,6 +1227,14 @@ def _partition_dirs(f: str, base: str) -> list[tuple[str, str]] | None:
             return None
         out.append((k, v))
     return out
+
+
+def _partition_layer(m: dict, path: str) -> tuple[str, str] | None:
+    """The outermost ``(column, raw value)`` directory of the first file
+    ``m`` lists under a partition directory below its ``base`` (else
+    ``path``); None when every listed file is flat."""
+    base = m.get("base") or path
+    return next((dirs[0] for f in m["files"] if (dirs := _partition_dirs(f, base))), None)
 
 
 _DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
@@ -1316,127 +1328,112 @@ def _append_prestage(path, txn_id, staged_fields, frame, stats_cols, bloom_cols)
     if bloom_cols:
         t.set(bloom_cols=bloom_cols)
     if not t.version:
-        # ADVICE r10 (low): bootstrapping onto a directory that already
-        # holds PLAIN-WRITER parquet would publish v1 listing only the
-        # new files — the legacy data vanishes from the table view and a
-        # later vacuum deletes it as orphans. Refuse, forcing an explicit
-        # snapshot() (adopt) or overwrite_versioned first. Files matching
-        # the library's adopt_staged naming are excluded from the check:
-        # under the documented lock-free concurrent bootstrap, a racing
-        # appender's files sit adopted-but-unpublished in the dir and
-        # must not trip this guard.
-        legacy = [
-            f
-            for f in _list_data_files(path)
-            if not _ADOPTED_RE.match(os.path.basename(f))
-        ]
-        if legacy:
-            raise ValueError(
-                f"append_versioned bootstrap at {path}: directory already "
-                f"holds {len(legacy)} untracked plain-writer parquet "
-                f"file(s) (e.g. {os.path.basename(legacy[0])!r}) that a "
-                "files-only v1 would orphan. Adopt them first with "
-                "snapshot(path), or replace them with overwrite_versioned."
-            )
-        # Adopted-NAMED files are excluded above because a racing
-        # appender's output sits adopted-but-unpublished for a moment
-        # during the lock-free concurrent bootstrap — but that window is
-        # seconds. An adopted-named file OLDER than the vacuum orphan
-        # window (VERDICT r11 ask #6: "could a plain writer's file match
-        # the adopted naming and slip the refusal?") is either a copied
-        # snapshot table's data (cp of the data dir without _snapshots —
-        # a v1 here would orphan it for the next vacuum) or a crashed
-        # appender's aborted staging (never committed; safe to delete,
-        # but say so rather than silently bury it under v1).
-        now = time.time()
-        stale_adopted = []
-        for f in _list_data_files(path):
-            if _ADOPTED_RE.match(os.path.basename(f)):
-                try:
-                    if now - os.path.getmtime(f) > _BOOTSTRAP_ADOPTED_AGE_S:
-                        stale_adopted.append(f)
-                except OSError:
-                    continue  # raced: the concurrent writer cleaned it up
-        if stale_adopted:
-            raise ValueError(
-                f"append_versioned bootstrap at {path}: directory holds "
-                f"{len(stale_adopted)} adopted-named parquet file(s) older "
-                f"than {int(_BOOTSTRAP_ADOPTED_AGE_S)}s (e.g. "
-                f"{os.path.basename(stale_adopted[0])!r}) with no manifest. "
-                "If this is a copied table, adopt the data with "
-                "snapshot(path); if it is a crashed writer's aborted "
-                "staging, delete the files — a files-only v1 would orphan "
-                "them either way."
-            )
-        return t
-    prev = t.m
-    if prev.get("renames") or prev.get("dropped_cols"):
+        _bootstrap_guard(path, "append_versioned")
+    else:
+        _append_guards(path, t.m, frame, staged_fields)
+    return t
+
+
+def _bootstrap_guard(path: str, writer: str) -> None:
+    """Refuse an append that would bootstrap v1 in a directory already
+    holding data files: v1 would list only the new files, the others
+    vanish from the table view and a later vacuum deletes them as
+    orphans (ADVICE r10). Adopt them with snapshot() or replace them
+    with overwrite_versioned first.
+
+    Files named by the adopt_staged contract are a racing appender's
+    adopted-but-unpublished output during the lock-free concurrent
+    bootstrap, and pass — unless they are older than the vacuum orphan
+    window (VERDICT r11 ask #6): then they are a copied table's data or
+    a crashed appender's aborted staging, which v1 would orphan too."""
+    legacy, stale, now = [], [], time.time()
+    for f in _list_data_files(path):
+        if not _ADOPTED_RE.match(os.path.basename(f)):
+            legacy.append(f)
+            continue
+        try:
+            if now - os.path.getmtime(f) > _BOOTSTRAP_ADOPTED_AGE_S:
+                stale.append(f)
+        except OSError:
+            continue  # raced: the concurrent writer cleaned it up
+    if legacy:
+        raise ValueError(
+            f"{writer} bootstrap at {path}: directory already "
+            f"holds {len(legacy)} untracked plain-writer parquet "
+            f"file(s) (e.g. {os.path.basename(legacy[0])!r}) that a "
+            "files-only v1 would orphan. Adopt them first with "
+            "snapshot(path), or replace them with overwrite_versioned."
+        )
+    if stale:
+        raise ValueError(
+            f"{writer} bootstrap at {path}: directory holds "
+            f"{len(stale)} adopted-named parquet file(s) older "
+            f"than {int(_BOOTSTRAP_ADOPTED_AGE_S)}s (e.g. "
+            f"{os.path.basename(stale[0])!r}) with no manifest. "
+            "If this is a copied table, adopt the data with "
+            "snapshot(path); if it is a crashed writer's aborted "
+            "staging, delete the files — a files-only v1 would orphan "
+            "them either way."
+        )
+
+
+def _append_guards(path: str, nm: dict, frame, staged_fields, seen: dict | None = None) -> bool:
+    """Check a flat append against manifest ``nm``: no column mapping,
+    no ``k=v`` directory layer, the table's CHECK constraints hold for
+    the staged frame and its columns are the frame's. ``frame`` as in
+    :func:`_append_prestage`. ``seen`` is a rebase's record of what an
+    earlier call checked (the constraints validated, the footers
+    probed), so only what moved is re-checked; None is the pre-stage
+    check."""
+    has, late = ("has", "") if seen is None else ("gained", " while this append staged")
+    seen = {"constraints": None, "fields": {}} if seen is None else seen
+    if nm.get("renames") or nm.get("dropped_cols"):
         raise NotImplementedError(
-            f"{path} carries a column mapping (renames/drops); appending "
+            f"{path} {has} a column mapping (renames/drops){late}; appending "
             "would fork the physical schema. Run compact_snapshot first."
         )
-    if any(f"{BUCKET_COL}=" in f for f in prev["files"]):
-        raise NotImplementedError(
-            "append_versioned would break the bucketed merge layout "
-            "(new files carry no bucket assignment); write through "
-            "apply_changes / merge_additive_versioned instead"
+    layer = _partition_layer(nm, path)
+    if layer:
+        kind, hint = (
+            ("a bucketed merge", "bucket assignment; write through apply_changes / "
+             "merge_additive_versioned instead")
+            if layer[0] == BUCKET_COL
+            else ("a hive partition", "partition value; write through overwrite_versioned instead")
         )
-    if prev.get("constraints"):
-        check_constraints(frame(), prev["constraints"])
-    live = [f for f in prev["files"] if os.path.exists(f)]
-    if live:
-        have = _parquet_fields(live[0])
-        if have != staged_fields:
+        raise NotImplementedError(
+            f"{path} {has} {kind} layout ({'='.join(layer)}){late}: appended "
+            f"files are flat and carry no {hint}"
+        )
+    cons = nm.get("constraints") or None
+    if cons and cons != seen["constraints"]:
+        check_constraints(frame(), cons)
+        seen["constraints"] = cons
+    probe = next((f for f in nm["files"] if os.path.exists(f)), None)
+    if probe:
+        if probe not in seen["fields"]:
+            seen["fields"][probe] = _parquet_fields(probe)
+        if seen["fields"][probe] != staged_fields:
             raise ValueError(
                 f"append schema mismatch at {path}: table has "
-                f"{sorted(have)}, frame has {sorted(staged_fields)}; use "
-                "the merge path (evolve=True) or overwrite_versioned"
+                f"{sorted(seen['fields'][probe])}{late}, frame has "
+                f"{sorted(staged_fields)}; use the merge path (evolve=True) "
+                "or overwrite_versioned"
             )
-    return t
+    return True
 
 
 def _append_commit(t: Txn, frame, staged_fields, max_retries: int) -> int:
     """Commit an append. Appends commute, so a lost CAS always rebases —
-    after re-running the pre-stage guards against the manifest that
-    won (ADVICE r10): a column mapping, bucketed layout, new CHECK
+    after re-running :func:`_append_guards` against the manifest that
+    won (ADVICE r10): a column mapping, partition layout, new CHECK
     constraint or schema-changing overwrite landing while this append
-    staged refuses instead of publishing through stale guarantees.
-    ``frame`` as in :func:`_append_prestage`."""
-    checked = {"constraints": t.m.get("constraints") or None}
-    probed_schema: dict[str, frozenset] = {}
-
-    def guards_hold(nm: dict) -> bool:
-        if nm.get("renames") or nm.get("dropped_cols"):
-            raise NotImplementedError(
-                f"{t.path} gained a column mapping while this append staged; "
-                "run compact_snapshot first."
-            )
-        if any(f"{BUCKET_COL}=" in f for f in nm["files"]):
-            raise NotImplementedError(
-                "the table gained a bucketed merge layout while this "
-                "append staged; write through apply_changes / "
-                "merge_additive_versioned instead"
-            )
-        cons = nm.get("constraints") or None
-        if cons and cons != checked["constraints"]:
-            check_constraints(frame(), cons)
-            checked["constraints"] = cons
-        live = [f for f in nm["files"] if os.path.exists(f)]
-        if live:
-            probe = live[0]
-            if probe not in probed_schema:
-                probed_schema[probe] = _parquet_fields(probe)
-            if probed_schema[probe] != staged_fields:
-                raise ValueError(
-                    f"append schema mismatch at {t.path}: an intervening "
-                    f"publish changed the table to "
-                    f"{sorted(probed_schema[probe])}, staged frame has "
-                    f"{sorted(staged_fields)}; re-run the append against "
-                    "the new schema"
-                )
-        return True
-
-    return t.commit("append", rebase=guards_hold, tries=max_retries)
+    staged refuses instead of publishing through stale guarantees."""
+    seen = {"constraints": t.m.get("constraints") or None, "fields": {}}
+    return t.commit(
+        "append",
+        rebase=lambda nm: _append_guards(t.path, nm, frame, staged_fields, seen),
+        tries=max_retries,
+    )
 
 
 def unbucket_snapshot(
@@ -1488,13 +1485,21 @@ def unbucket_snapshot(
 def _read_physical(
     spark: SparkSession, m: dict, files=None, with_meta: bool = False
 ) -> DataFrame:
-    """Raw frame over a manifest's files (or a subset) with the
+    """The visible rows of a manifest's files (or a subset) with the
     manifest's reader options — columns carry their PHYSICAL names.
     Where the manifest's recorded schema stands in for Spark's inference
     (:func:`_read_schema`), building the frame opens no footer and runs
-    no Spark job. ``with_meta`` attaches the file path (scheme-stripped)
-    and per-file row index as ``_dv_file``/``_dv_idx`` — the
-    deletion-vector join key."""
+    no Spark job. The manifest's deletion vectors for ``files`` are
+    anti-joined out on the file path (scheme-stripped) and per-file row
+    index; ``with_meta`` keeps that key as ``_dv_file``/``_dv_idx``.
+
+    The vectors are driver-resident (they ARE the deleted-row list) and
+    broadcast; at Delta scale DVs are per-file bitmaps applied
+    scan-side — the Data Source reader does exactly that (numpy mask per
+    file), this is the DataFrame-read twin. Their keys are the
+    manifest's file strings (possibly relative); the scan's
+    ``_dv_file`` is always absolute, so keys are normalized here and a
+    table opened via a relative path still masks (review finding r7)."""
     files = m["files"] if files is None else files
     if not files and m.get("schema"):
         # a version listing no files (every row deleted) reads as empty
@@ -1508,19 +1513,26 @@ def _read_physical(
     if m.get("base"):
         reader = reader.option("basePath", m["base"])
     df = reader.parquet(*files)
-    if with_meta:
-        # _metadata.file_path renders URL-ENCODED ("file:/a/has%20space/x")
-        # — verified on this Spark — so strip the scheme AND url_decode;
-        # a raw strip would leave %-escapes that never equal the manifest's os
-        # paths and deletion vectors would silently fail open (review r8)
-        df = df.select(
-            "*",
-            F.url_decode(
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", "")
-            ).alias("_dv_file"),
-            F.col("_metadata.row_index").alias("_dv_idx"),
-        )
-    return df
+    listed = set(files)
+    dv = {f: ids for f, ids in read_dv(m).items() if f in listed}
+    if not (dv or with_meta):
+        return df
+    # _metadata.file_path renders URL-ENCODED ("file:/a/has%20space/x")
+    # — verified on this Spark — so strip the scheme AND url_decode;
+    # a raw strip would leave %-escapes that never equal the manifest's os
+    # paths and deletion vectors would silently fail open (review r8)
+    df = df.select(
+        "*",
+        F.url_decode(
+            F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", "")
+        ).alias("_dv_file"),
+        F.col("_metadata.row_index").alias("_dv_idx"),
+    )
+    if dv:
+        rows = [(os.path.abspath(f), int(i)) for f, ids in dv.items() for i in ids]
+        dv_df = local_df(spark, rows, "_dv_file string, _dv_idx long")
+        df = df.join(F.broadcast(dv_df), ["_dv_file", "_dv_idx"], "left_anti")
+    return df if with_meta else df.drop("_dv_file", "_dv_idx")
 
 
 def _read_schema(spark: SparkSession, m: dict, files: list):
@@ -1576,21 +1588,20 @@ def read_dv(m: dict) -> dict:
         return {f: sorted(int(i) for i in ids) for f, ids in json.load(fh).items()}
 
 
-def _apply_dv(spark: SparkSession, df_with_meta: DataFrame, dv: dict) -> DataFrame:
-    """Anti-join the (file, row_index) deletion set out of a frame read
-    with ``with_meta=True``. The DV frame is driver-resident (it IS the
-    deleted-row list) and broadcasts; at Delta scale DVs are per-file
-    bitmaps applied scan-side — the Data Source reader does exactly that
-    (numpy mask per file), this is the DataFrame-read twin.
-
-    DV keys are the manifest's file strings (possibly relative); the
-    scan's ``_dv_file`` is always absolute — normalize here so a table
-    opened via a relative path still masks (review finding r7)."""
-    rows = [(os.path.abspath(f), int(i)) for f, ids in dv.items() for i in ids]
-    dv_df = local_df(spark, rows, "_dv_file string, _dv_idx long")
-    return df_with_meta.join(
-        F.broadcast(dv_df), ["_dv_file", "_dv_idx"], "left_anti"
-    ).drop("_dv_file", "_dv_idx")
+def changed_files(m_old: dict, m_new: dict) -> tuple[list, list, list]:
+    """What changed between two manifests of one table, as ``(removed,
+    added, dv_changed)``: the files only ``m_old`` lists, the files only
+    ``m_new`` lists, and the files both list whose deletion vectors
+    differ — row-level churn without file churn. Vectors are compared
+    row for row: two versions can mask different rows of one file with
+    equal counts (a delete, a restore, another delete)."""
+    old, new = set(m_old["files"]), set(m_new["files"])
+    dv_old, dv_new = read_dv(m_old), read_dv(m_new)
+    return (
+        [f for f in m_old["files"] if f not in new],
+        [f for f in m_new["files"] if f not in old],
+        [f for f in m_new["files"] if f in old and dv_old.get(f, []) != dv_new.get(f, [])],
+    )
 
 
 def resolved_stats_blooms(m: dict) -> tuple[dict, dict]:
@@ -1843,15 +1854,6 @@ def read_snapshot(spark: SparkSession, path: str, version: int | None = None) ->
     :func:`rename_column`). A version listing no files reads as an empty
     frame of the schema its manifest carries."""
     m = read_manifest(path, version)
-    # mergeSchema only when the manifest says this version mixes file
-    # schemas (schema-evolving merges keep untouched buckets' old-schema
-    # files): the union schema reads old files' missing columns as NULL —
-    # the additive-evolution contract. Unevolved tables skip the
-    # footer-merge job entirely. Deletion vectors (merge-on-read
-    # deletes) are anti-joined out before the logical projection.
-    dv = read_dv(m)
-    if dv:
-        return to_logical(_apply_dv(spark, _read_physical(spark, m, with_meta=True), dv), m)
     return to_logical(_read_physical(spark, m), m)
 
 
@@ -1972,15 +1974,9 @@ def scan_snapshot(
     # files' physical names — translate once for pruning AND filtering
     where = translate_where(m, list(where))
     files = prune_files(m, where)
-    dv = read_dv(m)
-    surviving = set(files)
-    dv = {f: ids for f, ids in dv.items() if f in surviving}
-    if files:
-        df = _read_physical(spark, m, files, with_meta=bool(dv))
-        if dv:
-            df = _apply_dv(spark, df, dv)
-    else:  # nothing can match: empty frame with the version's schema
-        df = _read_physical(spark, m).limit(0)
+    # nothing can match: an empty frame of the version's full read schema
+    # (the union of a mixed_schema version's files)
+    df = _read_physical(spark, m, files) if files else _read_physical(spark, m).limit(0)
     for col, op, v in where:
         c = F.col(col)
         df = df.filter(
@@ -2503,7 +2499,7 @@ def compact_small_files(
     n_files_rewritten); (current, 0) when fewer than two small files.
     """
     m = read_manifest(path)
-    if any(f"{BUCKET_COL}=" in f for f in m["files"]):
+    if (_partition_layer(m, path) or ("",))[0] == BUCKET_COL:
         raise NotImplementedError(
             "compact_small_files would break the bucket layout; use "
             "compact_snapshot (keeps one file per bucket) or "
@@ -2518,11 +2514,7 @@ def compact_small_files(
     small = [f for f in m["files"] if sizes[f] < min_bytes]
     if len(small) < 2:
         return int(m["version"]), 0
-    small_set = set(small)
-    dv_small = {f: ids for f, ids in read_dv(m).items() if f in small_set}
-    raw = _read_physical(spark, m, small, with_meta=bool(dv_small))
-    if dv_small:
-        raw = _apply_dv(spark, raw, dv_small)  # materialize their deletes
+    raw = _read_physical(spark, m, small)  # materializes their deletes
     n_out = max(1, -(-sum(sizes[f] for f in small) // max(target_file_bytes, 1)))
 
     def appends_only(nm):
@@ -2598,13 +2590,9 @@ def _rewrite_candidates(spark: SparkSession, path: str, where: list, transform, 
     if not candidates:
         return int(m["version"]), 0  # nothing can match: metadata-only no-op
 
-    dv_cand = {f: ids for f, ids in read_dv(m).items() if f in candidates}
-    raw = _read_physical(spark, m, sorted(candidates), with_meta=bool(dv_cand))
-    if dv_cand:
-        # rewriting a DV-bearing file materializes its deletes — the
-        # masked rows must not be resurrected into the rewritten output
-        raw = _apply_dv(spark, raw, dv_cand)
-    logical = to_logical(raw, m)
+    # visible rows only: rewriting a DV-bearing file materializes its
+    # deletes — the masked rows must not be resurrected into the output
+    logical = to_logical(_read_physical(spark, m, sorted(candidates)), m)
     out = transform(logical, _where_cond(where))
     # CHECK constraints guard the only rows a DML can change — the
     # rewritten candidates (carried files were valid when published)
@@ -2669,25 +2657,14 @@ def delete_where_dv(
     candidates = prune_files(m, pwhere)
     if not candidates:
         return int(m["version"]), 0  # metadata-only no-op
-    existing = read_dv(m)
-    hits_df = (
+    # visible rows only: rows already masked are not deleted again
+    hits = (
         _read_physical(spark, m, candidates, with_meta=True)
         .filter(_where_cond(pwhere))
         .select("_dv_file", "_dv_idx")
+        .limit(max_rows + 1)
+        .collect()
     )
-    if existing:  # rows already masked are not deleted again
-        hits_df = hits_df.join(
-            F.broadcast(
-                local_df(
-                    spark,
-                    [(os.path.abspath(f), int(i)) for f, ids in existing.items() for i in ids],
-                    "_dv_file string, _dv_idx long",
-                )
-            ),
-            ["_dv_file", "_dv_idx"],
-            "left_anti",
-        )
-    hits = hits_df.limit(max_rows + 1).collect()
     if len(hits) > max_rows:
         raise ValueError(
             f"delete_where_dv: more than {max_rows} rows match — use "
@@ -2700,7 +2677,7 @@ def delete_where_dv(
     # (reader partitions, inheritance, compaction carries) stays exact
     # for relative table paths too
     by_abs = {os.path.abspath(f): f for f in m["files"]}
-    merged = {f: set(ids) for f, ids in existing.items()}
+    merged = {f: set(ids) for f, ids in read_dv(m).items()}
     for r in hits:
         merged.setdefault(by_abs.get(r["_dv_file"], r["_dv_file"]), set()).add(
             int(r["_dv_idx"])

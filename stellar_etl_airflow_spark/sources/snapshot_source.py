@@ -88,9 +88,8 @@ def _unified_arrow_schema(files: list[str]):
     import pyarrow.parquet as pq
 
     if not files:
-        # a version listing no files has no footer to read; its schema
-        # is the manifest's recorded one (_version_schema), or, for a
-        # manifest that records none, an explicit reader schema
+        # reached from _version_schema only for a version that lists no
+        # files and records no schema: there is nothing to read it from
         raise ValueError(
             "snapshot version lists no data files (empty table); "
             "read an earlier version or supply .schema(...) explicitly"
@@ -127,19 +126,21 @@ def _hive_layout_guard(path: str, m: dict) -> None:
     columns (the manifest's ``base`` exists for DataFrame-path partition
     discovery); refuse such layouts loudly instead of silently dropping
     the column (review r8 — ``_p=`` bucket dirs are layout metadata, not
-    data, and stay readable)."""
-    base = m.get("base") or path
-    for f in m["files"]:
-        rel = os.path.relpath(f, base)
-        for seg in rel.split(os.sep)[:-1]:
-            if "=" in seg and not seg.startswith("_p="):
-                raise ValueError(
-                    f"{path}: data files live under hive partition "
-                    f"dirs ({seg}); the snapshot Data Source reads leaf "
-                    "files and would drop that column — use "
-                    "snapshots.read_snapshot / scan_snapshot (DataFrame "
-                    "path with partition discovery) for this layout"
-                )
+    data, and stay readable). The recorded ``layout`` decides when there
+    is one; otherwise every file's directories are parsed."""
+    names = m.get("layout")
+    if names is None:
+        base = m.get("base") or path
+        names = [k for f in m["files"] for k, _ in S._partition_dirs(f, base) or ()]
+    hive = [k for k in names if k != S.BUCKET_COL]
+    if hive:
+        raise ValueError(
+            f"{path}: data files live under hive partition "
+            f"dirs ({hive[0]}=...); the snapshot Data Source reads leaf "
+            "files and would drop that column — use "
+            "snapshots.read_snapshot / scan_snapshot (DataFrame "
+            "path with partition discovery) for this layout"
+        )
 
 
 
@@ -560,6 +561,7 @@ class _SnapshotWriter(DataSourceArrowWriter):
         import pyarrow.parquet as pq
 
         if not prev:  # a fresh table: this append defines it
+            S._bootstrap_guard(self._path, "snapshot Data Source append")
             t.set(stats_cols=self._stats_cols, bloom_cols=self._bloom_cols)
             return True
         # files under ANY col=val dir (the _p= bucket layout OR a generic
@@ -568,26 +570,17 @@ class _SnapshotWriter(DataSourceArrowWriter):
         # reads reject ("Conflicting directory structures") — breaking
         # read_snapshot AND the CDF reader (review r8: the guard
         # previously checked only _p=).
-        base = prev.get("base") or self._path
-        layered = next(
-            (
-                seg
-                for f in prev["files"]
-                for seg in os.path.relpath(f, base).split(os.sep)[:-1]
-                if "=" in seg
-            ),
-            None,
-        )
-        if files and layered:
+        layer = S._partition_layer(prev, self._path)
+        if files and layer:
             kind, hint = (
                 ("a bucketed merge table",
                  "append via apply_changes")
-                if layered.startswith(f"{S.BUCKET_COL}=")
+                if layer[0] == S.BUCKET_COL
                 else ("a hive-partitioned table",
                       "append via the partition-aware library writers")
             )
             raise ValueError(
-                f"{self._path} is {kind} ({layered} layout); flat "
+                f"{self._path} is {kind} ({'='.join(layer)} layout); flat "
                 f"Data Source appends would mix directory depths — {hint}"
             )
         mixed = bool(prev.get("mixed_schema"))
@@ -797,17 +790,10 @@ class _SnapshotStreamReader(DataSourceStreamReader):
             return [_AppendPartition()]
         m_old = S.read_manifest(self._path, v0, resolve=False) if v0 > 0 else {"files": []}
         m_new = S.read_manifest(self._path, v1, resolve=False)
-        old = set(m_old["files"])
-        new = set(m_new["files"])
-        removed = old - new
         # a deletion-vector change on a file both versions list is a
         # row-level REMOVAL without file churn — same append-only breach
         # as a removed file (Delta raises likewise without ignoreChanges)
-        dv_counts_old = (m_old.get("dv") or {}).get("counts") or {}
-        dv_counts_new = (m_new.get("dv") or {}).get("counts") or {}
-        dv_changed = [
-            f for f in (old & new) if dv_counts_old.get(f, 0) != dv_counts_new.get(f, 0)
-        ]
+        removed, added, dv_changed = S.changed_files(m_old, m_new)
         if (removed or dv_changed) and not self._ignore_changes:
             raise ValueError(
                 f"{self._path}: versions {v0}->{v1} removed {len(removed)} "
@@ -816,7 +802,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                 "row-level deltas with format('snapshot_cdf'), or set "
                 "ignoreChanges=true to stream only added files."
             )
-        added = sorted(new - old)
+        added = sorted(added)
         end_dv = S.read_dv(m_new)  # ref-based; no shard resolution needed
         dv = {f: end_dv[f] for f in added if f in end_dv}
         return [

@@ -29,8 +29,7 @@ version endpoints): ``insert`` / ``delete`` / ``update_preimage`` /
 """
 
 from __future__ import annotations
-import json
-import os
+
 from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
@@ -42,32 +41,9 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.cdf import CHANGE_TYPE_COL, COMMIT_VERSION_COL
 from ..sinks import snapshots as S
+from ..sources.snapshot_source import _epoch, _version_schema
 
 FORMAT_NAME = "snapshot_cdf"
-
-
-def _arrow_to_spark_schema(files: list[str]) -> StructType:
-    """Union of the files' parquet schemas (additive evolution keeps
-    old-schema files alive), as a Spark StructType. Delegates to the
-    batch connector's `_unified_arrow_schema` (review r8): that one
-    coerces ns timestamps to us/UTC (Spark's Arrow bridge rejects ns —
-    any Spark-written INT96 column would fail at .load() here),
-    forces nullable (pre-evolution files null-fill added columns), and
-    raises loudly on a zero-file (truncated) version instead of
-    returning a schema of only the meta columns."""
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    from ..sources.snapshot_source import _unified_arrow_schema
-
-    return from_arrow_schema(_unified_arrow_schema(files))
-
-
-def _bucket_of(f: str, base: str) -> str:
-    rel = os.path.relpath(f, base)
-    for seg in rel.split(os.sep):
-        if "=" in seg:
-            return seg
-    return ""  # flat layout: single partition
 
 
 @dataclass
@@ -103,8 +79,6 @@ class _CDFStreamReader(DataSourceStreamReader):
         elif start_ts is not None:
             # Delta's startingTimestamp: the base is the table state AS OF
             # the timestamp; the feed emits changes after it
-            from ..sources.snapshot_source import _epoch
-
             self._start = S.as_of(self._path, _epoch(start_ts))
         else:  # Delta default: changes from now on
             self._start = S.latest_version(self._path) or 0
@@ -122,17 +96,20 @@ class _CDFStreamReader(DataSourceStreamReader):
         m_old = S.read_manifest(self._path, v0, resolve=False) if v0 > 0 else {"files": []}
         m_new = S.read_manifest(self._path, v1, resolve=False)
         # the streaming CDF reader diffs FILE sets and reads raw bytes:
-        # deletion vectors (row churn with no file churn) and column
-        # mapping would be silently misread — both are metadata-only
-        # table states this reader does not support (the batch
-        # operators/cdf.read_changes does). Guard loudly (review r7).
-        # BOTH endpoints must be mapping-free (review r8): a batch
-        # spanning a mapping-materializing compact (old manifest mapped,
-        # new one reset to identity) would otherwise pass and outer-merge
-        # files whose physical names disagree — null keys, garbage rows.
+        # deletion vectors (row churn with no file churn, or masked rows
+        # of a file it reads) and column mapping would be silently
+        # misread — both are metadata-only table states this reader does
+        # not support (the batch operators/cdf.read_changes does). Guard
+        # loudly (review r7). BOTH endpoints must be mapping-free (review
+        # r8): a batch spanning a mapping-materializing compact (old
+        # manifest mapped, new one reset to identity) would otherwise
+        # pass and outer-merge files whose physical names disagree —
+        # null keys, garbage rows.
+        removed, added, dv_changed = S.changed_files(m_old, m_new)
+        masked_old = set((m_old.get("dv") or {}).get("counts") or {})
+        masked_new = set((m_new.get("dv") or {}).get("counts") or {})
         if (
-            (m_old.get("dv") or {}).get("counts")
-            != (m_new.get("dv") or {}).get("counts")
+            dv_changed or masked_old & set(removed) or masked_new & set(added)
             or m_new.get("renames") or m_new.get("dropped_cols")
             or m_old.get("renames") or m_old.get("dropped_cols")
         ):
@@ -143,8 +120,7 @@ class _CDFStreamReader(DataSourceStreamReader):
                 "for these tables"
             )
         base = m_new.get("base") or self._path
-        old_set, new_set = set(m_old["files"]), set(m_new["files"])
-        buckets: dict[str, _ChurnPartition] = {}
+        buckets: dict[tuple, _ChurnPartition] = {}
         data_fields = [
             f
             for f in self._schema.fields
@@ -152,28 +128,29 @@ class _CDFStreamReader(DataSourceStreamReader):
         ]
         cols = tuple(f.name for f in data_fields)
         types = tuple(f.dataType.simpleString() for f in data_fields)
-        def bucket(f: str) -> str:
-            seg = _bucket_of(f, base)
-            if seg and not seg.startswith("_p="):
+        def bucket(f: str) -> tuple:
+            dirs = tuple(S._partition_dirs(f, base) or ())  # flat: one partition
+            hive = [f"{k}={v}" for k, v in dirs if k != S.BUCKET_COL]
+            if hive:
                 # hive `col=val` dirs carry DATA columns the leaf-file
                 # pyarrow reads here cannot recover (the DataFrame path
                 # uses basePath discovery for exactly this) — refuse
                 # instead of silently dropping the column (review r8)
                 raise ValueError(
                     f"{self._path}: data files live under hive partition "
-                    f"dirs ({seg}); the snapshot_cdf STREAM reads leaf "
+                    f"dirs ({hive[0]}); the snapshot_cdf STREAM reads leaf "
                     "files and would drop that column — use "
                     "operators.cdf.read_changes (batch) for this layout"
                 )
-            return seg
+            return dirs
 
-        for f in sorted(old_set - new_set):
+        for f in sorted(removed):
             b = buckets.setdefault(
                 bucket(f),
                 _ChurnPartition(keys=self._keys, cols=cols, types=types, version=v1),
             )
             b.old_files.append(f)
-        for f in sorted(new_set - old_set):
+        for f in sorted(added):
             b = buckets.setdefault(
                 bucket(f),
                 _ChurnPartition(keys=self._keys, cols=cols, types=types, version=v1),
@@ -330,10 +307,10 @@ class SnapshotCDFSource(DataSource):
 
     def schema(self) -> StructType:
         path = self.options["path"]
-        # resolve=False: only the file list is needed — eager shard
-        # inlining would parse every stats sidecar per schema() call
+        # resolve=False: metadata only — the recorded schema, footers only
+        # for an evolved version or one with no usable record
         m = S.read_manifest(path, resolve=False)
-        base = _arrow_to_spark_schema(list(m["files"]))
+        base = _version_schema(m)
         return StructType(
             base.fields
             + [

@@ -308,6 +308,7 @@ def test_model_runner_closure(spark):
     out = reg.run(spark, "+tag:marts")
     assert calls == ["base", "mid", "top"]  # closure + topo order
     assert out["top"].collect()[0]["c"] == 2
+    assert spark.table("top").collect()[0]["c"] == 2  # registered as a view
     assert "island" not in out
     assert [m.name for m in reg.plan("tag:marts")] == ["mid", "top"]  # no closure without '+'
     assert [m.name for m in reg.plan("+top", exclude=("mid",))] == ["base", "top"]
