@@ -4,9 +4,10 @@ Reproduces the reference's composite operator (delete batch, then load
 NDJSON append — build_del_ins_from_gcs_to_bq_task.py:55-203, task wrapper
 build_del_ins_operator.py:9-118) as one Spark job:
 
-  read NDJSON (pinned schema, zero-bad-record gate)
+  read NDJSON (pinned schema)
     -> stamp batch columns
-    -> dynamic-partition-overwrite the (month, batch_id) slice
+    -> dynamic-partition-overwrite the (month, batch_id) slice, its scan
+       failing on the first corrupt line (zero-bad-record gate)
     -> append a reconciliation row to the _meta batch-runs table
        (build_batch_stats.py:9-43).
 
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sinks import writer
-from ..sources.ndjson import read_ndjson, stamp_batch_columns
+from ..sources.ndjson import read_ndjson_gated, stamp_batch_columns
 from .batch import BatchWindow
 
 BATCH_RUNS_SCHEMA = T.StructType(
@@ -174,26 +175,32 @@ def ingest_batch(
     staging: bool = False,
 ) -> DataFrame:
     """The del/ins composite. Returns the stamped DataFrame that was
-    written (for chaining into views/marts)."""
-    batch_start = datetime.utcnow()
-    df = read_ndjson(spark, src_path, schema, failed_transforms=failed_transforms)
-    # one literal insert time: current_timestamp() would re-evaluate on
-    # every action over the returned frame and drift from the table
-    df = stamp_batch_columns(df, window.batch_id, window.batch_run_date, datetime.now(timezone.utc))
+    written (for chaining into views/marts).
+
+    The zero-bad-record gate runs inside the write: a corrupt line fails
+    the write's task, so the dynamic-overwrite commit never runs and no
+    lineage or counter row is recorded, and the caller gets
+    ``BadRecordsError``. A clean batch costs the one write job."""
+    # aware UTC: TimestampType reads a naive datetime as host-local time.
+    # It is also the one literal insert time: current_timestamp() would
+    # re-evaluate on every action over the returned frame and drift from
+    # the table
+    batch_start = datetime.now(timezone.utc)
     # observe the row count DURING the write action (no second pass over
     # the NDJSON) — it feeds the additive-MoR ingest counters below
     obs = Observation(f"ingest-{table}-{window.batch_id}")
-    df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
     dest_table = f"{table}_staging" if staging else table
-    dest = wh.path(dest_table)
-    writer.replace_batch(df, dest, partition_field, granularity, cluster_fields)
+    with read_ndjson_gated(spark, src_path, schema, failed_transforms=failed_transforms) as (gated, plain):
+        written = stamp_batch_columns(gated, window.batch_id, window.batch_run_date, batch_start)
+        written = written.observe(obs, F.count(F.lit(1)).alias("n_rows"))
+        writer.replace_batch(written, wh.path(dest_table), partition_field, granularity, cluster_fields)
     record_batch_stats(spark, wh, window, table, batch_start)
     # counters key on the DESTINATION (ADVICE r11): a stage-then-promote
     # flow runs ingest_batch twice for one batch_id, and with a shared
     # txn_id the real ingest's delta would ledger-no-op against the
     # staging run's — replay idempotence is per destination table
     record_ingest_counters(spark, wh, window, dest_table, int(obs.get["n_rows"]))
-    return df
+    return stamp_batch_columns(plain, window.batch_id, window.batch_run_date, batch_start)
 
 
 def read_table(spark: SparkSession, wh: Warehouse, table: str) -> DataFrame:

@@ -21,7 +21,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -121,11 +121,19 @@ def sql_insert_job(
     return df
 
 
+def _utc(now: datetime | None) -> datetime:
+    """Aware UTC: a naive datetime given to Spark is read as host-local
+    time, so a naive ``now`` is taken as UTC here."""
+    if now is None:
+        return datetime.now(timezone.utc)
+    return now if now.tzinfo else now.replace(tzinfo=timezone.utc)
+
+
 def expire_partitions(wh: Warehouse, table: str, older_than_days: int, now: datetime | None = None) -> list[str]:
     """Drop `_p=` month/day partition directories entirely older than the
-    retention window. Returns dropped partition names."""
-    now = now or datetime.utcnow()
-    cutoff = now - timedelta(days=older_than_days)
+    retention window (``now`` defaults to the current time; a naive one
+    is read as UTC). Returns dropped partition names."""
+    cutoff = _utc(now) - timedelta(days=older_than_days)
     root = wh.path(table)
     dropped = []
     if not os.path.isdir(root):
@@ -136,7 +144,7 @@ def expire_partitions(wh: Warehouse, table: str, older_than_days: int, now: date
         val = entry.split("=", 1)[1]
         fmt = "%Y-%m-%d" if len(val) == 10 else "%Y-%m"
         try:
-            part_start = datetime.strptime(val, fmt)
+            part_start = datetime.strptime(val, fmt).replace(tzinfo=timezone.utc)
         except ValueError:
             continue
         # a month partition is expired only when its END is past the cutoff
@@ -149,13 +157,13 @@ def expire_partitions(wh: Warehouse, table: str, older_than_days: int, now: date
 
 def cleanup_meta(spark: SparkSession, wh: Warehouse, older_than_days: int, now: datetime | None = None) -> int:
     """Prune _meta.batch_runs rows older than the retention window
-    (copy-on-write rewrite). Returns remaining row count."""
+    (copy-on-write rewrite; ``now`` as in :func:`expire_partitions`).
+    Returns remaining row count."""
     from pyspark.sql import functions as F
 
     from .merge import safe_overwrite
 
-    now = now or datetime.utcnow()
-    cutoff = now - timedelta(days=older_than_days)
+    cutoff = _utc(now) - timedelta(days=older_than_days)
     path = wh.meta_path()
     df = spark.read.parquet(path)
     kept = df.filter(F.col("batch_start") >= F.lit(cutoff))

@@ -2,8 +2,10 @@
 
 ``jobs_of(spark, fn)`` runs ``fn()`` under a fresh job group, waits for
 the listener bus to drain, and returns one record per job the call
-submitted: its id and the summed shuffle read/write bytes and task count
-of its stages.
+submitted: its id, its name (Spark's call site, e.g. ``"collect at
+<file>.py:<line>"`` for a DataFrame collect, ``"parquet at ..."`` for a
+parquet write) and the summed shuffle read/write bytes and task count of
+its stages.
 """
 
 from __future__ import annotations
@@ -45,6 +47,7 @@ def jobs_of(spark, fn) -> list[dict]:
         mine = [st for st in stages if st["stageId"] in set(j.get("stageIds") or ())]
         out.append({
             "job": j["jobId"],
+            "name": j.get("name"),
             "tasks": sum(st.get("numTasks") or 0 for st in mine),
             "shuffle_bytes": sum(
                 (st.get("shuffleReadBytes") or 0) + (st.get("shuffleWriteBytes") or 0)

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 import time
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -139,3 +139,72 @@ def test_returned_frame_insert_ts_matches_the_table(spark, tmp_path):
     table = read_table(spark, wh, "accounts").where(f"batch_id = '{w.batch_id}'")
     assert len(got) == 1
     assert got == {r[0] for r in table.select("batch_insert_ts").collect()}
+
+
+def _tree(root: str) -> dict[str, bytes]:
+    """Every file under ``root`` (hidden ones too), by relative path."""
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(dirpath, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def test_clean_ingest_runs_only_its_write_job(spark, tmp_path):
+    """The zero-bad-record gate rides inside the write: a clean batch runs
+    one Spark job, the table write (Spark names a job submitted through
+    ``DataFrameWriter.parquet`` "parquet at ...")."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    src = FX.write_ndjson(str(tmp_path / "in" / "accounts.txt"), FX.account_change_rows())
+    w = _window("run_1job", datetime(2024, 1, 1, 10, 0))
+    jobs = jobs_of(spark, lambda: ingest_batch(spark, wh, "accounts", src, FX.ACCOUNTS_SCHEMA, w))
+    assert len(jobs) == 1, jobs
+    assert jobs[0]["name"].startswith("parquet at "), jobs
+    assert read_table(spark, wh, "accounts").count() == 6
+
+
+def test_corrupt_line_fails_ingest_and_changes_nothing(spark, tmp_path):
+    """A corrupt line in a replayed batch raises ``BadRecordsError`` naming
+    the file, and leaves the table (whose partition the replay would
+    overwrite), the lineage rows and the counters byte-identical."""
+    from stellar_etl_airflow_spark.sources.ndjson import BadRecordsError
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    w = _window("run_bad", datetime(2024, 1, 1, 10, 0))
+    clean = FX.write_ndjson(str(tmp_path / "in" / "clean.txt"), FX.account_change_rows())
+    ingest_batch(spark, wh, "accounts", clean, FX.ACCOUNTS_SCHEMA, w)
+    dirs = (wh.path("accounts"), wh.meta_path(), wh.counters_path())
+    before = [_tree(d) for d in dirs]
+    assert all(before)
+
+    bad = FX.write_ndjson(str(tmp_path / "in" / "bad.txt"), FX.account_change_rows(), corrupt_line=True)
+    with pytest.raises(BadRecordsError, match="1 corrupt NDJSON rows in .*bad.txt"):
+        ingest_batch(spark, wh, "accounts", bad, FX.ACCOUNTS_SCHEMA, w)
+    assert [_tree(d) for d in dirs] == before
+
+
+def test_batch_start_is_utc_under_a_non_utc_host_zone(spark, tmp_path):
+    """``batch_start`` records the UTC instant of the load whatever the
+    host's local zone is (a naive stamp was read as local time)."""
+    import pyarrow.parquet as pq
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    src = FX.write_ndjson(str(tmp_path / "in" / "accounts.txt"), FX.account_change_rows())
+    w = _window("run_tz", datetime(2024, 1, 1, 10, 0))
+    prior = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    try:
+        t0 = datetime.now(timezone.utc)
+        ingest_batch(spark, wh, "accounts", src, FX.ACCOUNTS_SCHEMA, w)
+        t1 = datetime.now(timezone.utc)
+    finally:
+        if prior is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = prior
+        time.tzset()
+    [stamp] = pq.read_table(wh.meta_path()).column("batch_start").to_pylist()
+    assert t0 <= stamp <= t1, (t0, stamp, t1)
