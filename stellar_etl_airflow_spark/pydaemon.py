@@ -39,14 +39,15 @@ a JVM job, and 0.08-0.10 s with the guard below (4 cores, r17).
 archive still has the ``(st_ino, st_mtime_ns, st_size)`` it was read at
 keeps the directory on record. A new or rewritten archive still
 re-reads, so a zip shipped or replaced mid-session is seen as before.
-The keys of the importers the daemon already holds are recorded after
-the preload, so every forked worker inherits them.
+The daemon calls ``importlib.invalidate_caches()`` once after the
+preload, so every forked worker inherits the keys of the archives it
+already holds.
 """
 
 from __future__ import annotations
 
+import importlib
 import os
-import sys
 import zipimport
 
 # archive path -> ((st_ino, st_mtime_ns, st_size), directory) as last read
@@ -81,16 +82,6 @@ def _skip_unchanged_zip_rereads() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-def _remember_held_zips() -> None:
-    """Record the key of every archive an importer on the path holds, so
-    the first ``invalidate_caches()`` of each forked worker skips it."""
-    for importer in list(sys.path_importer_cache.values()):
-        if isinstance(importer, zipimport.zipimporter) and importer.archive not in _read_dirs:
-            key = _stat_key(importer.archive)
-            if key is not None:
-                _read_dirs[importer.archive] = (key, importer._files)
-
-
 def _preload() -> None:
     # Ordered roughly by measured import cost; each guarded so a broken
     # or absent optional dependency can never take the daemon down.
@@ -119,7 +110,9 @@ def _preload() -> None:
 
 _skip_unchanged_zip_rereads()
 _preload()
-_remember_held_zips()
+# read every archive the preload left on the path once, here, so each
+# forked worker inherits its key and its first invalidate_caches() skips it
+importlib.invalidate_caches()
 
 # pyspark.daemon reads sys.argv at import time to resolve the worker
 # module, then ``manager()`` runs the fork-serve loop — identical

@@ -94,21 +94,16 @@ def read_ndjson(
 
 
 @contextmanager
-def read_ndjson_gated(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    failed_transforms: int = 0,
-    max_failed_transforms: int = 0,
-):
+def read_ndjson_gated(spark: SparkSession, path: str, schema: T.StructType, failed_transforms: int = 0):
     """Zero-budget read that runs no job of its own. Yields ``(gated,
     plain)``: ``gated`` raises inside whatever action scans it, on its
     first corrupt row; ``plain`` is the same rows unchecked, for reuse
-    once the gated action has succeeded. A failure of the ``with`` body
-    caused by the gate leaves it as ``BadRecordsError``, carrying the
-    count ``read_ndjson`` would report; any other failure propagates
-    unchanged."""
-    df = _read_permissive(spark, path, schema, failed_transforms, max_failed_transforms)
+    once the gated action has succeeded (Spark refuses a count over
+    ``gated``, whose only file column it then reads is the corrupt one).
+    A failure of the ``with`` body caused by the gate leaves it as
+    ``BadRecordsError``, carrying the count ``read_ndjson`` would report;
+    any other failure propagates unchanged."""
+    df = _read_permissive(spark, path, schema, failed_transforms, 0)
     tag = f"{_GATE_TAG}{path}"
     # CaseWhen(corrupt, raise, true) in a filter simplifies to
     # Or(Not(corrupt), raise): the raise is evaluated only on a corrupt row
