@@ -1,13 +1,13 @@
 """Benchmark harness: runs the oracle-checked query corpus against
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints THREE JSON lines — a per-query timing map, the A/B record (its
-own sacrificial line — r12, after splicing it into the headline bloated
-BENCH_r11 past the driver's bounded tail), then the compact headline
-metric LAST (the driver keeps the last complete line; _print_final
-asserts it stays under 4 KB):
+and prints THREE JSON lines — a per-query timing map, the load-stamp
+record (its own sacrificial line — r12, after splicing diagnostics into
+the headline bloated BENCH_r11 past the driver's bounded tail), then the
+compact headline metric LAST (the driver keeps the last complete line;
+_print_final asserts it stays under 4 KB):
 
   {"metric": "per_query_sec", "queries": {"q01_...": sec, ...}, "par": 1, "sf": 0.1}
-  {"metric": "bench_ab", "ab_walls": {...}, "rep_load": [...], "sf": 0.1}
+  {"metric": "bench_ab", "rep_load": [...], "e2e_load": [...], "sf": 0.1}
   {"metric": "corpus_wall_sec", "value": N, "unit": "sec", "par": 8,
    "queries": {top entries by cost, as many as fit the byte bound}, "sf": 0.1}
 
@@ -49,17 +49,9 @@ Every sweep/rep/e2e measurement carries a ``_LoadProbe`` stamp
 (loadavg, our process-tree CPU, other busy cores) so the judge can
 attribute a slow wall to co-tenant load from the JSON alone.
 
-Same-session A/B stamp (r11, VERDICT r10 ask #3): after all passes,
-any per-query sweep result >1.5x its prior-round stamp is re-timed on
-BOTH the current tree and the prior round's checkout (temp git
-worktree at the commit that recorded the prior BENCH json), one
-subprocess protocol per tree (own session, warmup rep, min-of-2) —
-``ab_walls`` in the headline JSON turns "host drift vs regression"
-from a manual chase into data. Priors come from the committed
-``bench_history.jsonl`` (full per-query map, appended each non-fast
-run; the driver's BENCH_r*.json tail is head-truncated and only
-recovers the alphabetic tail of the corpus). Disable with
-SPARK_GRAFT_BENCH_AB=0.
+Priors come from the committed ``bench_history.jsonl`` (full per-query
+map, appended each non-fast run): fast mode orders its pooled pass by
+them. Comparing two commits is ``perfbench``'s job (BENCHMARK.json).
 """
 
 from __future__ import annotations
@@ -332,185 +324,6 @@ def _prior_bench(sf: float | None) -> tuple[str, dict, float | None, str | None]
     return None
 
 
-def _ab_stamp(timings: dict[str, float], sf_dir: str, sf: float | None) -> dict:
-    """Same-session A/B for suspicious per-query deltas (VERDICT r10 ask
-    #3): any entry >1.5x its prior-round stamp is re-timed in THIS bench
-    session on BOTH the current tree and the prior round's checkout (a
-    temp git worktree at the commit that recorded the prior BENCH json),
-    under one subprocess protocol per tree (own Spark session, warmup,
-    min-of-2). Equal A/B walls = host drift; a gap that follows the
-    tree = a real regression — adjudicated from the JSON alone instead
-    of a manual post-hoc chase (the t60 r10 / e2e r8 pattern).
-    Never breaks the bench: any failure is recorded as ab_error."""
-    import subprocess
-    import tempfile
-
-    out: dict = {"ab_walls": None}
-    prior = _prior_bench(sf)
-    if prior is None:
-        out["ab_skipped"] = "no prior BENCH_r*.json with a per-query line"
-        return out
-    prev_file, prev_q, prev_sf, prev_commit = prior
-    if prev_sf != sf:
-        out["ab_skipped"] = f"prior bench at sf={prev_sf}, current sf={sf}"
-        return out
-    suspects = sorted(
-        (
-            n
-            for n, t in timings.items()
-            if n in prev_q and prev_q[n] > 0 and t > 1.5 * prev_q[n]
-            # sub-second pairs are scheduling noise, not regressions
-            and max(t, prev_q[n]) >= 0.5
-        ),
-        key=lambda n: -(timings[n] / prev_q[n]),
-    )[:12]
-    out["ab_prev_bench"] = os.path.basename(prev_file)
-    out["ab_suspects"] = {n: {"cur_sweep": timings[n], "prev_round": prev_q[n]} for n in suspects}
-    if not suspects:
-        out["ab_walls"] = {}
-        return out
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        # prefer the commit the prior row RECORDED (r13): git-log on the
-        # history file maps an uncommitted row to whatever commit last
-        # touched the file, which can be the current tree
-        sha = prev_commit or subprocess.run(
-            ["git", "log", "-n1", "--format=%H", "--", os.path.basename(prev_file)],
-            cwd=here, capture_output=True, text=True, timeout=60, check=True,
-        ).stdout.strip()
-        if not sha:
-            raise RuntimeError(f"no commit records {prev_file}")
-        out["ab_prev_commit"] = sha
-        runner = r"""
-import json, os, sys, time
-sys.path.insert(0, os.getcwd())
-from stellar_etl_airflow_spark.queries import QUERIES
-from stellar_etl_airflow_spark.session import get_spark
-sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-names = json.loads(os.environ["AB_NAMES"])
-spark = get_spark("bench-ab")
-spark.sparkContext.setLogLevel("ERROR")
-res = {}
-for n in names:
-    spec = QUERIES.get(n)
-    if spec is None:
-        res[n] = None
-        continue
-    walls = []
-    for rep in range(3):  # rep 0 = warmup, discarded
-        t0 = time.perf_counter()
-        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        walls.append(round(time.perf_counter() - t0, 3))
-    res[n] = min(walls[1:])
-# terminate AND reap the JVM before exiting (r12, VERDICT r11 #2): the
-# spark-submit JVM lingers past spark.stop()/gateway shutdown and only
-# dies via the atexit kill hook when this process exits — by then it
-# has re-parented to init and its CPU vanished from the parent bench's
-# process tree (the negative/zeroed ab_load stamps). Reaped here, the
-# JVM's CPU folds into our cutime, which folds into the bench's cutime
-# on OUR reap: conservation holds end to end.
-gw = spark.sparkContext._gateway
-spark.stop()
-try:
-    gw.shutdown()
-    p = getattr(gw, "proc", None)
-    if p is not None:
-        p.terminate()
-        try:
-            p.wait(timeout=30)
-        except Exception:
-            p.kill()
-            p.wait(timeout=10)
-except Exception:
-    pass
-# self-reported rusage (utime+stime+reaped children): the parent bench
-# uses it as a FLOOR for its load-probe tree delta — a direct
-# measurement that survives any orphaning the reap above misses
-t = os.times()
-print("AB_CPU " + str(t.user + t.system + t.children_user + t.children_system))
-print("AB_RESULT " + json.dumps(res))
-"""
-
-        subproc_cpu: list[float] = []
-
-        def run_tree(cwd: str) -> dict:
-            env = dict(os.environ)
-            env["SPARK_GRAFT_SF_DIR"] = sf_dir
-            env["AB_NAMES"] = json.dumps(suspects)
-            env["PYTHONPATH"] = cwd
-            # the main bench session (64g heap) is still alive; cap the
-            # A/B session so two JVMs never overcommit the 128 GiB host
-            env.setdefault("SPARK_DRIVER_MEMORY", "24g")
-            p = subprocess.run(
-                [sys.executable, "-c", runner], cwd=cwd, env=env,
-                capture_output=True, text=True, timeout=1800,
-            )
-            result = None
-            for line in p.stdout.splitlines():
-                if line.startswith("AB_RESULT "):
-                    result = json.loads(line[len("AB_RESULT "):])
-                elif line.startswith("AB_CPU "):
-                    try:
-                        subproc_cpu.append(float(line[len("AB_CPU "):]))
-                    except ValueError:
-                        pass
-            if result is not None:
-                return result
-            raise RuntimeError(
-                f"ab subprocess in {cwd} rc={p.returncode}: {p.stderr[-400:]}"
-            )
-
-        with tempfile.TemporaryDirectory() as wtroot:
-            wt = os.path.join(wtroot, "prev")
-            subprocess.run(
-                ["git", "worktree", "add", "--detach", wt, sha],
-                cwd=here, capture_output=True, text=True, timeout=120, check=True,
-            )
-            try:
-                probe = _LoadProbe()
-                cur = run_tree(here)
-                prev = run_tree(wt)
-                # ordering-bias control (seen live in r11: the first
-                # session runs while the pooled reps' load is still
-                # draining and reads slower). If any suspect shows a
-                # tree-following gap, confirm in REVERSE order and keep
-                # the per-tree min — a real regression survives both
-                # orders, a drain artifact doesn't.
-                gap = any(
-                    cur.get(n) and prev.get(n)
-                    and not 0.8 <= cur[n] / prev[n] <= 1.25
-                    for n in suspects
-                )
-                if gap:
-                    prev2 = run_tree(wt)
-                    cur2 = run_tree(here)
-                    for n in suspects:
-                        if cur2.get(n) is not None:
-                            cur[n] = min(x for x in (cur.get(n), cur2[n]) if x is not None)
-                        if prev2.get(n) is not None:
-                            prev[n] = min(x for x in (prev.get(n), prev2[n]) if x is not None)
-                    out["ab_reversed_pass"] = True
-                out["ab_subproc_cpu_sec"] = round(sum(subproc_cpu), 1)
-                out["ab_load"] = probe.stamp(floor_cpu_sec=sum(subproc_cpu))
-            finally:
-                subprocess.run(
-                    ["git", "worktree", "remove", "--force", wt],
-                    cwd=here, capture_output=True, text=True, timeout=120,
-                )
-        out["ab_walls"] = {
-            n: {
-                "cur": cur.get(n),
-                "prev": prev.get(n),
-                "cur_sweep": timings[n],
-                "prev_round": prev_q[n],
-            }
-            for n in suspects
-        }
-    except Exception as e:  # noqa: BLE001 - A/B must never break the bench
-        out["ab_error"] = f"{type(e).__name__}: {str(e)[:300]}"
-    return out
-
-
 # The driver keeps a 2000-byte stdout TAIL and parses the last complete
 # JSON line inside it (measured r14: every BENCH_r*.json artifact stores
 # exactly 2000 tail bytes, and the two rounds whose final line outgrew it
@@ -679,7 +492,7 @@ def main() -> None:
     # longest-first keeps the big entries (merge protocols, streaming
     # drains, LSH) from landing last and serializing the tail. Ordered by
     # THIS run's own uncontended sweep; fast mode has none and uses the
-    # prior run's per-query map (the one the A/B reads), else name order.
+    # prior run's per-query map, else name order.
     # Name tiebreak keeps it deterministic.
     cost = timings if timings is not None else (_prior_bench(sf) or (None, {}))[1]
     ordered = sorted(QUERIES.items(), key=lambda kv: (-cost.get(kv[0], 0.0), kv[0]))
@@ -744,28 +557,16 @@ def main() -> None:
                     # stage — ingest_delins / state_merge / view_export
                     e2e_sec, e2e_stages = wall, res.get("stages")
 
-    # A/B stamp for suspicious per-query deltas (VERDICT r10 ask #3):
-    # runs LAST so its subprocess sessions never contend with the
-    # measurement passes above.
-    ab: dict = {}
-    if timings is not None and os.environ.get("SPARK_GRAFT_BENCH_AB", "1") != "0":
-        # compare against the PRIOR run's map FIRST — the history's
-        # newest entry must not be ourselves
-        ab = _ab_stamp(timings, sf_dir, sf)
     if not fast:
-        # record history whenever a real sweep ran, NOT gated on the AB
-        # flag (ADVICE r11): an AB-disabled run that skips recording
-        # leaves the next AB pass comparing against a stale round and
-        # flagging host drift as regressions. Fast-mode timings carry
-        # the pooled par stamp and would poison sweep-vs-sweep priors.
+        # record history whenever a real sweep ran: fast mode's pooled
+        # ordering reads it. Fast-mode timings carry the pooled par
+        # stamp and would poison sweep-vs-sweep priors.
         _record_history(timings, sf)
 
     # per-rep load stamps ride the SACRIFICIAL line (optimization r14):
     # the final line's bytes belong to the per-query contract dict; the
     # stamps stay on stdout only (_record_history does not write them)
-    ab = dict(ab)
-    ab["rep_load"] = rep_load
-    ab["e2e_load"] = e2e_load
+    ab = {"rep_load": rep_load, "e2e_load": e2e_load}
     _emit_output(
         per_query={
             "metric": "per_query_sec",
@@ -787,7 +588,6 @@ def main() -> None:
             "e2e_walls": e2e_walls or None,
             "e2e_stages_sec": e2e_stages,
             "e2e_ref_budget_sec": 400,
-            "ab_suspect_count": len(ab.get("ab_suspects") or {}) if ab else None,
             "sf": sf,
         },
         sf=sf,

@@ -1,4 +1,4 @@
-"""Scalable as-of (backward temporal) join operators.
+"""Scalable as-of (temporal) join.
 
 The reference expresses as-of joins as LEAD()-built validity windows plus a
 range join (v_liquidity_pool_trade_volume.sql:31-54,88-95 — see
@@ -7,47 +7,33 @@ ideal when the price/dimension side is broadcastable, but at 100 TB with a
 LARGE right side the range join degenerates: Catalyst plans a
 BroadcastNestedLoopJoin or an exploded theta join, both quadratic per key.
 
-Two scale-path alternatives, both one-shuffle:
+:func:`asof_join` is the scale path: tag both sides, union, then one
+running ``last(value, ignorenulls=True)`` window per key. Cost = ONE
+shuffle + sort of |L|+|R| rows, no pair blow-up, AQE-skew-splittable, and
+the window spills, so a hot key never has to fit in memory. This is how
+as-of joins are done on billions-of-rows-per-side (the same plan Flink's
+temporal join and kdb's aj compile to).
 
-- :func:`asof_join` — the union trick: tag both sides, union, then one
-  running ``last(value, ignorenulls=True)`` window per key ordered by
-  (ts, side). Cost = ONE shuffle + sort of |L|+|R| rows, no pair blow-up,
-  AQE-skew-splittable. This is how as-of joins are done on
-  billions-of-rows-per-side (the same plan Flink's temporal join and
-  kdb's aj compile to).
-- :func:`asof_join_pandas` — cogrouped ``applyInPandas`` over
-  ``pandas.merge_asof``: per-key Arrow batches, supports ``tolerance``
-  and forward/nearest directions that the union trick doesn't express.
-  Python-side, so reserved for semantics the JVM path can't do.
-
-Both implement BACKWARD inclusive semantics (latest right row with
-``r.ts <= l.ts``), matching DuckDB's ``ASOF JOIN ... ON l.ts >= r.ts``
-(the corpus oracle for q27) and the reference's ``valid_from <= t``.
+- ``direction="backward"`` (default): the latest right row with
+  ``r.ts <= l.ts``, matching DuckDB's ``ASOF JOIN ... ON l.ts >= r.ts``
+  (the corpus oracle for q27) and the reference's ``valid_from <= t``.
+- ``direction="forward"``: the earliest right row with ``r.ts >= l.ts`` —
+  the same window run over ``ts DESC``.
+- ``tolerance``: a match older (backward) or newer (forward) than the left
+  row by more than this ``timedelta`` reads NULL. The bound is inclusive,
+  as in ``pandas.merge_asof``, and never falls back to another row.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from datetime import timedelta
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as ST
 from pyspark.sql.window import Window
-from ..session import local_df
 
 _SIDE, _ATS = "_asof_side", "_asof_ts"
-
-
-def _hashable(dt: ST.DataType) -> bool:
-    """Spark's ``hash()`` rejects MapType anywhere in the type tree
-    (UNSUPPORTED_FEATURE.HASH_MAP_TYPE) — used to pick salt columns."""
-    if isinstance(dt, ST.MapType):
-        return False
-    if isinstance(dt, ST.ArrayType):
-        return _hashable(dt.elementType)
-    if isinstance(dt, ST.StructType):
-        return all(_hashable(f.dataType) for f in dt.fields)
-    return True
 
 
 def asof_join(
@@ -58,15 +44,24 @@ def asof_join(
     right_ts: str = "ts",
     value_cols: Sequence[str] | None = None,
     tiebreak_cols: Sequence[str] = (),
+    direction: str = "backward",
+    tolerance: timedelta | None = None,
 ) -> DataFrame:
-    """Backward as-of LEFT join: for each left row, attach ``value_cols``
-    from the latest right row with ``right_ts <= left_ts`` (same key), NULL
-    if none. Right rows sharing one (key, ts): the greatest ``tiebreak_cols``
-    wins (pass the right side's sequence column to make ties deterministic).
+    """As-of LEFT join: for each left row, attach ``value_cols`` from the
+    latest right row with ``right_ts <= left_ts`` (``direction="backward"``)
+    or the earliest with ``right_ts >= left_ts`` (``"forward"``), same key;
+    NULL if none, or if that row is further than ``tolerance`` from the
+    left row. Right rows sharing one (key, ts): backward takes the greatest
+    ``tiebreak_cols``, forward the smallest (pass the right side's sequence
+    column to make ties deterministic).
 
     Plan shape: unionByName -> single hash exchange on the key -> per-key
     sort -> running last(). No range predicate ever reaches a join operator.
     """
+    if direction not in ("backward", "forward"):
+        raise ValueError(f"asof_join: direction must be 'backward' or 'forward', got {direction!r}")
+    if tolerance is not None and tolerance < timedelta(0):
+        raise ValueError(f"asof_join: tolerance must not be negative, got {tolerance!r}")
     keys = [on] if isinstance(on, str) else list(on)
     value_cols = list(value_cols) if value_cols is not None else [
         c for c in right.columns if c not in set(keys) | {right_ts}
@@ -80,331 +75,42 @@ def asof_join(
     # would let a NULL value in the latest matching row silently fall back
     # to an older row, and could mix values from different right rows.
     # The struct itself is non-null for every right row, so genuine NULLs
-    # inside it survive — matching the DuckDB ASOF oracle semantics.
+    # inside it survive — matching the DuckDB ASOF oracle semantics. With a
+    # tolerance the matched right ts rides along to bound the distance.
+    packed = [F.col(c) for c in value_cols]
+    if tolerance is not None:
+        packed.append(F.col(right_ts).alias(_ATS))
     r = right.select(
         *keys,
         F.col(right_ts).alias(_ATS),
         F.lit(0).alias(_SIDE),
-        F.struct(*[F.col(c) for c in value_cols]).alias("_r_pack"),
+        F.struct(*packed).alias("_r_pack"),
         *[F.col(c).alias(f"_tb_{c}") for c in tiebreak_cols],
     )
     lft = left.select("*", F.col(left_ts).alias(_ATS), F.lit(1).alias(_SIDE))
     u = lft.unionByName(r, allowMissingColumns=True)
 
-    # right rows sort BEFORE left rows at equal ts (inclusive backward);
-    # among right ties the greatest tiebreak lands last and wins last()
-    order = [F.col(_ATS).asc(), F.col(_SIDE).asc()] + [F.col(f"_tb_{c}").asc_nulls_first() for c in tiebreak_cols]
+    # right rows sort BEFORE left rows at equal ts (inclusive match); among
+    # right ties the winning tiebreak lands last and wins last(): backward
+    # runs ts ascending (greatest tiebreak last), forward runs ts descending
+    # (smallest tiebreak last). A NULL tiebreak never beats a set one.
+    if direction == "backward":
+        order = [F.col(_ATS).asc(), F.col(_SIDE).asc()] + [
+            F.col(f"_tb_{c}").asc_nulls_first() for c in tiebreak_cols
+        ]
+    else:
+        order = [F.col(_ATS).desc(), F.col(_SIDE).asc()] + [
+            F.col(f"_tb_{c}").desc_nulls_first() for c in tiebreak_cols
+        ]
     w = Window.partitionBy(*keys).orderBy(*order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     filled = u.withColumn("_pack", F.last("_r_pack", ignorenulls=True).over(w))
+    if tolerance is not None:
+        matched_ts, tol = F.col("_pack").getField(_ATS), F.lit(tolerance)
+        near = (
+            matched_ts >= F.col(_ATS) - tol if direction == "backward" else matched_ts <= F.col(_ATS) + tol
+        )
+        filled = filled.withColumn("_pack", F.when(near, F.col("_pack")))
     return filled.filter(F.col(_SIDE) == 1).select(
         *left.columns,
         *[F.col("_pack").getField(c).alias(c) for c in value_cols],
     )
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    value_cols: Sequence[str] | None = None,
-    tolerance=None,
-    direction: str = "backward",
-    tie_cols: Sequence[str] = (),
-    bucket_by: int | str | None = "auto",
-    skew: str = "auto",
-    max_group_rows: int = 4_000_000,
-) -> DataFrame:
-    """As-of join via cogrouped ``applyInPandas`` + ``pandas.merge_asof``.
-
-    Use when ``tolerance`` (max staleness) or ``direction`` in
-    {"forward", "nearest"} is needed — semantics ``merge_asof`` has but the
-    union-window trick does not. Arrow-batched; each cogroup (one BUCKET
-    of keys, see below) must fit in executor memory.
-
-    ``bucket_by``: cogroup on ``pmod(hash(keys), B)`` instead of the raw
-    keys, and run ONE vectorized ``merge_asof(by=keys)`` per bucket.
-    Cogrouped applyInPandas invokes Python once PER GROUP, so grouping on
-    a high-cardinality key (every user, every instrument) pays per-key
-    Arrow+interpreter overhead — ~1 ms × millions of keys. Bucketing
-    makes the group count the shuffle width, not the key cardinality.
-    The default ``"auto"`` sizes B = ``spark.sql.shuffle.partitions``:
-    one cogroup per shuffle partition, so each pandas frame holds ~one
-    partition's volume — the SAME memory contract as any shuffled stage
-    (sized by raising partitions, which also raises B), with full
-    parallelism and minimal per-group Python overhead (measured at
-    sf0.1: B=32 0.85s, B=512 3.8s — overhead grows with B; a fixed B
-    would silently mean "1/B of the dataset per pandas frame" at 100 TB).
-    Pass an int to pin B, or ``None`` to cogroup on the raw keys
-    (maximum isolation: one hot key per group; the right fallback when
-    single keys are themselves huge or skewed).
-
-    ``tie_cols``: extra right-side columns used ONLY to order equal-
-    timestamp right rows inside the group (merge_asof resolves ties to
-    the LAST row, so ascending tie order picks the max). Without them,
-    equal-ts duplicates resolve to whichever row survived the cogroup
-    shuffle — run-dependent. A pre-join ``sortWithinPartitions`` cannot
-    provide this: the cogroup re-shuffles and key-sorts with no intra-
-    group order guarantee.
-
-    ``skew="auto"`` (default): AQE-style hot-key fallback. One cheap
-    aggregate job (``groupBy(keys).count()`` — map-side partial, shuffle
-    volume ∝ distinct keys) finds keys whose LEFT row count exceeds
-    ``max_group_rows``; for those keys the left side is split into
-    ``ceil(count / max_group_rows)`` salted subgroups (per-key adaptive
-    S, like AQE's skewed-partition splitting) and the right side's rows
-    for those keys are replicated across the salts so every subgroup
-    still sees the key's full right history — identical merge_asof
-    semantics, bounded pandas frames. Cold keys take the normal
-    bucketed/raw path untouched; when no key is hot the plan is
-    unchanged and the only cost is the detection job. ``skew="off"``
-    skips detection.
-
-    RIGHT-hot keys (a single key whose right history alone exceeds the
-    envelope): for ``direction="backward"`` the right history is
-    time-range chunked — per-key quantile cuts (``percentile_approx``,
-    a map-side-combined aggregate, no per-key sort task) assign every
-    right row a chunk; each left row routes to the chunk covering its
-    timestamp; and each chunk is seeded with the LAST row (by ts +
-    tie_cols) of all earlier chunks, so a left row landing in a chunk
-    whose rows are all later than it still sees the correct
-    latest-earlier right row. Results are identical to the unsplit
-    path; per-group right volume ~ envelope/S (quantile-sketch
-    approximate) + 1 seed row. Equal right timestamps never straddle a
-    chunk (the cut comparison is on the ts value), so tie resolution is
-    preserved — the flip side is that a pathological key with millions
-    of rows at ONE timestamp cannot be range-split and stays bounded
-    only by its distinct-ts spread. For ``direction`` in {"forward",
-    "nearest"} right-hot keys are isolated into their own cogroup
-    (correct, but the frame is as big as that key's history) — the
-    forward seed would need first-run-of-next-chunk semantics that no
-    caller currently needs.
-    """
-    import pandas as pd
-
-    keys = [on] if isinstance(on, str) else list(on)
-    if skew not in ("auto", "off"):
-        raise ValueError(f"asof_join_pandas: skew must be 'auto' or 'off', got {skew!r}")
-    if not (isinstance(bucket_by, int) and not isinstance(bucket_by, bool) and bucket_by > 0
-            or bucket_by in ("auto", None)):
-        # 0/negative would silently select raw-key cogrouping via truthiness;
-        # an unknown string would fail later at int() with a confusing message.
-        raise ValueError(
-            f"asof_join_pandas: bucket_by must be a positive int, 'auto', or None, got {bucket_by!r}"
-        )
-    tie_cols = list(tie_cols)
-    value_cols = list(value_cols) if value_cols is not None else [
-        c for c in right.columns if c not in set(keys) | {right_ts} | set(tie_cols)
-    ]
-    out_schema = ST.StructType(
-        list(left.schema.fields) + [right.schema[c] for c in value_cols]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-    rsel = right.select(*keys, F.col(right_ts).alias("_rts"), *value_cols, *tie_cols)
-
-    # The bucketed path hashes each side's key columns independently, so a
-    # dtype mismatch (int vs bigint) makes F.hash disagree and equal keys
-    # land in DIFFERENT buckets — for some dtype pairs that's silently
-    # missing matches, not an error. merge_asof's by=/on= would likewise
-    # fail per-bucket with an opaque pandas MergeError. Assert equality up
-    # front (a lossy auto-cast could conflate unequal keys, so we refuse
-    # rather than cast).
-    for k in keys:
-        lt, rt = left.schema[k].dataType, right.schema[k].dataType
-        if lt != rt:
-            raise TypeError(
-                f"asof_join_pandas: key {k!r} dtype mismatch: left {lt.simpleString()} "
-                f"vs right {rt.simpleString()}; cast one side before joining"
-            )
-    lts_t, rts_t = left.schema[left_ts].dataType, right.schema[right_ts].dataType
-    if lts_t != rts_t:
-        raise TypeError(
-            f"asof_join_pandas: timestamp dtype mismatch: {left_ts}={lts_t.simpleString()} "
-            f"vs {right_ts}={rts_t.simpleString()}; cast one side before joining"
-        )
-
-    by = keys if bucket_by else None
-
-    def join_group(ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        if ldf.empty:
-            return pd.DataFrame(columns=out_cols)
-        # merge_asof requires a global sort on the ts key; with by= the
-        # key grouping happens inside the single vectorized merge call.
-        ldf = ldf.sort_values(left_ts, kind="mergesort")
-        if rdf.empty:
-            for c in value_cols:
-                ldf[c] = None
-            return ldf[out_cols]
-        rdf = rdf.sort_values(["_rts", *tie_cols], kind="mergesort")
-        merged = pd.merge_asof(
-            ldf,
-            rdf[[*(by or []), "_rts", *value_cols]],
-            left_on=left_ts,
-            right_on="_rts",
-            by=by,
-            tolerance=tolerance,
-            direction=direction,
-        )
-        return merged[out_cols]
-
-    if bucket_by == "auto":
-        bucket_by = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-
-    # --- AQE-style skew fallback: split hot keys off the cogroup path ---
-    l_cold, r_cold, hot_out = left, rsel, None
-    if skew == "auto":
-        lim = int(max_group_rows)
-        tagged = left.select(*keys, F.lit(1).alias("_l")).unionByName(
-            rsel.select(*keys, F.lit(0).alias("_l"))
-        )
-        # right split factor: only the backward direction has the
-        # carry-forward seed construction (see docstring); other
-        # directions keep _rs=1 (isolation).
-        rs_expr = (
-            F.greatest(F.ceil(F.col("_rn") / F.lit(lim)), F.lit(1)).cast("int")
-            if direction == "backward"
-            else F.lit(1)
-        )
-        hot = (
-            tagged.groupBy(*keys)
-            .agg(F.sum("_l").alias("_ln"), F.sum(F.lit(1) - F.col("_l")).alias("_rn"))
-            .filter((F.col("_ln") > lim) | (F.col("_rn") > lim))
-            .select(
-                *keys,
-                # per-key split factor, like AQE's skewed-partition split:
-                # enough salts that each left slice fits the envelope.
-                # A right-hot/left-small key gets S=1 — pure isolation
-                # (its own group, out of everyone else's bucket).
-                F.greatest(F.ceil(F.col("_ln") / F.lit(lim)), F.lit(1)).cast("int").alias("_hot_s"),
-                rs_expr.alias("_rs"),
-            )
-        )
-        # Bounded collect: at most |total rows| / max_group_rows keys can be
-        # hot (≤ a few hundred k at 1e12 rows; realistically a handful).
-        hot_rows = hot.collect()
-        if hot_rows:
-            spark = left.sparkSession
-            hotk = local_df(spark, hot_rows, hot.schema)
-            l_cold = left.join(F.broadcast(hotk), keys, "left_anti")
-            r_cold = rsel.join(F.broadcast(hotk), keys, "left_anti")
-
-            # ---- right-hot time-range chunking (backward only) ----
-            # Every hot-key row gets an _asof_chunk; keys that are not
-            # right-split keep chunk 0 (null cuts). Chunk = count of
-            # per-key quantile cuts <= ts, compared in a monotonic
-            # numeric space (double cast), so equal timestamps always
-            # share a chunk and left/right agree on the boundary.
-            s_max = max(r["_rs"] for r in hot_rows)
-            struct_fields = list(dict.fromkeys(["_rts", *tie_cols, *value_cols]))
-
-            def _chunk(ts_col):
-                return F.when(F.col("_cuts").isNull(), F.lit(0)).otherwise(
-                    F.size(F.filter(F.col("_cuts"), lambda c: c <= ts_col.cast("double")))
-                ).cast("int")
-
-            def _with_cuts(df):
-                if s_max > 1:
-                    return df.join(F.broadcast(cuts), keys, "left")
-                return df.withColumn("_cuts", F.lit(None).cast("array<double>"))
-
-            if s_max > 1:
-                rs_keys = hotk.filter(F.col("_rs") > 1).select(*keys, "_hot_s")
-                # uniform s_max-way quantiles: percentile_approx needs a
-                # literal percentage array, so keys with a smaller _rs
-                # simply get smaller chunks (more groups, same rows).
-                percs = [i / s_max for i in range(1, s_max)]
-                cuts = (
-                    rsel.join(F.broadcast(rs_keys.select(*keys)), keys, "inner")
-                    .groupBy(*keys)
-                    .agg(
-                        F.percentile_approx(
-                            F.col("_rts").cast("double"), percs, 10000
-                        ).alias("_cuts")
-                    )
-                )
-
-            # Hot left rows: salt into _hot_s subgroups and route to the
-            # right-history chunk covering their timestamp.
-            # Deterministic salt: hash of the full row content. A
-            # nondeterministic spread (monotonically_increasing_id) could
-            # re-salt rows differently across task retries / fetch-failure
-            # recomputes upstream of the cogroup shuffle, duplicating or
-            # dropping rows; a content hash is stable across attempts.
-            # Identical duplicate rows landing in one salt is fine — the
-            # right history is fully replicated per salt. Map-typed
-            # columns are excluded from the hash (Spark's hash() rejects
-            # MapType); keys+ts are always atomic so the salt still
-            # spreads.
-            _salt_cols = [
-                f.name for f in left.schema.fields if _hashable(f.dataType)
-            ]
-            l_hot = (
-                _with_cuts(left.join(F.broadcast(hotk), keys, "inner"))
-                .withColumn(
-                    "_asof_salt",
-                    F.pmod(F.hash(*[F.col(c) for c in _salt_cols]), F.col("_hot_s")).cast("int"),
-                )
-                .withColumn("_asof_chunk", _chunk(F.col(left_ts)))
-                .drop("_hot_s", "_rs", "_cuts")
-            )
-
-            r_hot = (
-                _with_cuts(rsel.join(F.broadcast(hotk), keys, "inner"))
-                .withColumn("_asof_chunk", _chunk(F.col("_rts")))
-                .drop("_rs", "_cuts")
-            )
-            if s_max > 1:
-                # Boundary seeds: chunk k also receives the LAST right row
-                # (max by ts + tie_cols, lexicographic struct max — one
-                # map-side-combined aggregate) of all chunks < k, so a
-                # left row whose true match precedes its chunk's rows
-                # still finds it. The seed tables are tiny (<= s_max rows
-                # per right-split key).
-                pcl = (
-                    r_hot.join(F.broadcast(rs_keys.select(*keys)), keys, "leftsemi")
-                    .groupBy(*keys, F.col("_asof_chunk").alias("_pchunk"))
-                    .agg(F.max(F.struct(*struct_fields)).alias("_s"))
-                )
-                grid = rs_keys.select(
-                    *keys,
-                    "_hot_s",
-                    F.explode(F.sequence(F.lit(1), F.lit(s_max - 1))).alias("_asof_chunk"),
-                )
-                seeds = (
-                    grid.join(pcl, keys, "inner")
-                    .filter(F.col("_pchunk") < F.col("_asof_chunk"))
-                    .groupBy(*keys, "_hot_s", "_asof_chunk")
-                    .agg(F.max("_s").alias("_s"))
-                    .select(
-                        *keys,
-                        "_hot_s",
-                        "_asof_chunk",
-                        *[F.col(f"_s.{c}").alias(c) for c in struct_fields],
-                    )
-                )
-                r_hot = r_hot.unionByName(seeds)
-
-            r_hot = r_hot.withColumn(
-                "_asof_salt", F.explode(F.sequence(F.lit(0), F.col("_hot_s") - 1))
-            ).drop("_hot_s")
-            hot_out = (
-                l_hot.groupBy(*keys, "_asof_salt", "_asof_chunk")
-                .cogroup(r_hot.groupBy(*keys, "_asof_salt", "_asof_chunk"))
-                .applyInPandas(join_group, out_schema)
-            )
-
-    if bucket_by:
-        bcol = F.pmod(F.hash(*keys), F.lit(int(bucket_by)))
-        cold_out = (
-            l_cold.groupBy(bcol.alias("_asof_b"))
-            .cogroup(r_cold.groupBy(bcol.alias("_asof_b")))
-            .applyInPandas(join_group, out_schema)
-        )
-    else:
-        cold_out = (
-            l_cold.groupBy(*keys)
-            .cogroup(r_cold.groupBy(*keys))
-            .applyInPandas(join_group, out_schema)
-        )
-    return cold_out.unionByName(hot_out) if hot_out is not None else cold_out

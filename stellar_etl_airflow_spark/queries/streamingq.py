@@ -17,6 +17,7 @@ import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
+from datetime import timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -687,35 +688,32 @@ GROUP BY user_id, date_trunc('day', ts)
 
 
 def q52_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join with max-staleness tolerance (pandas merge_asof
-    semantics, the one as-of variant the union-window trick cannot
-    express): each click takes the latest purchase price for its user
-    UNLESS that price is older than 1 day — then NULL. Runs through the
-    cogrouped-applyInPandas as-of shape (operators/asof.py:92); the
-    oracle expresses the same thing as a validity-window join with a
-    staleness bound."""
-    import pandas as pd
-
-    from ..operators.asof import asof_join_pandas
+    """As-of join with max-staleness tolerance (``merge_asof`` semantics):
+    each click takes the latest purchase price for its user UNLESS that
+    price is more than 1 day older than the click — then NULL, with no
+    fallback to an older price. Runs through the union-window operator
+    (operators/asof.py), which carries the matched purchase ts to bound
+    the distance; the oracle expresses the same thing as a validity-window
+    join with a staleness bound."""
+    from ..operators.asof import asof_join
 
     (ev,) = tables(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", F.col("value").alias("price"), F.col("event_id").alias("_peid")
     )
-    # tie_cols makes equal-ts purchases resolve deterministically to the
-    # max event_id INSIDE the pandas group (a pre-join sort would not
-    # survive the cogroup shuffle) — matching the oracle's lead-window
-    # convention, where the earlier-id row's validity window is empty
-    out = asof_join_pandas(
+    # equal-ts purchases resolve to the max event_id — matching the
+    # oracle's lead-window convention, where the earlier-id row's validity
+    # window is empty
+    out = asof_join(
         clicks,
         purchases,
         on="user_id",
         left_ts="ts",
         right_ts="ts",
         value_cols=["price"],
-        tolerance=pd.Timedelta(days=1),
-        tie_cols=["_peid"],
+        tolerance=timedelta(days=1),
+        tiebreak_cols=["_peid"],
     )
     return out.select("event_id", "user_id", "ts", "price")
 
@@ -736,21 +734,19 @@ LEFT JOIN prices p
 
 
 def q53_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FORWARD as-of join (merge_asof direction='forward'): each click
-    takes the price of the EARLIEST purchase at or after it — the
-    look-ahead attribution the backward union-window trick cannot
-    express. Ties on purchase ts resolve to the MIN event_id (forward
-    merge_asof picks the first row in sort order), matching the oracle's
-    lag-window convention where the later-id duplicate's validity window
-    is empty."""
-    from ..operators.asof import asof_join_pandas
+    """FORWARD as-of join: each click takes the price of the EARLIEST
+    purchase at or after it — look-ahead attribution, the same union
+    window as the backward join run over ``ts DESC``. Ties on purchase ts
+    resolve to the MIN event_id, matching the oracle's lag-window
+    convention where the later-id duplicate's validity window is empty."""
+    from ..operators.asof import asof_join
 
     (ev,) = tables(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", F.col("value").alias("price"), F.col("event_id").alias("_peid")
     )
-    out = asof_join_pandas(
+    out = asof_join(
         clicks,
         purchases,
         on="user_id",
@@ -758,7 +754,7 @@ def q53_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="ts",
         value_cols=["price"],
         direction="forward",
-        tie_cols=["_peid"],
+        tiebreak_cols=["_peid"],
     )
     return out.select("event_id", "user_id", "ts", "price")
 
@@ -895,12 +891,12 @@ SPECS: dict[str, QuerySpec] = {
     "q52_asof_tolerance": QuerySpec(
         q52_asof_tolerance,
         Q52_SQL,
-        "as-of join with max-staleness tolerance (cogrouped merge_asof)",
+        "as-of join with max-staleness tolerance (union window, bounded match distance)",
     ),
     "q53_asof_forward": QuerySpec(
         q53_asof_forward,
         Q53_SQL,
-        "forward-direction as-of join (cogrouped merge_asof look-ahead)",
+        "forward-direction as-of join (union window over ts DESC)",
     ),
     "q41_salted_join": QuerySpec(q41_salted_join, Q41_SQL, "salted join == plain join (skew path)"),
     "q42_bucketed_range_join": QuerySpec(

@@ -20,7 +20,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -74,64 +73,4 @@ def running_counts(stream: DataFrame, key_col: str = "user_id") -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def distinct_types_tws(stream: DataFrame, key_col: str = "user_id", val_col: str = "event_type") -> DataFrame:
-    """Per-key running DISTINCT-value set via ``transformWithStateInPandas``
-    — Spark 4's arbitrary-state API (SPARK-49564 "State API v2"), the
-    successor surface to ``applyInPandasWithState``: typed state handles
-    (here one ValueState holding the sorted distinct set), explicit
-    Update output mode, and per-state TTL support (unused here; the set
-    is monotone). Each micro-batch emits the refreshed
-    ``(key, n_types, types_csv)`` for keys it touched; ``n_types`` is
-    nondecreasing so the drain's latest row per key is the batch
-    ``count(DISTINCT ...)`` — the oracle.
-
-    Runtime requirements beyond this module: the RocksDB state store
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider`` — transformWithState's only
-    supported backend) and the ``protobuf`` Python package (the state
-    API's worker protocol). The test suite skips when protobuf is
-    absent; ``running_counts`` (applyInPandasWithState) is the
-    dependency-free equivalent used by the s04 corpus entry."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("n_types", LongType()),
-            StructField("types_csv", StringType()),
-        ]
-    )
-
-    class DistinctSet(StatefulProcessor):
-        def init(self, handle):
-            self._seen = handle.getValueState("seen", "types array<string>")
-
-        def handleInputRows(self, key, rows, timerValues):
-            seen = set()
-            if self._seen.exists():
-                seen.update(self._seen.get()[0])
-            for pdf in rows:
-                seen.update(str(v) for v in pdf[val_col].dropna().unique())
-            ordered = sorted(seen)
-            self._seen.update((ordered,))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series([key[0]], dtype="int64"),
-                    "n_types": pd.Series([len(ordered)], dtype="int64"),
-                    "types_csv": [",".join(ordered)],
-                }
-            )
-
-        def close(self):
-            pass
-
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=DistinctSet(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
     )

@@ -1,17 +1,16 @@
-"""As-of join operators: the union+running-window scale path and the
-cogrouped merge_asof path must agree with each other, with the reference's
-LEAD()-validity-window range join, and handle tolerance/no-match cases."""
+"""As-of join operator: the union+running-window plan must agree with the
+reference's LEAD()-validity-window range join, in both directions, and
+handle tolerance/no-match/tie cases."""
 
 from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stellar_etl_airflow_spark.operators.asof import asof_join, asof_join_pandas
+from stellar_etl_airflow_spark.operators.asof import asof_join
 
 from .conftest import SF_SMOKE
 
@@ -57,16 +56,6 @@ def test_union_asof_matches_range_join_formulation(spark, events):
     assert _canon(got) == _canon(expected)
 
 
-def test_pandas_asof_matches_union(spark, events):
-    prices = events.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("price")
-    )
-    clicks = events.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    a = asof_join(clicks, prices, on="user_id", value_cols=["price"])
-    b = asof_join_pandas(clicks, prices, on="user_id", value_cols=["price"])
-    assert _canon(a) == _canon(b)
-
-
 def test_asof_no_prior_row_is_null_and_tolerance(spark):
     left = spark.createDataFrame(
         [("k", datetime(2024, 1, 1, 12), 1), ("k", datetime(2024, 1, 3, 12), 2), ("x", datetime(2024, 1, 2), 3)],
@@ -79,32 +68,58 @@ def test_asof_no_prior_row_is_null_and_tolerance(spark):
     got = {r["row_id"]: r["price"] for r in asof_join(left, right, on="key").collect()}
     assert got == {1: 10.0, 2: 30.0, 3: None}  # key x has no right rows at all
 
-    # tolerance: only matches within 12h staleness survive
+    # tolerance: only matches within 12h staleness survive; the bound is
+    # inclusive (both matches are exactly 12h old)
     tol = {
         r["row_id"]: r["price"]
-        for r in asof_join_pandas(left, right, on="key", tolerance=pd.Timedelta(hours=12)).collect()
+        for r in asof_join(left, right, on="key", tolerance=timedelta(hours=12)).collect()
     }
     assert tol == {1: 10.0, 2: 30.0, 3: None}
+    # a stale match reads NULL — it never falls back to an older row
     tight = {
         r["row_id"]: r["price"]
-        for r in asof_join_pandas(left, right, on="key", tolerance=pd.Timedelta(hours=1)).collect()
+        for r in asof_join(left, right, on="key", tolerance=timedelta(hours=1)).collect()
     }
     assert tight == {1: None, 2: None, 3: None}
+    # forward: row 1 sees Jan 3 (1.5 days ahead), row 2 nothing after it
+    fwd = {
+        r["row_id"]: r["price"]
+        for r in asof_join(left, right, on="key", direction="forward").collect()
+    }
+    assert fwd == {1: 30.0, 2: None, 3: None}
+    fwd_tol = {
+        r["row_id"]: r["price"]
+        for r in asof_join(
+            left, right, on="key", direction="forward", tolerance=timedelta(days=1)
+        ).collect()
+    }
+    assert fwd_tol == {1: None, 2: None, 3: None}
 
 
 def test_asof_inclusive_tie_and_forward_direction(spark):
     t0 = datetime(2024, 6, 1)
     left = spark.createDataFrame([("k", t0, 1)], "key string, ts timestamp, row_id int")
     right = spark.createDataFrame(
-        [("k", t0, 5.0), ("k", t0 + timedelta(hours=1), 7.0)],
+        [("k", t0 - timedelta(hours=1), 3.0), ("k", t0, 5.0), ("k", t0 + timedelta(hours=1), 7.0)],
         "key string, ts timestamp, price double",
     )
     # backward inclusive: the equal-ts right row matches
     (row,) = asof_join(left, right, on="key").collect()
     assert row["price"] == 5.0
-    # forward direction only exists on the pandas path
-    (fwd,) = asof_join_pandas(left, right, on="key", direction="forward").collect()
-    assert fwd["price"] == 5.0  # inclusive forward also picks the tie first
+    # inclusive forward also picks the tie first
+    (fwd,) = asof_join(left, right, on="key", direction="forward").collect()
+    assert fwd["price"] == 5.0
+    # a zero tolerance keeps exact matches only
+    (zero,) = asof_join(left, right, on="key", direction="forward", tolerance=timedelta(0)).collect()
+    assert zero["price"] == 5.0
+
+
+def test_asof_rejects_unknown_direction_and_negative_tolerance(spark):
+    df = spark.createDataFrame([("k", datetime(2024, 1, 1), 1.0)], "key string, ts timestamp, price double")
+    with pytest.raises(ValueError, match="direction"):
+        asof_join(df.drop("price"), df, on="key", direction="nearest")
+    with pytest.raises(ValueError, match="tolerance"):
+        asof_join(df.drop("price"), df, on="key", tolerance=timedelta(hours=-1))
 
 
 def test_asof_value_col_collision_raises(spark):
@@ -114,187 +129,47 @@ def test_asof_value_col_collision_raises(spark):
 
 
 def test_asof_pandas_tie_cols_deterministic(spark):
-    """Equal-ts right rows must resolve by tie_cols (max wins, matching
-    the validity-window convention), not by post-shuffle arrival order."""
-    from datetime import datetime
-
-    from stellar_etl_airflow_spark.operators.asof import asof_join_pandas
-
+    """Equal-ts right rows must resolve by tiebreak_cols — backward takes
+    the max, forward the min, matching the oracles' validity-window
+    conventions — and a NULL tiebreak never wins over a set one."""
     t = datetime(2024, 1, 1, 12, 0, 0)
-    left = spark.createDataFrame([(1, "u", datetime(2024, 1, 1, 13))], "id long, k string, ts timestamp")
+    left = spark.createDataFrame(
+        [(1, "u", datetime(2024, 1, 1, 13)), (2, "u", datetime(2024, 1, 1, 11))],
+        "id long, k string, ts timestamp",
+    )
     right = spark.createDataFrame(
-        [("u", t, 10.0, 1), ("u", t, 99.0, 2), ("u", t, 50.0, 0)],
+        [("u", t, 10.0, 1), ("u", t, 99.0, 2), ("u", t, 50.0, 0), ("u", t, 77.0, None)],
         "k string, ts timestamp, price double, rid long",
     )
     for _ in range(3):  # any run-dependence would flake across repeats
-        (row,) = asof_join_pandas(
-            left, right, on="k", value_cols=["price"], tie_cols=["rid"]
-        ).collect()
-        assert row["price"] == 99.0  # rid=2 is the max tie
+        back = {
+            r["id"]: r["price"]
+            for r in asof_join(left, right, on="k", value_cols=["price"], tiebreak_cols=["rid"]).collect()
+        }
+        assert back == {1: 99.0, 2: None}  # rid=2 is the max tie
+        fwd = {
+            r["id"]: r["price"]
+            for r in asof_join(
+                left, right, on="k", value_cols=["price"], tiebreak_cols=["rid"], direction="forward"
+            ).collect()
+        }
+        assert fwd == {1: None, 2: 50.0}  # rid=0 is the min tie
 
 
-def test_asof_pandas_skew_fallback_hot_key(spark, events):
-    """One hot key dominating the left side must be auto-split into salted
-    subgroups (per-key adaptive S, right side replicated per salt) WITHOUT
-    the caller choosing — and the result must be identical to the
-    undetected plan. VERDICT r5 #5."""
-    prices = events.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("price"), F.col("event_id").alias("_peid")
-    )
-    # make user_id 0 hot: every click row remapped onto it with jittered ts
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select("event_id", F.lit(0).alias("user_id"), "ts")
-        .unionByName(
-            events.filter(F.col("event_type") == "view").select("event_id", "user_id", "ts")
-        )
-    )
-    prices = prices.withColumn("user_id", F.when(F.col("user_id") < 50, 0).otherwise(F.col("user_id")))
-    kw = dict(on="user_id", value_cols=["price"], tie_cols=["_peid"])
-    # envelope of 50 rows: the hot key (hundreds of left rows) must split
-    detected = asof_join_pandas(clicks, prices, max_group_rows=50, **kw)
-    plain = asof_join_pandas(clicks, prices, skew="off", **kw)
-    # the salted path manifests as a UNION of two cogroups in the plan
-    plan = detected._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapCoGroupsInPandas") == 2, plan
-    assert _canon(detected) == _canon(plain)
-    # raw-key cogroup under the same envelope must also split and agree
-    detected_raw = asof_join_pandas(clicks, prices, max_group_rows=50, bucket_by=None, **kw)
-    assert _canon(detected_raw) == _canon(plain)
-
-
-def test_asof_pandas_validation(spark):
-    """bucket_by=0/negative/unknown-string and key/ts dtype mismatches must
-    fail loudly at call time, not silently change plan or corrupt buckets
-    (ADVICE r5 items 1-2)."""
+@pytest.mark.parametrize(
+    "kw",
+    [{}, {"direction": "forward"}, {"tolerance": timedelta(hours=1)}],
+    ids=["backward", "forward", "tolerance"],
+)
+def test_asof_unmatched_row_with_non_nullable_value_is_null(spark, kw):
+    """A right value column Spark knows to be non-nullable must still come
+    out NULL for a left row with no match, not fail the job."""
     t = datetime(2024, 1, 1)
-    left = spark.createDataFrame([(1, "u", t)], "id int, k string, ts timestamp")
-    right = spark.createDataFrame([("u", t, 1.0)], "k string, ts timestamp, price double")
-    for bad in (0, -4, "autoo", True):
-        with pytest.raises(ValueError, match="bucket_by"):
-            asof_join_pandas(left, right, on="k", bucket_by=bad)
-    with pytest.raises(ValueError, match="skew"):
-        asof_join_pandas(left, right, on="k", skew="sometimes")
-    # int key on the left, bigint on the right: F.hash would disagree
-    l2 = spark.createDataFrame([(1, 7, t)], "id int, k int, ts timestamp")
-    r2 = spark.createDataFrame([(7, t, 1.0)], "k long, ts timestamp, price double")
-    with pytest.raises(TypeError, match="dtype mismatch"):
-        asof_join_pandas(l2, r2, on="k")
-    # ts dtype mismatch (timestamp vs date)
-    r3 = right.withColumn("ts", F.col("ts").cast("date"))
-    with pytest.raises(TypeError, match="timestamp dtype"):
-        asof_join_pandas(left, r3, on="k")
-
-
-def test_asof_pandas_bucketed_matches_raw_key_cogroup(spark, events):
-    """Default bucketed cogroup (one merge_asof(by=) per hash bucket) must
-    be result-identical to cogrouping on the raw key — bucketing changes
-    only WHERE the per-key merge happens, never its outcome."""
-    prices = events.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("price"), F.col("event_id").alias("_peid")
+    right = spark.range(1).select(
+        F.lit("a").alias("key"), F.lit(t).alias("ts"), (F.col("id") * 0.5).alias("price")
     )
-    clicks = events.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    kw = dict(on="user_id", value_cols=["price"], tie_cols=["_peid"],
-              tolerance=pd.Timedelta(days=1))
-    bucketed = asof_join_pandas(clicks, prices, bucket_by=16, **kw)
-    raw = asof_join_pandas(clicks, prices, bucket_by=None, **kw)
-    assert _canon(bucketed) == _canon(raw)
-
-
-def test_asof_pandas_right_hot_time_chunking(spark):
-    """VERDICT r6 ask #6: a key whose RIGHT history alone exceeds the
-    envelope is time-range chunked (quantile cuts + carried-forward
-    boundary seed) for the backward direction — results identical to the
-    unsplit plan, including ties at cut values, no-match lefts, and
-    tolerance."""
-    from datetime import datetime as DT
-
-    # key "h": 3000 right rows over 1000 distinct seconds (ties share a
-    # timestamp); key "c": cold. Left: 200 rows spread over the range,
-    # some before all right rows, some after.
-    right = spark.range(3000).select(
-        F.lit("h").alias("k"),
-        F.timestamp_seconds(F.lit(1_700_000_000) + (F.col("id") % 1000)).alias("ts"),
-        (F.col("id") % 977).cast("double").alias("price"),
-        F.col("id").alias("rid"),
-    ).unionByName(
-        spark.range(20).select(
-            F.lit("c").alias("k"),
-            F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id")).alias("ts"),
-            F.col("id").cast("double").alias("price"),
-            (F.col("id") + 10_000).alias("rid"),
-        )
-    )
-    left = spark.range(200).select(
-        F.col("id").alias("row_id"),
-        F.when(F.col("id") % 10 == 0, "c").otherwise("h").alias("k"),
-        F.timestamp_seconds(
-            F.lit(1_700_000_000 - 50) + (F.col("id") * 7) % 1150
-        ).alias("ts"),
-    )
-    kw = dict(on="k", value_cols=["price"], tie_cols=["rid"])
-
-    def canon(df):
-        return sorted(
-            (r["row_id"], r["price"]) for r in df.collect()
-        )
-
-    plain = asof_join_pandas(left, right, skew="off", **kw)
-    # envelope 400 -> right split factor ceil(3000/400)=8 for key "h"
-    split = asof_join_pandas(left, right, max_group_rows=400, **kw)
-    assert canon(split) == canon(plain)
-    # with tolerance: seeds outside tolerance must null out identically
-    plain_tol = asof_join_pandas(
-        left, right, skew="off", tolerance=pd.Timedelta(seconds=3), **kw
-    )
-    split_tol = asof_join_pandas(
-        left, right, max_group_rows=400, tolerance=pd.Timedelta(seconds=3), **kw
-    )
-    assert canon(split_tol) == canon(plain_tol)
-    # forward direction: right-hot keys fall back to isolation (still
-    # correct, envelope not enforced on the right)
-    plain_f = asof_join_pandas(left, right, skew="off", direction="forward", **kw)
-    split_f = asof_join_pandas(left, right, max_group_rows=400, direction="forward", **kw)
-    assert canon(split_f) == canon(plain_f)
-
-
-def test_asof_right_hot_frame_bound(spark):
-    """The chunked plan's largest RIGHT cogroup frame must be bounded by
-    ~envelope (quantile-approximate) + seed, not the hot key's full
-    history: measured by reproducing the cut assignment and counting
-    rows per (key, chunk)."""
-    right = spark.range(5000).select(
-        F.lit(1).alias("k"),
-        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id")).alias("ts"),
-        F.col("id").cast("double").alias("price"),
-        F.col("id").alias("rid"),
-    )
-    left = spark.range(100).select(
-        F.col("id").alias("row_id"),
-        F.lit(1).alias("k"),
-        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 50).alias("ts"),
-    )
-    lim = 500
-    s = -(-5000 // lim)  # 10
-    cuts = [i / s for i in range(1, s)]
-    bounds = right.groupBy("k").agg(
-        F.percentile_approx(F.col("ts").cast("double"), cuts, 10000).alias("_cuts")
-    )
-    per_chunk = (
-        right.join(F.broadcast(bounds), "k")
-        .withColumn(
-            "chunk",
-            F.size(F.filter(F.col("_cuts"), lambda c: c <= F.col("ts").cast("double"))),
-        )
-        .groupBy("k", "chunk")
-        .count()
-    )
-    max_chunk = per_chunk.agg(F.max("count")).collect()[0][0]
-    assert max_chunk <= 2 * lim, max_chunk  # sketch-approximate bound
-    # and the join itself agrees with the unsplit plan
-    kw = dict(on="k", value_cols=["price"], tie_cols=["rid"])
-    plain = asof_join_pandas(left, right, skew="off", **kw)
-    split = asof_join_pandas(left, right, max_group_rows=lim, **kw)
-    assert sorted((r["row_id"], r["price"]) for r in split.collect()) == sorted(
-        (r["row_id"], r["price"]) for r in plain.collect()
-    )
+    assert not right.schema["price"].nullable
+    left = spark.createDataFrame([("a", t, 1), ("b", t, 2)], "key string, ts timestamp, row_id int")
+    out = asof_join(left, right, on="key", **kw)
+    assert out.schema["price"].nullable
+    assert {r["row_id"]: r["price"] for r in out.collect()} == {1: 0.0, 2: None}

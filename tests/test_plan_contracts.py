@@ -34,6 +34,17 @@ def test_asof_union_is_single_exchange(spark):
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
 
 
+@pytest.mark.parametrize("name", ["q52_asof_tolerance", "q53_asof_forward"])
+def test_asof_tolerance_and_forward_are_single_exchange(spark, name):
+    """Tolerance and forward matching run in the same union-window plan as
+    q27: one shuffle, and no Python worker anywhere in the plan."""
+    from stellar_etl_airflow_spark.queries import QUERIES
+
+    plan = _physical(QUERIES[name].fn(spark, SF_SMOKE))
+    assert len(re.findall(r"Exchange", plan)) == 1, plan
+    assert not re.search(r"Python|Pandas|Arrow", plan), plan
+
+
 def test_no_nested_loop_in_scale_queries(spark):
     from stellar_etl_airflow_spark.queries import QUERIES
 

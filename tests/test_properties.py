@@ -270,10 +270,12 @@ asof_right_row = st.tuples(
 )
 
 
-def _model_asof(left_rows, right_rows, direction="backward"):
+def _model_asof(left_rows, right_rows, direction="backward", tolerance=None):
     """Brute-force Python model: latest right at-or-before (backward) /
     earliest at-or-after (forward); ties on right ts to max rid (backward)
-    or min rid (forward), matching the operators' tie conventions."""
+    or min rid (forward), matching the operator's tie conventions. A match
+    further than ``tolerance`` hours from the left row is NULL (inclusive
+    bound, no fallback to another row)."""
     out = []
     for i, (k, lt) in enumerate(left_rows):
         cands = [
@@ -285,6 +287,8 @@ def _model_asof(left_rows, right_rows, direction="backward"):
             best = max(cands, key=lambda c: (c[0], c[1]), default=None)
         else:
             best = min(cands, key=lambda c: (c[0], c[1]), default=None)
+        if best and tolerance is not None and abs(best[0] - lt) > tolerance:
+            best = None
         out.append((i, best[2] if best else None))
     return sorted(out)
 
@@ -292,13 +296,14 @@ def _model_asof(left_rows, right_rows, direction="backward"):
 @given(
     st.lists(asof_left_row, min_size=1, max_size=12),
     st.lists(asof_right_row, min_size=0, max_size=12),
+    st.integers(min_value=0, max_value=6),
 )
 @SLOW
-def test_asof_paths_match_python_model(spark, left_rows, right_rows):
-    """asof_join (union+window) and asof_join_pandas (bucketed cogroup
-    merge_asof, both directions) against the brute-force model — including
-    equal-ts ties, no-match keys, and empty right sides."""
-    from stellar_etl_airflow_spark.operators.asof import asof_join, asof_join_pandas
+def test_asof_paths_match_python_model(spark, left_rows, right_rows, tol_hours):
+    """asof_join in both directions, with and without a tolerance, against
+    the brute-force model — including equal-ts ties, no-match keys, and
+    empty right sides."""
+    from stellar_etl_airflow_spark.operators.asof import asof_join
 
     t0 = datetime(2024, 1, 1)
     left = spark.createDataFrame(
@@ -313,15 +318,13 @@ def test_asof_paths_match_python_model(spark, left_rows, right_rows):
     def canon(df):
         return sorted((r["row_id"], r["price"]) for r in df.collect())
 
-    jvm = asof_join(left, right, on="key", value_cols=["price"], tiebreak_cols=["rid"])
-    assert canon(jvm) == _model_asof(left_rows, right_rows)
-
-    pdx = asof_join_pandas(left, right, on="key", value_cols=["price"], tie_cols=["rid"])
-    assert canon(pdx) == _model_asof(left_rows, right_rows)
-
-    fwd = asof_join_pandas(left, right, on="key", value_cols=["price"],
-                           direction="forward", tie_cols=["rid"])
-    assert canon(fwd) == _model_asof(left_rows, right_rows, direction="forward")
+    for direction in ("backward", "forward"):
+        for tol in (None, tol_hours):
+            got = asof_join(
+                left, right, on="key", value_cols=["price"], tiebreak_cols=["rid"],
+                direction=direction, tolerance=None if tol is None else timedelta(hours=tol),
+            )
+            assert canon(got) == _model_asof(left_rows, right_rows, direction, tol), (direction, tol)
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,7 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from stellar_etl_airflow_spark.operators.asof import asof_join, asof_join_pandas
+from stellar_etl_airflow_spark.operators.asof import asof_join
 from stellar_etl_airflow_spark.sinks import snapshots as S
 from stellar_etl_airflow_spark.training import codecs
 from stellar_etl_airflow_spark.training.flac import flac_decode
@@ -113,9 +113,9 @@ def test_flac_frameless_zero_rate_returns_none():
 
 
 def test_asof_hot_key_salt_with_map_column(spark):
-    """skew=auto salting hashes row content for determinism; map-typed
-    columns are unhashable in Spark and must be excluded from the salt
-    expression rather than failing the plan."""
+    """A map-typed left column (unhashable and unorderable in Spark) passes
+    through asof_join untouched: the union window only partitions and
+    sorts on the key and ts, on one hot key as on any other."""
     n = 400
     left = (
         spark.range(n)
@@ -130,10 +130,9 @@ def test_asof_hot_key_salt_with_map_column(spark):
         [("hot", datetime(2024, 1, 1), 1.0), ("hot", datetime(2024, 1, 1, 3), 2.0)],
         "key string, ts timestamp, price double",
     )
-    got = asof_join_pandas(
-        left, right, on="key", value_cols=["price"], max_group_rows=50, skew="auto"
-    )
-    want = asof_join(left.drop("attrs"), right, on="key", value_cols=["price"])
-    g = {r["row_id"]: r["price"] for r in got.collect()}
-    w = {r["row_id"]: r["price"] for r in want.collect()}
-    assert g == w and len(g) == n
+    got = {
+        r["row_id"]: (r["price"], r["attrs"])
+        for r in asof_join(left, right, on="key", value_cols=["price"]).collect()
+    }
+    assert len(got) == n
+    assert all(p == (1.0 if i < 180 else 2.0) and a == {"a": str(i)} for i, (p, a) in got.items())

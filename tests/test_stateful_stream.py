@@ -55,58 +55,3 @@ def test_state_across_runs(spark, tmp_path):
     rows = spark.read.parquet(out).collect()
     latest_u1 = max((r for r in rows if r["key"] == 1), key=lambda r: r["n_events"])
     assert latest_u1["n_events"] == 3 and latest_u1["total_value"] == 15.0
-
-
-def test_transform_with_state_distinct_types(spark, tmp_path):
-    """Spark 4 State API v2 (transformWithStateInPandas): per-key running
-    distinct-set, drained AvailableNow, must equal count(DISTINCT ...).
-    Requires the protobuf package (the API's worker protocol) and the
-    RocksDB state store — skipped where the environment lacks them."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql import functions as F
-
-    from stellar_etl_airflow_spark.streaming.stateful import distinct_types_tws
-
-    sub = spark.newSession()
-    sub.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    sub.conf.set("spark.sql.shuffle.partitions", "4")
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    df = spark.range(300).select(
-        (F.col("id") % 7).alias("user_id"),
-        F.concat(F.lit("t"), (F.col("id") % (1 + F.col("id") % 4)).cast("string")).alias(
-            "event_type"
-        ),
-    )
-    df.write.parquet(src)
-    stream = sub.readStream.schema("user_id long, event_type string").parquet(src)
-    q = (
-        distinct_types_tws(stream)
-        .writeStream.format("memory")
-        .queryName("tws_out")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r["key"]: (r["n_types"], r["types_csv"])
-        for r in sub.sql(
-            "select * from tws_out qualify row_number() over (partition by key order by n_types desc) = 1"
-        ).collect()
-    }
-    want = {
-        r["user_id"]: (r["n"], r["csv"])
-        for r in df.groupBy("user_id")
-        .agg(
-            F.countDistinct("event_type").alias("n"),
-            F.array_join(F.sort_array(F.collect_set("event_type")), ",").alias("csv"),
-        )
-        .collect()
-    }
-    assert got == want
